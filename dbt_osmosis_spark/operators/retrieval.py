@@ -277,22 +277,7 @@ def s31_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qterms = spark.createDataFrame(list(_QUERY_TERMS), "query_id string, term string")
     scores = _bm25_scores(docs, stats, qterms, sorted({t for _, t in _QUERY_TERMS}))
 
-    # Two-phase rank: bucket-local top-k, then final rank over survivors.
-    bucket_w = W.partitionBy("query_id", "bkt").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn("lr", F.row_number().over(bucket_w))
-        .filter(F.col("lr") <= _K)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= _K)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_micros", _K).orderBy("query_id", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -626,21 +611,22 @@ ORDER BY query_id, rnk
 """
 
 
-def _topn_two_phase(scored: DataFrame, order_col: str, n: int) -> DataFrame:
-    """(query_id, doc_id, rnk): top-n per query_id by (order_col desc,
-    doc_id), via bucket-local top-n then a final rank over <= _BUCKETS*n
-    survivors — no query's full candidate list is ever one partition."""
-    bucket_w = W.partitionBy("query_id", "bkt").orderBy(
-        F.col(order_col).desc(), F.col("doc_id")
-    )
-    final_w = W.partitionBy("query_id").orderBy(F.col(order_col).desc(), F.col("doc_id"))
+def _topn_two_phase(
+    scored: DataFrame, order_col: str, n: int, key: str = "query_id"
+) -> DataFrame:
+    """(key, rnk, doc_id, order_col): top-n per ``key`` by (order_col
+    desc, doc_id), via bucket-local top-n then a final rank over
+    <= _BUCKETS*n survivors — no key's full candidate list is ever one
+    partition."""
+    bucket_w = W.partitionBy(key, "bkt").orderBy(F.col(order_col).desc(), F.col("doc_id"))
+    final_w = W.partitionBy(key).orderBy(F.col(order_col).desc(), F.col("doc_id"))
     return (
         scored.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
         .withColumn("lr", F.row_number().over(bucket_w))
         .filter(F.col("lr") <= n)
         .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
         .filter(F.col("rnk") <= n)
-        .select("query_id", "doc_id", "rnk")
+        .select(key, "rnk", "doc_id", order_col)
     )
 
 
@@ -837,25 +823,7 @@ def query_postings_index(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").cast("bigint").alias("score_micros"))
     )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
 
 
 @register("s34_postings_index_serve", oracle=_S31_ORACLE)
@@ -1151,213 +1119,60 @@ def s35_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# s36: incremental postings maintenance — append-only ingest + delta stats
+# s36: incremental postings maintenance — two segment ingests + one serve
 # ---------------------------------------------------------------------------
 # The s20 move (incremental IVF appends) applied to the lexical index.
 # s34 bakes df INTO the postings rows, which is the right call for a
 # rebuild-on-corpus-change layout but exactly wrong for incremental
 # ingest: appending one batch would invalidate the stored df of every
-# existing posting for shared terms. The incremental layout therefore
-# splits the state by mutability:
-#   - postings/ (term, doc_id, tf, dl) partitioned by tbkt — append-only;
-#     each doc lives wholly in one ingest, so tf/dl never change;
-#   - termstats/ingest=k — per-ingest df DELTAS (vocab-sized);
-#   - stats/ingest=k    — per-ingest (n_docs, sum_dl) 1-row deltas.
-# Serving merges the deltas (integer sums — order-free), derives
-# avgdl = sum_dl/n_docs exactly as _corpus_stats does, and scores the
-# bucket-pruned postings against the broadcast merged stats. Results are
-# byte-identical to computing over the full corpus in-plan (the s31
-# oracle), no matter how many ingests built the index — the LSM-style
-# delta discipline every streaming sink in this repo follows.
+# existing posting for shared terms. s36 therefore lands each batch as
+# an immutable segment of the segmented layout (retrieval_ext.py, the
+# s44 section): postings (term, doc_id, tf, dl) partitioned by tbkt,
+# a doc-keyed doclen sidecar, and an additive (n_docs, sum_dl) stats
+# delta. The serve sums the stats deltas (integer sums — order-free),
+# derives df from the bucket-pruned postings of every live segment, and
+# ranks two-phase. Results are byte-identical to computing over the
+# full corpus in-plan (the s31 oracle), however many ingests built the
+# index.
 
 def _s36_index_path(sf_dir: str) -> str:
-    import os as _os3
+    from dbt_osmosis_spark.operators.retrieval_ext import _scratch_path
 
-    repo = _os3.path.dirname(_os3.path.dirname(_os3.path.dirname(_os3.path.abspath(__file__))))
-    tag = _os3.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os3.path.join(repo, ".postings_incr", tag)
+    return _scratch_path(".postings_tiered", sf_dir, "s36")
 
 
-def ingest_postings_batch(
-    spark: SparkSession, docs_batch: DataFrame, path: str, ingest_id: int
-) -> None:
-    """Land one document batch in the incremental layout. Round 13: the
-    batch's postings now write under ``postings/ingest=<id>/tbkt=<b>``
-    (one more partition level, the layout the streaming twin has always
-    used via ``postings/batch=<id>``) instead of APPENDING into shared
-    bucket partitions. Readers are unchanged — partition discovery
-    exposes ``ingest`` alongside ``tbkt`` and bucket pruning still
-    prunes directories — and two properties improve: re-running an
-    ingest is now idempotent for the postings too (overwrite of its own
-    partition, the exactly-once contract the df/stats deltas already
-    had; the r12 append was only replay-safe on a fresh layout), and
-    ingests of disjoint batches become INDEPENDENT jobs that the
-    lifecycle operators submit concurrently (guide §2.6).
+def _build_s36_layout(spark: SparkSession, docs: DataFrame, path: str) -> None:
+    """Rebuild ``path`` as the corpus in two segments: 80% of docs
+    (doc_id % 5 != 0), then the remaining 20%."""
+    import shutil
 
-    Also writes the doc-keyed ``doclen/ingest=<id>`` sidecar: (doc_id,
-    dl) for EVERY ingested doc, including zero-token ones (which have no
-    posting rows at all, so their dl is unrecoverable from the postings
-    — the honest gap s39's delete path had before this sidecar). The
-    sidecar is doc-sized, far smaller than the postings, so the delete
-    apply that reads it is cheaper too.
+    from dbt_osmosis_spark.operators.retrieval_ext import ingest_segment
 
-    Round 13 (guide §1.2 "don't compute things you throw away" — the
-    ingest_segment move): ONE tokenize feeds all four sinks. tf is
-    persisted for the span of the call (batch-vocab-sized, far smaller
-    than the exploded tokens) and the four sinks write to disjoint
-    directories, submitted concurrently (guide §2.6) so each job's
-    straggler tail back-fills with the next job's tasks.
-
-    Round 14 (guide §2.4): dl = count of a doc's non-empty tokens is a
-    PURE MAP expression (size of the filtered token array), so it is
-    computed per doc before the explode and carried through the tf
-    aggregation (max of a per-doc constant) — the r13 dl groupBy
-    exchange, the tf⋈dl doc_id join (two more exchanges) and the
-    doclen sink's left join are all gone; the doclen sink is now a
-    map-only scan of the batch (zero-token docs get dl = 0 from the
-    empty array directly).
-    """
-    import os as _os
-
-    # On-disk format guard (ADVICE r13): round 13 moved the postings to
-    # per-ingest partitions (postings/ingest=<id>/tbkt=<b>). Re-ingesting
-    # into a layout written by the pre-round-13 flat form
-    # (postings/tbkt=<b>) would mix directory depths, which Spark rejects
-    # at read time (CONFLICTING_DIRECTORY_STRUCTURES) — fail loud at
-    # WRITE time with the migration instruction instead.
-    legacy = (
-        _os.path.isdir(f"{path}/postings")
-        and any(
-            d.startswith("tbkt=") for d in _os.listdir(f"{path}/postings")
-        )
-    )
-    if legacy:
-        raise ValueError(
-            f"{path}/postings uses the pre-round-13 flat tbkt=<b> layout; "
-            "rebuild required: compact it via compact_postings (or clear "
-            "the layout) before ingesting with the per-ingest partition "
-            "format postings/ingest=<id>/tbkt=<b>"
-        )
-    tf = _doc_tf(docs_batch).persist()  # round 14 (§2.4): map-side doc-local fold
-    try:
-        run_sinks(
-            lambda: (
-                _doc_dl(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/doclen/ingest={ingest_id}")
-            ),
-            lambda: (
-                tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
-                .select("term", "doc_id", "tf", "dl", "tbkt")
-                .repartition("tbkt")
-                .write.partitionBy("tbkt")
-                .mode("overwrite")
-                .parquet(f"{path}/postings/ingest={ingest_id}")
-            ),
-            lambda: (
-                tf.groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .write.mode("overwrite")
-                .parquet(f"{path}/termstats/ingest={ingest_id}")
-            ),
-            lambda: (
-                # one map-only batch pass; an all-empty batch sums to 0
-                _doc_dl_stats(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/stats/ingest={ingest_id}")
-            ),
-        )
-    finally:
-        tf.unpersist()
-
-
-def query_incremental_postings(
-    spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K
-) -> DataFrame:
-    """Serve from the incremental layout: bucket-pruned postings scan +
-    delta-merged term/corpus stats (integer sums, then one exact
-    division for avgdl)."""
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
-    qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-
-    df_rel = (
-        read_layout(spark, path, "termstats")
-        .filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("df").cast("bigint").alias("df"))
-    )
-    stats = (
-        read_layout(spark, path, "stats")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-        )
-        .selectExpr("n_docs", "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl")
-    )
-    postings = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    scores = (
-        postings.join(F.broadcast(df_rel), "term")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
+    shutil.rmtree(path, ignore_errors=True)
+    # the two doc slices are disjoint, so the upsert supersede pass is a
+    # provable no-op: skipped, and the two segment writes run concurrently
+    run_sinks(
+        lambda: ingest_segment(
+            spark, docs.filter(F.col("doc_id") % 5 != 0), path, 0, upsert=False
+        ),
+        lambda: ingest_segment(
+            spark, docs.filter(F.col("doc_id") % 5 == 0), path, 1, upsert=False
+        ),
     )
 
 
 @register("s36_postings_incremental_serve", oracle=_S31_ORACLE)
 def s36_postings_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-ingest incremental build (initial 80% of docs by doc_id mod 5,
-    then the remaining 20% appended) followed by one serve of the s31
-    query batch. The oracle is s31's full-corpus SQL: delta-merged stats
-    must make the incrementally-built index serve byte-identically to a
+    """Two-ingest incremental build followed by one serve of the s31
+    query batch. The oracle is s31's full-corpus SQL: merged stats must
+    make the incrementally-built index serve byte-identically to a
     from-scratch computation."""
-    import shutil
+    from dbt_osmosis_spark.operators.retrieval_ext import query_segmented_postings
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s36_index_path(sf_dir)
-    # Each ingest idempotently overwrites its own postings/ingest=<id>
-    # partition (round 13 layout; no append mode exists), so re-running
-    # the SAME ingests needs no cleanup. rmtree is kept only so a layout
-    # left by an older invocation with MORE ingest partitions cannot
-    # leak stale higher-numbered partitions into this serve (the
-    # s17/s34 re-runnability discipline).
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: disjoint batches land in disjoint ingest=<id>
-    # partitions (postings included, round 13) — submitted concurrently
-    run_sinks(
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 != 0), path, 0
-        ),
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 == 0), path, 1
-        ),
-    )
-    return query_incremental_postings(spark, path, _QUERY_TERMS)
+    _build_s36_layout(spark, docs, path)
+    return query_segmented_postings(spark, path, _QUERY_TERMS)
 
 
 # ---------------------------------------------------------------------------
@@ -1509,21 +1324,7 @@ def s37_qld_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    bucket_w = W.partitionBy("query_id", "bkt").orderBy(
-        F.col("score_nano").desc(), F.col("doc_id")
-    )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_nano").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn("lr", F.row_number().over(bucket_w))
-        .filter(F.col("lr") <= _K)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= _K)
-        .select("query_id", "rnk", "doc_id", "score_nano")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_nano", _K).orderBy("query_id", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -1594,22 +1395,4 @@ def s38_qld_postings_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score_nano"
         ),
     )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_nano").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_nano").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= _K)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= _K)
-        .select("query_id", "rnk", "doc_id", "score_nano")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_nano", _K).orderBy("query_id", "rnk")

@@ -1,55 +1,18 @@
 """Lexical retrieval, part 2: index maintenance + the positional layout.
 
 Module map (each section carries its own design comment):
-- s39  tombstone deletes for the incremental postings layout
-- s41  full compaction into the s34 format
+- s39  tombstone deletes: s36's two segments plus one delete batch
+- s41  the live segments baked into the s34 format (df in the rows)
 - s42  phrase search (one-shot, no index)
 - s43  persisted positional-postings layout + phrase serve
-- s44  tiered (Lucene-style) segment compaction — delta-sized rewrites
+- s44  the segmented-index core: immutable segments, generation-scoped
+       tombstones, manifest-published tiered compaction, checkpoint,
+       vacuum, and the segment-union BM25 serve
 - s45  unified serve: BM25 FROM the positional layout
 - s46  proximity (sloppy-phrase) search over the positional layout
 - s47  maintainable positional index (segments + deletes + serve)
 - s49  update/re-add: generation-scoped tombstones + upsert ingest,
-       manifest-published non-destructive compaction (round 12)
-
-The rest of this docstring is s39's original design note.
-
-s39 — document deletes for the postings index: the retraction path the
-s34/s36 layout lacked.
-
-s24 gave the IVF vector index tombstone deletes; s39 is the same
-contract for the lexical side: a production near-line corpus must
-absorb document REMOVALS (takedowns, dedup verdicts, license expiry)
-without rebuilding the index. The incremental layout (s36) already
-splits state by mutability — append-only postings + per-ingest stat
-deltas — so deletes slot in as two more delta kinds:
-
-- ``deletes/delete=<k>``: the tombstone doc_id set (idempotent
-  per-batch overwrite, the exactly-once discipline of every sink here);
-- ``stats/ingest=<NS+k>`` (NS = 1,000,000, a namespace disjoint from
-  any real ingest id): a NEGATIVE (n_docs, sum_dl) delta, derived
-  from ONE scan of the postings themselves (each posting row carries
-  its doc's dl, so the index is self-describing — no re-tokenization,
-  no access to the original documents). Stats merging at serve is the
-  same integer sum as before; negatives just fold in.
-
-Serve = the s36 bucket-pruned scan, anti-joined against the broadcast
-tombstone set, with per-term df derived from the SURVIVING pruned
-postings (for query terms the pruned scan holds every live posting, so
-counting it is exactly the live df — the s31 oracle's own df rule).
-Results are byte-identical to a from-scratch build over the corpus
-minus the deleted docs, which is what the oracle computes.
-
-Scale shape (100 TB): the serve scan still lists only the probed term
-buckets; the tombstone set is deletes-sized (broadcast); the one
-index-wide cost is the delete-APPLY scan, amortized by batching —
-and it reads the doc-keyed ``doclen/`` sidecar (written at ingest),
-never the corpus and not even the postings. The sidecar also closes
-the zero-token-document gap: an empty doc has no posting rows, so a
-postings-derived dl could never see it (n_docs would stay high by
-one); the sidecar records (doc_id, dl=0) for it at ingest, and the
-delete subtracts exactly the live count (tests/test_round11_ops.py).
-Pre-sidecar layouts fall back to the postings-scan dl recovery.
+       manifest-published non-destructive compaction
 
 Reference parity: the reference ships SQL to a warehouse
 (src/dbt_osmosis/core/sql_operations.py:69); the index-maintenance
@@ -60,35 +23,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.sinks import run_sinks
 from dbt_osmosis_spark.operators.retrieval import (
-    _BUCKETS,
     _CONTRIB,
     _K,
     _QUERY_TERMS,
     _QUERY_VALUES,
     _S31_ORACLE,
     _S34_SPARK_TBKT,
+    _build_s36_layout,
     _doc_dl,
     _doc_dl_stats,
     _doc_tf,
     _s34_tbkt_py,
-    ingest_postings_batch,
+    _topn_two_phase,
 )
 from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
 
 _S39_MOD = 7  # registered delete set: doc_id % 7 == 3
 _S39_REM = 3
-
-# Batch-mode delete stat deltas land under ingest=<NS + delete_id> so they
-# can NEVER collide with a real ingest's stats/ingest=<id> no matter how
-# many ingest batches accumulate (ingest_postings_batch puts no bound on
-# ingest_id) — the same disjoint-namespace rule the streaming twin uses
-# (streaming/postings.py _DELETE_BATCH_NS).
-_DELETE_STATS_NS = 1_000_000
 
 _S39_ORACLE = f"""
 WITH live AS (
@@ -138,278 +93,95 @@ ORDER BY query_id, rnk
 """
 
 
-def _s39_index_path(sf_dir: str) -> str:
-    # per-process scratch: these registered ops rebuild the layout on
-    # every call (rmtree + ingest), so two PROCESSES running them against
-    # the same sf_dir concurrently (e.g. a scale probe next to the test
-    # suite) would race on rmtree vs read. The pid suffix isolates them;
-    # within one process every reader sees the same path.
+def _scratch_path(root: str, sf_dir: str, op: str = "") -> str:
+    """Per-process scratch directory ``<repo>/<root>/<sf tag>[-op]-<pid>``
+    for a registered op's layout. These ops rebuild their layout on
+    every call (rmtree + ingest), so two PROCESSES running them against
+    the same sf_dir concurrently (e.g. a scale probe next to the test
+    suite) would race on rmtree vs read; the pid suffix isolates them,
+    and within one process every reader sees the same path."""
     import os as _os
 
     repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
     tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".postings_tomb", f"{tag}-{_os.getpid()}")
+    if op:
+        tag = f"{tag}-{op}"
+    return _os.path.join(repo, root, f"{tag}-{_os.getpid()}")
 
 
-def _gated_tomb_bcast(df: DataFrame, *dirs: str) -> DataFrame:
-    """Round 14 (VERDICT r13 item 3): broadcast-hint a file-backed
-    tombstone relation only while its backing directories are small ON
-    DISK (pure os.walk bound, no job) — the same size gate
-    `_scoped_tombstones` applies. Above the bound the hint is dropped
-    and the join degrades gracefully to a shuffled anti/semi-join
-    instead of a forced executor-OOM broadcast after a mass delete."""
-    if sum(_dir_bytes(d) for d in dirs) <= _tomb_bcast_bytes():
-        return F.broadcast(df)
-    return df
+def _s39_index_path(sf_dir: str) -> str:
+    return _scratch_path(".postings_tiered", sf_dir, "s39")
 
 
-def apply_postings_deletes(
-    spark: SparkSession,
-    path: str,
-    doc_ids: DataFrame,
-    delete_id: int,
-    stats_partition: str | None = None,
-) -> None:
-    """Record one tombstone batch against an incremental postings layout.
-
-    Writes the doc_id tombstones under ``deletes/delete=<id>`` and a
-    negative corpus-stats delta (default ``stats/ingest=<NS+id>``,
-    NS = ``_DELETE_STATS_NS``;
-    ``stats_partition`` overrides for layouts whose stat deltas are
-    keyed differently, e.g. the streaming twin's ``batch=<ns+id>``)
-    derived from one postings scan (per-doc dl is replicated onto every
-    posting row, so ``max(dl)`` per deleted doc recovers it exactly).
-    Docs already tombstoned by an EARLIER batch are excluded, so
-    deleting a document twice subtracts its stats once.
-
-    Replay contract (exactly-once by idempotent overwrite): every
-    output is a pure function of (batch ids, OTHER batches' tombstones,
-    postings) — the prior set explicitly excludes this batch's own
-    directory, so a crashed-and-replayed batch rewrites byte-equivalent
-    content instead of seeing its own half-written tombstones as
-    "already deleted" and erasing itself.
-    """
-    import os as _os
-
-    ids = doc_ids.select("doc_id").distinct()
-    # the layout root is a local/DFS directory; probing it directly avoids
-    # Spark's noisy FileNotFound analysis path on the first delete batch
-    if _os.path.isdir(f"{path}/deletes"):
-        prior = (
-            read_layout(spark, path, "deletes")
-            .filter(F.col("delete") != delete_id)
-            .select("doc_id")
-        )
-        fresh = ids.join(prior, "doc_id", "left_anti")
-    else:  # first delete batch: no deletes/ directory yet
-        fresh = ids
-    fresh.write.mode("overwrite").parquet(f"{path}/deletes/delete={delete_id}")
-    gone = read_layout(spark, path, f"deletes/delete={delete_id}")
-    if _os.path.isdir(f"{path}/doclen"):
-        # doc-keyed sidecar written at ingest: covers zero-token docs
-        # (which have no posting rows, so the fallback below cannot see
-        # them — n_docs would stay high by one) AND is doc-sized, so the
-        # delete apply reads far fewer bytes than a postings scan.
-        doc_dl = (
-            read_layout(spark, path, "doclen")
-            .join(
-                _gated_tomb_bcast(gone, f"{path}/deletes/delete={delete_id}"),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id", "dl")
-        )
-    else:  # pre-sidecar layouts: per-doc dl replicated on every posting row
-        doc_dl = (
-            read_layout(spark, path, "postings")
-            .join(
-                _gated_tomb_bcast(gone, f"{path}/deletes/delete={delete_id}"),
-                "doc_id",
-                "left_semi",
-            )
-            .groupBy("doc_id")
-            .agg(F.max("dl").alias("dl"))
-        )
-    part = stats_partition or f"ingest={_DELETE_STATS_NS + delete_id}"
-    (
-        doc_dl.agg(
-            (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
-            # an all-duplicate batch deletes nothing: sum() of zero rows is
-            # NULL, but the delta must be the integer 0
-            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("bigint").alias("sum_dl"),
-        ).write.mode("overwrite")
-        .parquet(f"{path}/stats/{part}")
-    )
-
-
-def query_tombstone_postings(
-    spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K
-) -> DataFrame:
-    """Serve a query batch from a layout with tombstones: bucket-pruned
-    postings scan, anti-join the broadcast tombstone set, df counted
-    from the surviving pruned postings, stats delta-merged (negatives
-    included)."""
-    import os as _os
-
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
-    qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-
-    # tombstones are distinct by construction (each batch writes a
-    # distinct set anti-joined against prior batches), and anti-join
-    # semantics are duplicate-insensitive anyway — no dedup shuffle here.
-    # A freshly-ingested index may have NO delete batch yet (the natural
-    # state of a live streaming index): same isdir probe as the apply
-    # and compact paths, falling back to an empty tombstone relation.
-    if _os.path.isdir(f"{path}/deletes"):
-        tombs = read_layout(spark, path, "deletes").select("doc_id")
-    else:
-        tombs = spark.createDataFrame([], "doc_id bigint")
-    stats = (
-        read_layout(spark, path, "stats")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-        )
-        .selectExpr("n_docs", "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl")
-    )
-    postings = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .join(_gated_tomb_bcast(tombs, f"{path}/deletes"), "doc_id", "left_anti")
-    )
-    # live df for query terms = count of surviving pruned postings per
-    # term (the pruned scan holds every posting of each query term).
-    df_rel = postings.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    scores = (
-        postings.join(F.broadcast(df_rel), "term")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
-
-
-@register("s39_postings_tombstone_serve", oracle=_S39_ORACLE)
-def s39_postings_tombstone_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full LSM lifecycle on the lexical index: two ingests (the s36
-    split), then one tombstone batch (doc_id % 7 == 3), then one serve.
-    The oracle is s31's SQL over the corpus MINUS the deleted docs:
-    delta-merged stats and anti-joined postings must make the mutated
-    index serve byte-identically to a from-scratch build on the live
-    corpus."""
-    import shutil
-
+def _build_s39_layout(spark: SparkSession, sf_dir: str) -> str:
+    """s36's two segments plus one tombstone batch (doc_id % 7 == 3),
+    rebuilt from scratch; returns the layout path."""
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s39_index_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: disjoint batches, disjoint ingest=<id> partitions —
-    # the two ingest jobs are independent and submitted concurrently
-    run_sinks(
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 != 0), path, 0
-        ),
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 == 0), path, 1
-        ),
-    )
-    apply_postings_deletes(
+    _build_s36_layout(spark, docs, path)
+    delete_segmented(
         spark,
         path,
         docs.filter(F.col("doc_id") % _S39_MOD == _S39_REM).select("doc_id"),
         0,
     )
-    return query_tombstone_postings(spark, path, _QUERY_TERMS)
+    return path
+
+
+@register("s39_postings_tombstone_serve", oracle=_S39_ORACLE)
+def s39_postings_tombstone_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document deletes on the lexical index: s36's two segment ingests,
+    one tombstone batch, one serve. The oracle is s31's SQL over the
+    corpus MINUS the deleted docs: the tombstone anti-join, df counted
+    from the surviving pruned postings and the negative stats delta
+    must make the mutated index serve byte-identically to a
+    from-scratch build on the live corpus."""
+    return query_segmented_postings(
+        spark, _build_s39_layout(spark, sf_dir), _QUERY_TERMS
+    )
 
 
 # ---------------------------------------------------------------------------
-# s41: postings compaction — fold ingest deltas + tombstones into a clean
-# s34-format layout
+# s41: the live segments baked into the s34 format
 # ---------------------------------------------------------------------------
-# Completes the index's LSM lifecycle: s34 build -> s36 incremental
-# ingests -> s39 tombstone deletes -> s41 compaction. Serving from the
-# delta'd layout pays a per-query tax (delta merging, the tombstone
-# anti-join, serve-side df derivation) that grows with maintenance
-# history; compaction pays ONE index-sized job to retire the history:
-# read the postings, drop tombstoned rows, recount per-term df (the one
-# vocabulary-keyed shuffle — compaction's honest cost), rebake df into
-# the rows, collapse the stat deltas to a single row, and rewrite
-# term-bucket-partitioned. The result is byte-identical to an s34 build
-# over the live corpus, so the EXISTING s34 serve path reads it
-# unchanged — 4 serve exchanges, bucket-pruned scan, no anti-join — and
-# the oracle stays s39's (corpus minus deletes).
+# Serving from the segmented layout pays a per-query tax (the segment
+# union, the tombstone anti-join, serve-side df derivation) that grows
+# with maintenance history; baking pays ONE index-sized job to retire
+# it: read the live segments, drop tombstoned rows, recount per-term df
+# (the one vocabulary-keyed shuffle), rebake df into the rows, collapse
+# the stat deltas to a single row, and rewrite term-bucket-partitioned.
+# The result is byte-identical to an s34 build over the live corpus, so
+# the EXISTING s34 serve path reads it unchanged — 4 serve exchanges,
+# bucket-pruned scan, no anti-join — and the oracle stays s39's.
 #
-# Scale: compaction reads/writes the INDEX (integer columns), never the
-# corpus — no re-tokenization. At 100 TB it is a scheduled background
-# job whose cadence trades write amplification against serve latency,
-# exactly the LSM/Lucene segment-merge discipline.
+# Scale: baking reads/writes the INDEX (integer columns), never the
+# corpus — no re-tokenization. Unlike s44's tiered compaction it
+# rewrites everything, so it suits a layout that stops taking writes.
 
 def _s41_out_path(sf_dir: str) -> str:
-    # per-process scratch — same rationale as _s39_index_path
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".postings_compact", f"{tag}-{_os.getpid()}")
+    return _scratch_path(".postings_index", sf_dir, "s41")
 
 
-def compact_postings(spark: SparkSession, incr_path: str, out_path: str) -> None:
-    """Rewrite an incremental layout (ingest deltas + optional tombstones)
-    as a clean s34-format layout: live postings with df baked in,
-    one-row stats, term-bucket partitioning preserved."""
-    import os as _os
-
-    # Round 13 (guide §5 / §2.6): the tombstone-filtered postings feed
-    # BOTH the df aggregate and the join's probe side — persisted for
-    # the span of the compaction so the index is scanned (and the
-    # anti-join run) once, not twice; the three disjoint-directory
-    # sinks (doclen / postings / stats) are submitted concurrently.
-    postings = read_layout(spark, incr_path, "postings")
-    tombs = None
-    if _os.path.isdir(f"{incr_path}/deletes"):
-        tombs = read_layout(spark, incr_path, "deletes").select("doc_id")
-        tombs = _gated_tomb_bcast(tombs, f"{incr_path}/deletes")
-        postings = postings.join(tombs, "doc_id", "left_anti")
-    postings = postings.persist()
+def bake_postings_index(spark: SparkSession, path: str, out_path: str) -> None:
+    """Rewrite the live view of a segmented layout as a clean s34-format
+    layout: live postings with df baked in, one-row stats (n_docs,
+    avgdl, c_tot), term-bucket partitioning preserved."""
+    # the tombstone-filtered postings feed BOTH the df aggregate and the
+    # join's probe side — persisted for the call so the segments are
+    # scanned (and the anti-join run) once; the two sinks run concurrently
+    postings = (
+        _apply_scoped_tombstones(
+            _read_segments_tagged(spark, path, _live_segments(path), "postings"),
+            _scoped_tombstones(spark, path),
+        )
+        .drop("seg_gen")
+        .persist()
+    )
     try:
-        sinks = []
-        if _os.path.isdir(f"{incr_path}/doclen"):
-            # carry the doc-keyed dl sidecar forward (tombstoned docs
-            # dropped) so the compacted layout supports future deletes
-            # of zero-token docs
-            doclen = read_layout(spark, incr_path, "doclen").select("doc_id", "dl")
-            if tombs is not None:
-                doclen = doclen.join(tombs, "doc_id", "left_anti")
-            sinks.append(
-                lambda: doclen.write.mode("overwrite").parquet(
-                    f"{out_path}/doclen/ingest=0"
-                )
-            )
         df_rel = postings.groupBy("term").agg(
             F.count(F.lit(1)).cast("bigint").alias("df")
         )
-        sinks.append(
+        run_sinks(
             lambda: (
                 postings.join(df_rel, "term")
                 .select("term", "doc_id", "tf", "dl", "df", "tbkt")
@@ -417,11 +189,9 @@ def compact_postings(spark: SparkSession, incr_path: str, out_path: str) -> None
                 .write.partitionBy("tbkt")
                 .mode("overwrite")
                 .parquet(f"{out_path}/postings")
-            )
-        )
-        sinks.append(
+            ),
             lambda: (
-                read_layout(spark, incr_path, "stats")
+                read_layout(spark, path, "stats")
                 .agg(
                     F.sum("n_docs").cast("bigint").alias("n_docs"),
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
@@ -433,45 +203,25 @@ def compact_postings(spark: SparkSession, incr_path: str, out_path: str) -> None
                 )
                 .write.mode("overwrite")
                 .parquet(f"{out_path}/stats")
-            )
+            ),
         )
-        run_sinks(*sinks)
     finally:
         postings.unpersist()
 
 
 @register("s41_postings_compaction", oracle=_S39_ORACLE)
 def s41_postings_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s39's full lifecycle (two ingests + one tombstone batch) followed
-    by compaction into an s34-format layout and a serve THROUGH THE
-    UNMODIFIED s34 path — proving the compacted index is byte-identical
-    to a fresh build over the live corpus."""
+    """s39's lifecycle (two segments + one tombstone batch) baked into an
+    s34-format layout and served THROUGH THE UNMODIFIED s34 path —
+    proving the baked index is byte-identical to a fresh build over the
+    live corpus."""
     import shutil
 
     from dbt_osmosis_spark.operators.retrieval import query_postings_index
 
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    incr = _s39_index_path(sf_dir)
     out = _s41_out_path(sf_dir)
-    shutil.rmtree(incr, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)
-    # guide §2.6: disjoint batches, disjoint ingest=<id> partitions —
-    # the two ingest jobs are independent and submitted concurrently
-    run_sinks(
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 != 0), incr, 0
-        ),
-        lambda: ingest_postings_batch(
-            spark, docs.filter(F.col("doc_id") % 5 == 0), incr, 1
-        ),
-    )
-    apply_postings_deletes(
-        spark,
-        incr,
-        docs.filter(F.col("doc_id") % _S39_MOD == _S39_REM).select("doc_id"),
-        0,
-    )
-    compact_postings(spark, incr, out)
+    bake_postings_index(spark, _build_s39_layout(spark, sf_dir), out)
     return query_postings_index(spark, out, _QUERY_TERMS)
 
 
@@ -628,24 +378,8 @@ def _rank_phrase_matches(matches: DataFrame, k: int) -> DataFrame:
     parallel and keeps only each bucket's top-k survivors (<= buckets*k
     rows per phrase); phase 2's global rank runs on that bounded set —
     provably the same top-k."""
-    final_w = W.partitionBy("phrase_id").orderBy(
-        F.col("n_matches").desc(), F.col("doc_id")
-    )
-    return (
-        matches.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("phrase_id", "bkt").orderBy(
-                    F.col("n_matches").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("phrase_id", "rnk", "doc_id", "n_matches")
-        .orderBy("phrase_id", "rnk")
+    return _topn_two_phase(matches, "n_matches", k, key="phrase_id").orderBy(
+        "phrase_id", "rnk"
     )
 
 
@@ -671,14 +405,7 @@ def _rank_phrase_matches(matches: DataFrame, k: int) -> DataFrame:
 # once and derive frequencies — noted here for parity, not built twice.
 
 def _s43_index_path(sf_dir: str) -> str:
-    # per-process scratch — same rationale as _s39_index_path: s43/s45/s46
-    # each rebuild this layout with overwrite, so two PROCESSES sharing the
-    # path would race overwrite-delete vs read (ADVICE r11).
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".postings_positional", f"{tag}-{_os.getpid()}")
+    return _scratch_path(".postings_positional", sf_dir)
 
 
 def write_positional_index(spark: SparkSession, docs: DataFrame, path: str) -> None:
@@ -799,8 +526,8 @@ def s43_phrase_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # therefore scale with the merged DELTA segments + tombstones — the
 # test asserts base-file mtimes are untouched and new bytes << base.
 #
-# Serve = the s39 plan over the segment union: bucket-pruned multi-path
-# scan, broadcast tombstone anti-join, df from surviving pruned
+# Serve (query_segmented_postings, also s36's and s39's): bucket-pruned
+# multi-path scan, broadcast tombstone anti-join, df from surviving pruned
 # postings, delta-merged stats, two-phase rank. df-derivation (not
 # baked df) is the right call for a multi-segment layout — a baked df
 # is global state that every merge would invalidate; Lucene likewise
@@ -810,12 +537,7 @@ def s43_phrase_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # here the registered op is sequential so directory renames suffice.
 
 def _s44_layout_path(sf_dir: str) -> str:
-    # per-process scratch — same rationale as _s39_index_path
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".postings_tiered", f"{tag}-{_os.getpid()}")
+    return _scratch_path(".postings_tiered", sf_dir)
 
 
 def _seg_id(seg: str) -> int:
@@ -992,7 +714,9 @@ def _scoped_tombstones(
     import os as _os
 
     if not _os.path.isdir(f"{path}/deletes"):
-        return spark.createDataFrame([], "doc_id bigint, gen bigint")
+        # an in-memory empty relation Spark cannot prove empty: without
+        # the hint every segment branch plans a shuffled anti-join
+        return F.broadcast(spark.createDataFrame([], "doc_id bigint, gen bigint"))
     t = read_layout(spark, path, "deletes")
     m = _read_manifest(path, mgen) if mgen is not None else None
     if m is not None and "live_deletes" in m:
@@ -1690,7 +1414,7 @@ def query_segmented_postings(
     """Serve from the segmented layout: bucket-pruned multi-path scan
     over all live segments, generation-scoped tombstone anti-join, df
     from the surviving pruned postings, delta-merged stats, two-phase
-    rank — s39's serve plan over a segment union. A not-yet-ingested
+    rank. A not-yet-ingested
     layout serves an empty result instead of raising (ADVICE r11).
     ``mgen`` pins the serve to a historical manifest generation's
     segment view (compaction retains those segments until vacuum)."""
@@ -1725,25 +1449,7 @@ def query_segmented_postings(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").cast("bigint").alias("score_micros"))
     )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
 
 
 @register("s44_tiered_compaction", oracle=_S39_ORACLE)
@@ -1845,25 +1551,7 @@ def query_bm25_from_positional(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").cast("bigint").alias("score_micros"))
     )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2049,12 +1737,7 @@ ORDER BY phrase_id, rnk
 
 
 def _s47_layout_path(sf_dir: str) -> str:
-    # per-process scratch — same rationale as _s39_index_path
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".positional_tiered", f"{tag}-{_os.getpid()}")
+    return _scratch_path(".positional_tiered", sf_dir)
 
 
 def ingest_positional_segment(
@@ -2255,25 +1938,7 @@ def query_bm25_segmented(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").cast("bigint").alias("score_micros"))
     )
-    final_w = W.partitionBy("query_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scores.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("query_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "doc_id", "score_micros")
-        .orderBy("query_id", "rnk")
-    )
+    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
 
 
 @register("s48_bm25_maintained_positional", oracle=_S48_ORACLE)

@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.retrieval import (
-    _BUCKETS,
     _s34_tbkt_py,
+    _topn_two_phase,
 )
 from dbt_osmosis_spark.operators.retrieval_ext import (
     _phrase_match_counts,
@@ -330,8 +330,6 @@ def query_bm25_phrases(
     phrase df from the match relation, dl from the doclen sidecar,
     stats from the persisted one-row relation, two-phase rank on the
     integer-micros score."""
-    from pyspark.sql.window import Window as W
-
     terms = sorted({w for _, ws in phrases for w in ws})
     probes = sorted({_s34_tbkt_py(t) for t in terms})
     pos = (
@@ -352,24 +350,8 @@ def query_bm25_phrases(
         .crossJoin(F.broadcast(stats))
         .select("phrase_id", "doc_id", F.expr(_S51_CONTRIB).alias("score_micros"))
     )
-    final_w = W.partitionBy("phrase_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("phrase_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("phrase_id", "rnk", "doc_id", "score_micros")
-        .orderBy("phrase_id", "rnk")
+    return _topn_two_phase(scored, "score_micros", k, key="phrase_id").orderBy(
+        "phrase_id", "rnk"
     )
 
 
@@ -387,8 +369,6 @@ def query_bm25_phrases_segmented(
     delta-merged stats, optional manifest pin. Unregistered (machinery
     = s51 + s48, both oracle-pinned); equivalence with the monolithic
     serve over the live corpus is tested in tests/test_round12b_ops.py."""
-    from pyspark.sql.window import Window as W
-
     from dbt_osmosis_spark.operators.retrieval_ext import (
         _apply_scoped_tombstones,
         _live_segments,
@@ -427,24 +407,8 @@ def query_bm25_phrases_segmented(
         .crossJoin(F.broadcast(stats))
         .select("phrase_id", "doc_id", F.expr(_S51_CONTRIB).alias("score_micros"))
     )
-    final_w = W.partitionBy("phrase_id").orderBy(
-        F.col("score_micros").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("bkt", F.expr(f"pmod(hash(doc_id), {_BUCKETS})"))
-        .withColumn(
-            "lr",
-            F.row_number().over(
-                W.partitionBy("phrase_id", "bkt").orderBy(
-                    F.col("score_micros").desc(), F.col("doc_id")
-                )
-            ),
-        )
-        .filter(F.col("lr") <= k)
-        .withColumn("rnk", F.row_number().over(final_w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("phrase_id", "rnk", "doc_id", "score_micros")
-        .orderBy("phrase_id", "rnk")
+    return _topn_two_phase(scored, "score_micros", k, key="phrase_id").orderBy(
+        "phrase_id", "rnk"
     )
 
 

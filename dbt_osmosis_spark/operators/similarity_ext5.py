@@ -50,6 +50,7 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     _read_segments_tagged,
     _retired_delete_parts,
     _scoped_tombstones,
+    _scratch_path,
     _seg_id,
     _stats_parts,
     _upsert_supersede_sinks,
@@ -78,12 +79,7 @@ _S54_EMPTY = (
 
 
 def _s54_layout_path(sf_dir: str) -> str:
-    # per-process scratch — same rationale as _s39_index_path
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".vector_segments", f"{tag}-{_os.getpid()}")
+    return _scratch_path(".vector_segments", sf_dir)
 
 
 def ingest_vector_segment(

@@ -154,7 +154,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 # schema and every later read passes it explicitly, skipping the inference
 # job. This memoizes METADATA only — the file listing and every data scan
 # still happen per read, so results always reflect the current on-disk state
-# (no result caching across runs). Kill switch: SPARK_GRAFT_SCHEMA_MEMO=0.
+# (no result caching across runs).
 _LAYOUT_SCHEMA_MEMO: dict = {}
 
 
@@ -164,8 +164,6 @@ def read_layout(spark: SparkSession, root: str, sub: str = "") -> DataFrame:
     ``seg-3/postings``; the memo key collapses it to its layout-invariant
     kind (the last component), so every segment of a layout shares one entry."""
     path = f"{root}/{sub}" if sub else root
-    if os.environ.get("SPARK_GRAFT_SCHEMA_MEMO", "1") == "0":
-        return spark.read.parquet(path)
     kind = sub.rsplit("/", 1)[-1]
     if "=" in kind:  # a single partition dir, e.g. delete=3: one kind per name
         kind = kind.split("=", 1)[0] + "="

@@ -18,8 +18,7 @@ function of the batch's documents and lands under ``seg-<batch_id>`` /
 foreachBatch overwrites byte-equivalent content. Delete batches write
 ``deletes/delete=<id>`` + ``stats/part=delete-<id>`` — the ingest and
 delete stats partitions are disjoint by their string prefixes, so no id
-namespace offset is even needed (unlike the bag-of-words twin's
-``batch=<NS+id>``).
+namespace offset is needed.
 
 Out-of-order arrivals are DEFINED, not hazards (round 12, generation
 scoping): a tombstone draining before its document's segment is stamped
@@ -47,6 +46,7 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     ingest_positional_segment,
     query_phrase_segmented,
 )
+from dbt_osmosis_spark.streaming.drain import drain
 
 _DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 _DELETES_SCHEMA = "doc_id bigint"
@@ -61,22 +61,11 @@ def run_positional_ingest(
 ) -> None:
     """Drain the landing directory into the maintained positional index
     (availableNow): one immutable segment per micro-batch."""
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         ingest_positional_segment(batch_df.sparkSession, batch_df, index_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, incoming_dir, _DOCS_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
 def run_positional_deletes(
@@ -89,22 +78,11 @@ def run_positional_deletes(
     """Drain a tombstone landing directory into the maintained positional
     index (availableNow; its own checkpoint — delete stats partitions are
     prefix-disjoint from ingest ones, so ids never collide)."""
-    stream = (
-        spark.readStream.schema(_DELETES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         delete_segmented(batch_df.sparkSession, index_dir, batch_df, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, incoming_dir, _DELETES_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
 def serve_phrases_live(

@@ -1,92 +1,56 @@
-"""Continuous postings-index maintenance: the streaming twin of s36.
+"""Continuous postings-index maintenance: the streaming twin of s36/s39.
 
-s36 (operators/retrieval.py) maintains the lexical index incrementally
-with batch ingests; this module is the same state layout fed by
-Structured Streaming — ``readStream`` over a document landing directory
-→ ``foreachBatch`` → per-batch postings + df/corpus-stats deltas. A
-BM25 serve over the index is byte-identical to s31's full-corpus
-computation at any drain point (twin equivalence tested batch-by-batch).
+s36/s39 (operators/retrieval.py, operators/retrieval_ext.py) maintain
+the lexical index as a segmented layout with batch ingests and
+tombstone batches; this module feeds the SAME layout from Structured
+Streaming — ``readStream`` over a document landing directory →
+``foreachBatch`` → one immutable segment per micro-batch
+(``ingest_segment``) — plus a second stream of doc_id tombstones
+(``delete_segmented``). A BM25 serve over the maintained index is
+byte-identical to s31's full-corpus computation (minus the deleted
+docs) at any drain point (twin equivalence tested), and the
+layout-agnostic ``compact_segments`` can run between batches without
+changing any serve result.
 
-State layout (the s36 split-by-mutability discipline, one directory per
-micro-batch so replays own their partition):
-
-- ``postings/batch=<id>/tbkt=<b>/`` — the batch's (term, doc_id, tf, dl)
-  rows, term-bucket partitioned INSIDE the batch partition: serving
-  still prunes on tbkt (nested partition discovery), while each batch
-  owns a disjoint directory;
-- ``termstats/batch=<id>/`` — the batch's per-term df delta;
-- ``stats/batch=<id>/`` — the batch's 1-row (n_docs, sum_dl) delta.
-
-Delivery semantics — EXACTLY-once by idempotent overwrite (the
-sketch.py contract, not ingest.py's weaker content-keyed one): every
-partition written is a PURE FUNCTION of the batch's documents, so a
-replayed foreachBatch overwrites its own directories with byte-
-equivalent content and the delta merges cannot double-count. This is
-stronger than s36's batch ``append`` mode, which is why the streaming
-variant keys postings by batch instead of appending into shared bucket
-directories.
+Delivery semantics — exactly-once by idempotent overwrite: each
+micro-batch's segment (postings + doclen + stats delta) is a pure
+function of the batch's documents and lands under ``seg-<batch_id>`` /
+``stats/part=ingest-<batch_id>``, so a crashed-and-replayed
+foreachBatch overwrites byte-equivalent content. Delete batches write
+``deletes/delete=<id>`` + ``stats/part=delete-<id>``; their stats
+delta is computed from current liveness excluding the batch's own
+partition, so a replay re-lands the same delta and deletes subtract
+exactly once. Ingest and delete stats partitions are disjoint by their
+string prefixes. A document REVISION streamed as a new batch supersedes
+its prior version (ingest upserts by default).
 
 At 100 TB: per-batch work is one tokenization of the BATCH (never the
-corpus) + three doc/term-local aggregates; the serve-side delta merge
-reads |terms|-filtered termstats rows and 1-row stats per batch —
-sketch-sized, not corpus-sized — and a compaction into s34's rebuilt
-layout is a plain batch job over the same schema.
+corpus); the serve reads only the probed term buckets of each live
+segment plus the broadcast tombstone set and the 1-row stats deltas.
 
 Reference parity: the reference has no streaming plane; this extends
-SURVEY §2 S26 with the maintained-index pattern s34/s36 document.
+SURVEY §2 S26 with the maintained-index pattern s36/s44 document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from dbt_osmosis_spark.operators.retrieval import (
-    _S34_SPARK_TBKT,
-    _doc_dl,
-    _doc_dl_stats,
-    _doc_tf,
-    query_incremental_postings,
+from dbt_osmosis_spark.operators.retrieval_ext import (
+    delete_segmented,
+    ingest_segment,
+    query_segmented_postings,
 )
+from dbt_osmosis_spark.streaming.drain import drain
 
 _DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+_DELETES_SCHEMA = "doc_id bigint"
 
 
 def write_batch_postings(docs: DataFrame, index_dir: str, batch_id: int) -> None:
-    """Idempotently land one batch's postings + stat deltas under their
-    ``batch=<id>`` partitions (overwrite of deterministic content)."""
-    # Round 14 (guide §2.4 / §1.2 — the ingest_postings_batch shape): dl
-    # rides the tf aggregation from the map-side token-array size, tf is
-    # persisted for the span of the batch so each sink rolls up from one
-    # tokenize, and the doclen sidecar (incl. dl=0 for zero-token docs —
-    # the delete stream recovers dl from the doc-sized sidecar instead of
-    # scanning postings) is a map-only scan of the batch.
-    tf = _doc_tf(docs).persist()  # round 14 (§2.4): map-side doc-local fold
-    try:
-        (
-            tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
-            .select("term", "doc_id", "tf", "dl", "tbkt")
-            .repartition("tbkt")
-            .write.partitionBy("tbkt")
-            .mode("overwrite")
-            .parquet(f"{index_dir}/postings/batch={batch_id}")
-        )
-        tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/termstats/batch={batch_id}")
-        (
-            _doc_dl(docs)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/doclen/batch={batch_id}")
-        )
-        (
-            # one map-only batch pass (§2.4); an all-empty batch sums to 0
-            _doc_dl_stats(docs)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/stats/batch={batch_id}")
-        )
-    finally:
-        tf.unpersist()
+    """Idempotently land one document micro-batch as segment
+    ``seg-<batch_id>`` (overwrite of deterministic content)."""
+    ingest_segment(docs.sparkSession, docs, index_dir, batch_id)
 
 
 def run_postings_ingest(
@@ -96,78 +60,19 @@ def run_postings_ingest(
     spark: SparkSession,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """Drain the landing directory into the maintained index (availableNow)."""
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
+    """Drain the landing directory into the maintained index
+    (availableNow): one immutable segment per micro-batch."""
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         write_batch_postings(batch_df, index_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def serve_postings(
-    spark: SparkSession, index_dir: str, query_terms: tuple[tuple[str, str], ...]
-) -> DataFrame:
-    """BM25 top-k over the maintained index — exactly s36's serve: the
-    reader only aggregates term/doc-keyed columns, so the extra ``batch``
-    partition column is invisible to it and tbkt pruning still applies."""
-    return query_incremental_postings(spark, index_dir, query_terms)
-
-
-__all__ = [
-    "run_postings_ingest",
-    "serve_postings",
-    "write_batch_postings",
-]
-
-
-# ---------------------------------------------------------------------------
-# Continuous tombstone deletes: the streaming twin of s39
-# ---------------------------------------------------------------------------
-# A second stream — doc_id tombstones landing beside the document stream
-# — retracts documents from the maintained index without rebuild. Each
-# delete micro-batch writes its tombstone partition plus a NEGATIVE
-# (n_docs, sum_dl) stats delta derived from one scan of the index's own
-# postings (operators/retrieval_ext.py apply_postings_deletes, which
-# owns the replay contract: outputs are pure functions of the batch,
-# the OTHER batches' tombstones, and the postings, so a crashed-and-
-# replayed foreachBatch overwrites byte-equivalent content). Delete
-# stats land under ``stats/batch=<NS+id>`` — the same partition key the
-# ingest stream uses, offset into a disjoint id namespace, so the serve
-# side keeps summing one uniform stats relation.
-#
-# Serving reuses s39's query path unchanged: bucket-pruned scan,
-# anti-join of the broadcast tombstone set, df from surviving pruned
-# postings, delta-merged stats (negatives fold in).
-
-_DELETE_BATCH_NS = 1_000_000  # ingest batches own [0, NS); deletes own [NS, ...)
-
-_DELETES_SCHEMA = "doc_id bigint"
+    drain(spark, incoming_dir, _DOCS_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
 def write_batch_deletes(doc_ids: DataFrame, index_dir: str, batch_id: int) -> None:
     """Idempotently apply one tombstone micro-batch to the maintained
-    index (delegates to the batch delete path with the streaming stats
-    namespace)."""
-    from dbt_osmosis_spark.operators.retrieval_ext import apply_postings_deletes
-
-    apply_postings_deletes(
-        doc_ids.sparkSession,
-        index_dir,
-        doc_ids,
-        batch_id,
-        stats_partition=f"batch={_DELETE_BATCH_NS + batch_id}",
-    )
+    index as delete batch ``batch_id``."""
+    delete_segmented(doc_ids.sparkSession, index_dir, doc_ids, batch_id)
 
 
 def run_postings_deletes(
@@ -178,39 +83,33 @@ def run_postings_deletes(
     max_files_per_trigger: int = 1,
 ) -> None:
     """Drain a tombstone landing directory into the maintained index
-    (availableNow; its own checkpoint, so delete batch ids are disjoint
-    from ingest batch ids by the namespace offset)."""
-    stream = (
-        spark.readStream.schema(_DELETES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
+    (availableNow; its own checkpoint — delete stats partitions are
+    prefix-disjoint from ingest ones, so ids never collide)."""
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         write_batch_deletes(batch_df, index_dir, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, incoming_dir, _DELETES_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
-def serve_postings_live(
+def serve_postings(
     spark: SparkSession, index_dir: str, query_terms: tuple[tuple[str, str], ...]
 ) -> DataFrame:
     """BM25 top-k over the maintained index MINUS its tombstones —
-    exactly s39's serve plan (6 exchanges, tbkt pruning, broadcast
-    tombstone anti-join)."""
-    from dbt_osmosis_spark.operators.retrieval_ext import query_tombstone_postings
+    exactly s39's serve plan (bucket-pruned segment-union scan,
+    broadcast tombstone anti-join, df from the surviving postings,
+    two-phase rank)."""
+    return query_segmented_postings(spark, index_dir, query_terms)
 
-    return query_tombstone_postings(spark, index_dir, query_terms)
 
+# one serve: a layout without a delete batch yet has no tombstones to apply
+serve_postings_live = serve_postings
 
-__all__ += [
+__all__ = [
     "run_postings_deletes",
+    "run_postings_ingest",
+    "serve_postings",
     "serve_postings_live",
     "write_batch_deletes",
+    "write_batch_postings",
 ]

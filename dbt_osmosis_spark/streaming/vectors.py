@@ -40,6 +40,7 @@ from dbt_osmosis_spark.operators.similarity_ext5 import (
     ingest_vector_segment,
     query_vectors_segmented,
 )
+from dbt_osmosis_spark.streaming.drain import drain
 
 _VECS_SCHEMA = "doc_id bigint, v array<double>, label int"
 _DELETES_SCHEMA = "doc_id bigint"
@@ -58,22 +59,11 @@ def run_vector_ingest(
     (manifest-resolved — a retrain's new centroid generation is picked
     up by the next drain)."""
     cents = index_centroids(spark, index_dir)
-    stream = (
-        spark.readStream.schema(_VECS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         ingest_vector_segment(batch_df.sparkSession, batch_df, index_dir, bid, cents)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, incoming_dir, _VECS_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
 def run_vector_deletes(
@@ -87,22 +77,11 @@ def run_vector_deletes(
     index (availableNow; its own checkpoint — the layout-generic
     delete_segmented works verbatim on vector segments because it only
     touches the doclen sidecars, tombstones, and stats)."""
-    stream = (
-        spark.readStream.schema(_DELETES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(incoming_dir)
-    )
 
     def _sink(batch_df: DataFrame, bid: int) -> None:
         delete_segmented(batch_df.sparkSession, index_dir, batch_df, bid)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, incoming_dir, _DELETES_SCHEMA, checkpoint, _sink, max_files_per_trigger)
 
 
 def serve_vectors_live(

@@ -261,10 +261,11 @@ def sync_to_yaml(
 ) -> list[Path]:
     """Write per-node column docs into sidecar schema YAML (SURVEY M23,
     reference: src/dbt_osmosis/core/sync_operations.py:21-313) with atomic
-    replace; returns written paths. ``dry_run`` computes the same merged
-    documents and returns the paths that WOULD be written without touching
-    disk (the reference's --dry-run mutation tracking,
-    src/dbt_osmosis/core/schema/writer.py:118-240).
+    replace; returns the paths whose content changed — a file that would
+    be rewritten with identical bytes is left untouched. ``dry_run``
+    computes the same merged documents and returns the paths that WOULD
+    change without touching disk (the reference's --dry-run mutation
+    tracking, src/dbt_osmosis/core/schema/writer.py:118-240).
 
     With the `fusion_compat` setting on, column meta/tags nest under
     `config:` (the dbt-fusion schema layout, reference:
@@ -319,9 +320,8 @@ def sync_to_yaml(
         node_obj = ctx.manifest.models[name]
         if node_obj.description:
             entry["description"] = node_obj.description
-        if not dry_run:
-            ctx.yaml.write(path, doc)
-        written.append(path)
+        if ctx.yaml.changes(path, doc) if dry_run else ctx.yaml.write(path, doc):
+            written.append(path)
     return written
 
 

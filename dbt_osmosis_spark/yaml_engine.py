@@ -57,40 +57,62 @@ class YamlHandler:
     def mark_dirty(self, path: str | Path) -> None:
         self._dirty.add(str(Path(path).resolve()))
 
-    def write(self, path: str | Path, doc: dict | None = None) -> None:
-        """Merge managed keys into any existing document, then atomically
-        replace the file (write-to-temp + rename, reference:
-        writer.py:118-240)."""
+    def _merge(self, path: str | Path, doc: dict | None) -> tuple[str, dict, str, bool]:
+        """(cache key, merged document, its YAML text, whether that text
+        differs from the file on disk). Managed keys come from ``doc``,
+        everything else from the document on disk — taken from the cache
+        without a re-parse when ``doc`` IS the cached parse (``read``
+        hands out the cached object)."""
         key = str(Path(path).resolve())
+        cached = self._cache.get(key)
         if doc is None:
-            doc = self._cache.get(key, {})
-        existing: dict = {}
-        if Path(path).exists():
-            existing = yaml.safe_load(Path(path).read_text()) or {}
+            doc = cached if cached is not None else {}
+        on_disk = Path(path).read_text() if Path(path).exists() else None
+        if on_disk is None:
+            existing: dict = {}
+        elif doc is cached:
+            existing = doc
+        else:
+            existing = yaml.safe_load(on_disk) or {}
         merged = dict(existing)
         for k in MANAGED_KEYS:
             if k in doc:
                 merged[k] = doc[k]
-        Path(path).parent.mkdir(parents=True, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=str(Path(path).parent), suffix=".yml.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                yaml.safe_dump(merged, f, sort_keys=False, allow_unicode=True)
-            # validate the temp file parses before replacing
-            yaml.safe_load(Path(tmp).read_text())
-            os.replace(tmp, path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        text = yaml.safe_dump(merged, sort_keys=False, allow_unicode=True)
+        return key, merged, text, text != on_disk
+
+    def changes(self, path: str | Path, doc: dict | None = None) -> bool:
+        """Whether ``write(path, doc)`` would change the file on disk."""
+        return self._merge(path, doc)[3]
+
+    def write(self, path: str | Path, doc: dict | None = None) -> bool:
+        """Merge managed keys into any existing document, then atomically
+        replace the file (write-to-temp + rename, reference:
+        writer.py:118-240). A file whose content would not change is left
+        untouched. Returns whether the file was written."""
+        key, merged, text, changed = self._merge(path, doc)
+        if changed:
+            Path(path).parent.mkdir(parents=True, exist_ok=True)
+            fd, tmp = tempfile.mkstemp(dir=str(Path(path).parent), suffix=".yml.tmp")
+            try:
+                with os.fdopen(fd, "w") as f:
+                    f.write(text)
+                # validate the temp file parses before replacing
+                yaml.safe_load(Path(tmp).read_text())
+                os.replace(tmp, path)
+            finally:
+                if os.path.exists(tmp):
+                    os.unlink(tmp)
         self._put(key, merged)
         self._dirty.discard(key)
+        return changed
 
     def commit_all(self) -> int:
-        """Write every dirty buffer (the reference's commit_yamls)."""
+        """Write every dirty buffer (the reference's commit_yamls);
+        returns how many files changed."""
         n = 0
         for key in sorted(self._dirty):
-            self.write(key)
-            n += 1
+            n += self.write(key)
         return n
 
 

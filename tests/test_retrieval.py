@@ -210,7 +210,7 @@ def test_retrieval_exchange_budgets(spark, sf_dir):
         "s33_rrf_hybrid": 18,
         "s34_postings_index_serve": 4,  # serve plan (the returned df)
         "s35_rank_eval": 42,  # composes both systems-under-test
-        "s36_postings_incremental_serve": 6,  # serve plan; +2 delta merges
+        "s36_postings_incremental_serve": 6,  # serve plan; +df and stats merges
     }
     for name, budget in budgets.items():
         assert exchange_count(QUERIES[name](spark, sf_dir)) <= budget, name
@@ -352,13 +352,13 @@ def test_s36_serves_identical_results_to_s31(spark, sf_dir, s31):
 
 
 def test_s36_delta_merge_equals_full_rebuild(spark, sf_dir):
-    """The merged termstats/stats deltas must equal a from-scratch
+    """The merged stats deltas (stats/part=*) must equal a from-scratch
     aggregation over the full corpus — the mergeability claim, checked
     directly on the persisted state."""
     from dbt_osmosis_spark.operators.retrieval import (
         _corpus_stats,
+        _doc_dl,
         _s36_index_path,
-        _tokens,
     )
     from dbt_osmosis_spark.sources.parquet import read_parquet
 
@@ -366,43 +366,24 @@ def test_s36_delta_merge_equals_full_rebuild(spark, sf_dir):
     path = _s36_index_path(sf_dir)
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    toks = _tokens(docs)
-    from dbt_osmosis_spark.operators.retrieval import _doc_dl
-
     want_stats = _corpus_stats(_doc_dl(docs)).collect()[0]
+    stats = spark.read.parquet(f"{path}/stats")
+    assert {r.part for r in stats.select("part").distinct().collect()} == {
+        "ingest-0",
+        "ingest-1",
+    }
     got_stats = (
-        spark.read.parquet(f"{path}/stats")
-        .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
+        stats.agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl"))
         .selectExpr("n_docs", "CAST(sum_dl AS DOUBLE) / n_docs AS avgdl")
         .collect()[0]
     )
     assert got_stats.n_docs == want_stats.n_docs
     assert got_stats.avgdl == want_stats.avgdl  # exact same division
 
-    want_df = {
-        (r.term): r.df
-        for r in toks.select("doc_id", F.col("tok").alias("term"))
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect()
-    }
-    got_df = {
-        r.term: r.df
-        for r in spark.read.parquet(f"{path}/termstats")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-    }
-    assert got_df == want_df
-
 
 def test_s36_serve_plan_prunes_and_stays_small(spark, sf_dir):
-    from dbt_osmosis_spark.operators.retrieval import (
-        _QUERY_TERMS,
-        _s36_index_path,
-        query_incremental_postings,
-    )
+    from dbt_osmosis_spark.operators.retrieval import _QUERY_TERMS, _s36_index_path
+    from dbt_osmosis_spark.operators.retrieval_ext import query_segmented_postings
     from dbt_osmosis_spark.plans.audit import (
         exchange_count,
         has_broadcast_join,
@@ -411,12 +392,12 @@ def test_s36_serve_plan_prunes_and_stays_small(spark, sf_dir):
     )
 
     QUERIES["s36_postings_incremental_serve"](spark, sf_dir).collect()
-    df = query_incremental_postings(spark, _s36_index_path(sf_dir), _QUERY_TERMS)
+    df = query_segmented_postings(spark, _s36_index_path(sf_dir), _QUERY_TERMS)
     assert has_broadcast_join(df)
     assert not has_cartesian(df)
-    # s34's serve is 4; the two extra exchanges here are the delta merges
-    # (termstats groupBy term on a query-term-filtered scan, stats 1-row
-    # sum) — both stats-sized, never corpus-sized
+    # s34's serve is 4; the two extra exchanges here are the serve-side
+    # df (groupBy term on the query-term-filtered scan) and the 1-row
+    # stats sum — both stats-sized, never corpus-sized
     assert exchange_count(df) <= 6
     plan = physical_plan(df)
     scan_lines = [ln for ln in plan.splitlines() if "FileScan" in ln and "postings" in ln]

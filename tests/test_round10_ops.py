@@ -134,11 +134,11 @@ def test_s39_serve_plan_budget_and_pruning(spark, sf_dir, s39):
     from dbt_osmosis_spark.operators.retrieval import _QUERY_TERMS
     from dbt_osmosis_spark.operators.retrieval_ext import (
         _s39_index_path,
-        query_tombstone_postings,
+        query_segmented_postings,
     )
     from dbt_osmosis_spark.plans.audit import exchange_count, partition_filters
 
-    serve = query_tombstone_postings(spark, _s39_index_path(sf_dir), _QUERY_TERMS)
+    serve = query_segmented_postings(spark, _s39_index_path(sf_dir), _QUERY_TERMS)
     assert exchange_count(serve) <= 6
     assert any("tbkt" in f and " IN " in f for f in partition_filters(serve))
 
@@ -151,23 +151,23 @@ def test_s39_double_delete_subtracts_once(spark, sf_dir, s39):
         _S39_MOD,
         _S39_REM,
         _s39_index_path,
-        apply_postings_deletes,
-        query_tombstone_postings,
+        delete_segmented,
+        query_segmented_postings,
     )
     from dbt_osmosis_spark.sources.parquet import read_parquet
 
     path = _s39_index_path(sf_dir)
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    apply_postings_deletes(
+    delete_segmented(
         spark,
         path,
         docs.filter(F.col("doc_id") % _S39_MOD == _S39_REM).select("doc_id"),
         1,
     )
-    again = query_tombstone_postings(spark, path, _QUERY_TERMS).collect()
+    again = query_segmented_postings(spark, path, _QUERY_TERMS).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, s39))
     # and the second batch's stats delta is exactly zero
-    delta = spark.read.parquet(f"{path}/stats/ingest=1000001").collect()
+    delta = spark.read.parquet(f"{path}/stats/part=delete-1").collect()
     assert [(r.n_docs, r.sum_dl) for r in delta] == [(0, 0)]
 
 
@@ -305,8 +305,8 @@ def test_t30_compression_bounds(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_s41_serve_equals_s39_and_uses_s34_plan_budget(spark, sf_dir, s39):
-    """Compaction is a pure layout rewrite: the served results equal the
-    delta-layout serve (s39), while the serve plan drops back to the
+    """Baking is a pure layout rewrite: the served results equal the
+    segmented-layout serve (s39), while the serve plan drops back to the
     CLEAN s34 budget — bucket-pruned scan, no anti-join, 4 exchanges."""
     from dbt_osmosis_spark.operators.retrieval import (
         _QUERY_TERMS,

@@ -51,12 +51,14 @@ def test_q84_cumulative_sums_are_decimal(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # doclen sidecar: deleting a ZERO-TOKEN document must correct n_docs.
-# Before the sidecar, an empty doc had no posting rows, so its delete
-# could not find its dl and n_docs stayed high by one.
+# An empty doc has no posting rows, so its dl is only recoverable from
+# the doc-keyed doclen sidecar the ingest writes.
 # --------------------------------------------------------------------------
 def test_delete_empty_document_corrects_stats(spark):
-    from dbt_osmosis_spark.operators.retrieval import ingest_postings_batch
-    from dbt_osmosis_spark.operators.retrieval_ext import apply_postings_deletes
+    from dbt_osmosis_spark.operators.retrieval_ext import (
+        delete_segmented,
+        ingest_segment,
+    )
 
     path = _scratch("empty-doc-delete")
     shutil.rmtree(path, ignore_errors=True)
@@ -69,15 +71,15 @@ def test_delete_empty_document_corrects_stats(spark):
         ],
         "doc_id bigint, text string",
     )
-    ingest_postings_batch(spark, docs, path, 0)
+    ingest_segment(spark, docs, path, 0)
     # sidecar must record dl=0 for the empty doc
     side = {
         r.doc_id: r.dl
-        for r in spark.read.parquet(f"{path}/doclen").select("doc_id", "dl").collect()
+        for r in spark.read.parquet(f"{path}/seg-0/doclen").select("doc_id", "dl").collect()
     }
     assert side == {1: 3, 2: 0, 3: 3, 4: 1}
     # delete the empty doc AND a normal one
-    apply_postings_deletes(
+    delete_segmented(
         spark, path, spark.createDataFrame([(2,), (4,)], "doc_id bigint"), 0
     )
     n_docs, sum_dl = (
@@ -89,34 +91,16 @@ def test_delete_empty_document_corrects_stats(spark):
     assert (n_docs, sum_dl) == (2, 6)
 
 
-def test_delete_twice_subtracts_once_with_sidecar(spark):
-    from dbt_osmosis_spark.operators.retrieval import ingest_postings_batch
-    from dbt_osmosis_spark.operators.retrieval_ext import apply_postings_deletes
-
-    path = _scratch("double-delete")
-    shutil.rmtree(path, ignore_errors=True)
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, ""), (3, "c")], "doc_id bigint, text string"
-    )
-    ingest_postings_batch(spark, docs, path, 0)
-    gone = spark.createDataFrame([(2,)], "doc_id bigint")
-    apply_postings_deletes(spark, path, gone, 0)
-    apply_postings_deletes(spark, path, gone, 1)  # same doc again
-    n_docs, sum_dl = (
-        spark.read.parquet(f"{path}/stats")
-        .agg(F.sum("n_docs"), F.sum("sum_dl"))
-        .first()
-    )
-    assert (n_docs, sum_dl) == (2, 3)
-
-
 # --------------------------------------------------------------------------
 # serve guard: a freshly-ingested layout with NO delete batch yet must
-# serve (empty tombstone set), not raise PATH_NOT_FOUND.
+# serve (empty tombstone set), not raise PATH_NOT_FOUND — and its empty
+# tombstone relation must not cost a shuffled anti-join per segment.
 # --------------------------------------------------------------------------
 def test_tombstone_serve_without_deletes_dir(spark):
-    from dbt_osmosis_spark.operators.retrieval import ingest_postings_batch
-    from dbt_osmosis_spark.operators.retrieval_ext import query_tombstone_postings
+    from dbt_osmosis_spark.operators.retrieval_ext import (
+        ingest_segment,
+        query_segmented_postings,
+    )
 
     path = _scratch("no-deletes-serve")
     shutil.rmtree(path, ignore_errors=True)
@@ -124,11 +108,43 @@ def test_tombstone_serve_without_deletes_dir(spark):
         [(1, "alpha beta"), (2, "alpha"), (3, "beta beta")],
         "doc_id bigint, text string",
     )
-    ingest_postings_batch(spark, docs, path, 0)
-    out = query_tombstone_postings(
+    ingest_segment(spark, docs, path, 0)
+    out = query_segmented_postings(
         spark, path, (("qx", "alpha"), ("qx", "beta")), k=3
     ).collect()
     assert {r.doc_id for r in out} == {1, 2, 3}
+
+
+def test_delete_free_two_segment_serve_plan_budget(spark):
+    """Without a deletes/ dir the tombstone relation is an in-memory
+    empty relation Spark cannot prove empty; un-hinted, each segment
+    branch planned a shuffled anti-join (13 exchanges for this layout).
+    It is broadcast, so the serve stays within s39's budget of 6."""
+    from dbt_osmosis_spark.operators.retrieval_ext import (
+        ingest_segment,
+        query_segmented_postings,
+    )
+    from dbt_osmosis_spark.plans.audit import exchange_count, physical_plan
+
+    path = _scratch("no-deletes-plan")
+    shutil.rmtree(path, ignore_errors=True)
+    batch = [
+        [(1, "alpha beta"), (2, "alpha"), (3, "beta beta")],
+        [(4, "alpha gamma"), (5, "beta")],
+    ]
+    for seg_id, rows in enumerate(batch):
+        ingest_segment(
+            spark,
+            spark.createDataFrame(rows, "doc_id bigint, text string"),
+            path,
+            seg_id,
+            upsert=False,
+        )
+    assert not os.path.isdir(f"{path}/deletes")
+    serve = query_segmented_postings(spark, path, (("qx", "alpha"), ("qx", "beta")))
+    assert exchange_count(serve) <= 6
+    assert "SortMergeJoin" not in physical_plan(serve)
+    assert {r.doc_id for r in serve.collect()} == {1, 2, 3, 4, 5}
 
 
 # --------------------------------------------------------------------------

@@ -1,10 +1,10 @@
 """Round-14 (optimization round 2) contract tests.
 
 Pins the behavior round-14 optimizations changed internals of:
-- VERDICT r13 item 3: every remaining tombstone broadcast hint is
-  size-gated through the on-disk bound (`_gated_tomb_bcast`), covering
-  the incremental serve (query_tombstone_postings), the delete apply
-  (apply_postings_deletes) and full compaction (compact_postings) —
+- VERDICT r13 item 3: every tombstone broadcast hint is size-gated
+  through the on-disk bound (`_scoped_tombstones`), covering the
+  segmented serve (query_segmented_postings), the delete apply
+  (delete_segmented) and the s34-format bake (bake_postings_index) —
   BHJ below the bound, shuffled join above it, results identical.
 """
 
@@ -14,14 +14,12 @@ import os
 import shutil
 
 from dbt_osmosis_spark.operators import load_all
-from dbt_osmosis_spark.operators.retrieval import (
-    ingest_postings_batch,
-    query_postings_index,
-)
+from dbt_osmosis_spark.operators.retrieval import query_postings_index
 from dbt_osmosis_spark.operators.retrieval_ext import (
-    apply_postings_deletes,
-    compact_postings,
-    query_tombstone_postings,
+    bake_postings_index,
+    delete_segmented,
+    ingest_segment,
+    query_segmented_postings,
 )
 from dbt_osmosis_spark.plans.audit import physical_plan
 
@@ -43,14 +41,14 @@ def _ids(spark, ids):
 
 def _build_layout(spark, path):
     shutil.rmtree(path, ignore_errors=True)
-    ingest_postings_batch(
+    ingest_segment(
         spark,
         _docs(spark, [(1, "alpha beta"), (2, "beta gamma"), (3, "beta beta")]),
         path,
         0,
     )
-    ingest_postings_batch(spark, _docs(spark, [(4, "beta delta")]), path, 1)
-    apply_postings_deletes(spark, path, _ids(spark, [2]), 0)
+    ingest_segment(spark, _docs(spark, [(4, "beta delta")]), path, 1)
+    delete_segmented(spark, path, _ids(spark, [2]), 0)
 
 
 def test_incremental_serve_tombstone_broadcast_is_size_conditional(spark, monkeypatch):
@@ -60,11 +58,11 @@ def test_incremental_serve_tombstone_broadcast_is_size_conditional(spark, monkey
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         monkeypatch.delenv("SPARK_GRAFT_TOMB_BCAST_BYTES", raising=False)
-        small = query_tombstone_postings(spark, path, (("q", "beta"),))
+        small = query_segmented_postings(spark, path, (("q", "beta"),))
         small_plan = physical_plan(small)
         assert "BroadcastHashJoin" in small_plan and "LeftAnti" in small_plan
         monkeypatch.setenv("SPARK_GRAFT_TOMB_BCAST_BYTES", "0")
-        big = query_tombstone_postings(spark, path, (("q", "beta"),))
+        big = query_segmented_postings(spark, path, (("q", "beta"),))
         big_plan = physical_plan(big)
         assert "SortMergeJoin" in big_plan and "LeftAnti" in big_plan
         assert small.collect() == big.collect()
@@ -73,11 +71,11 @@ def test_incremental_serve_tombstone_broadcast_is_size_conditional(spark, monkey
 
 
 def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch):
-    """apply_postings_deletes and compact_postings run their internal
+    """delete_segmented and bake_postings_index run their internal
     tombstone joins; the gate must not change what either writes. Build
     the same layout twice — broadcast-hinted vs gate forced off — and
-    require byte-identical serve results from both the incremental and
-    the compacted layouts."""
+    require byte-identical serve results and stats from the baked
+    layouts."""
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -91,7 +89,7 @@ def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch)
             _build_layout(spark, path)
             out = _scratch(f"r14-tomb-out-{mode}")
             shutil.rmtree(out, ignore_errors=True)
-            compact_postings(spark, path, out)
+            bake_postings_index(spark, path, out)
             serve = query_postings_index(spark, out, (("q", "beta"),))
             stats = spark.read.parquet(f"{out}/stats").collect()
             results[mode] = (serve.collect(), stats)
@@ -99,20 +97,6 @@ def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch)
         assert len(results["bcast"][0]) == 3  # docs 1, 3, 4 survive
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
-def test_legacy_flat_postings_layout_rejected_at_ingest(spark):
-    """ADVICE r13: re-ingesting into a pre-round-13 flat tbkt=<b> layout
-    must fail loud at write time with the migration instruction, not at
-    some later read with CONFLICTING_DIRECTORY_STRUCTURES."""
-    import pytest
-
-    path = _scratch("r14-legacy-layout")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(f"{path}/postings/tbkt=3", exist_ok=True)
-    with pytest.raises(ValueError, match="rebuild required"):
-        ingest_postings_batch(spark, _docs(spark, [(1, "alpha")]), path, 0)
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch):
@@ -124,8 +108,6 @@ def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         _live_segments,
         _segments_with_terms,
-        ingest_segment,
-        query_segmented_postings,
     )
 
     path = _scratch("r14-probe-skip")

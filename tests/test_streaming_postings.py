@@ -1,5 +1,5 @@
 """Continuous postings-index maintenance (streaming/postings.py): the
-streaming twin of s36, with twin equivalence against s31 and the
+streaming twin of s36/s39, with twin equivalence against s31/s39 and the
 exactly-once-by-idempotent-overwrite replay contract exercised."""
 
 from __future__ import annotations
@@ -161,7 +161,6 @@ def test_delete_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     from dbt_osmosis_spark.streaming.postings import (
         serve_postings_live,
         write_batch_deletes,
-        _DELETE_BATCH_NS,
     )
 
     incoming = str(tmp_path / "incoming")
@@ -175,12 +174,12 @@ def test_delete_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     write_batch_deletes(b1, index_dir, 1)
     first = serve_postings_live(spark, index_dir, _QUERY_TERMS).collect()
     stats0 = sorted(
-        map(tuple, spark.read.parquet(f"{index_dir}/stats/batch={_DELETE_BATCH_NS}").collect())
+        map(tuple, spark.read.parquet(f"{index_dir}/stats/part=delete-0").collect())
     )
     write_batch_deletes(b0, index_dir, 0)  # replay batch 0 after batch 1
     again = serve_postings_live(spark, index_dir, _QUERY_TERMS).collect()
     stats0_replay = sorted(
-        map(tuple, spark.read.parquet(f"{index_dir}/stats/batch={_DELETE_BATCH_NS}").collect())
+        map(tuple, spark.read.parquet(f"{index_dir}/stats/part=delete-0").collect())
     )
     assert sorted(map(tuple, again)) == sorted(map(tuple, first))
     assert stats0_replay == stats0
