@@ -489,7 +489,7 @@ def write_catalog_json(manifest: Manifest, spark, path: str | Path) -> dict:
 
     def entry(uid: str, rel: str, schema: str) -> dict | None:
         try:
-            cols = get_columns(spark, rel, use_cache=False)
+            cols = get_columns(spark, rel)
         except Exception:  # noqa: BLE001 - node without a live relation
             return None
         return {

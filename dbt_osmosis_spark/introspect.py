@@ -29,18 +29,15 @@ class ColumnInfo:
     meta: dict = field(default_factory=dict)
 
 
-_COLUMN_CACHE: dict[tuple[int, str], list[ColumnInfo]] = {}
-
-
-def get_columns(spark: SparkSession, relation: str, use_cache: bool = True) -> list[ColumnInfo]:
-    """Ordered columns of a registered relation. Cached per (session,
-    relation) like the reference's warehouse column cache
-    (reference: src/dbt_osmosis/core/introspection.py:99-140)."""
-    key = (id(spark), relation)
-    if use_cache and key in _COLUMN_CACHE:
-        return _COLUMN_CACHE[key]
+def get_columns(spark: SparkSession, relation: str) -> list[ColumnInfo]:
+    """Ordered columns of a registered relation, read from the session's
+    catalog on every call, so a relation re-registered with a new schema
+    is seen at once. The reference caches columns per run
+    (src/dbt_osmosis/core/introspection.py:99-140); here the refactor
+    pipeline shares one read per relation within a pipeline call
+    (``transforms.YamlRefactorContext.db_columns``)."""
     schema = spark.table(relation).schema
-    cols = [
+    return [
         ColumnInfo(
             name=f.name,
             data_type=f.dataType.simpleString(),
@@ -49,12 +46,6 @@ def get_columns(spark: SparkSession, relation: str, use_cache: bool = True) -> l
         )
         for i, f in enumerate(schema.fields)
     ]
-    _COLUMN_CACHE[key] = cols
-    return cols
-
-
-def clear_column_cache() -> None:
-    _COLUMN_CACHE.clear()
 
 
 def generate_catalog(spark: SparkSession, relations: list[str] | None = None) -> dict:
@@ -68,7 +59,7 @@ def generate_catalog(spark: SparkSession, relations: list[str] | None = None) ->
         )
     nodes = {}
     for rel in relations:
-        nodes[rel] = {"columns": [asdict(c) for c in get_columns(spark, rel, use_cache=False)]}
+        nodes[rel] = {"columns": [asdict(c) for c in get_columns(spark, rel)]}
     return {"nodes": nodes}
 
 

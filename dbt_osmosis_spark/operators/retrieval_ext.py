@@ -93,20 +93,30 @@ ORDER BY query_id, rnk
 """
 
 
+_SCRATCH_PATHS: set[str] = set()
+
+
 def _scratch_path(root: str, sf_dir: str, op: str = "") -> str:
     """Per-process scratch directory ``<repo>/<root>/<sf tag>[-op]-<pid>``
     for a registered op's layout. These ops rebuild their layout on
     every call (rmtree + ingest), so two PROCESSES running them against
     the same sf_dir concurrently (e.g. a scale probe next to the test
     suite) would race on rmtree vs read; the pid suffix isolates them,
-    and within one process every reader sees the same path."""
+    and within one process every reader sees the same path. The
+    directory is removed when the interpreter exits."""
+    import atexit
     import os as _os
+    import shutil
 
     repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
     tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
     if op:
         tag = f"{tag}-{op}"
-    return _os.path.join(repo, root, f"{tag}-{_os.getpid()}")
+    path = _os.path.join(repo, root, f"{tag}-{_os.getpid()}")
+    if path not in _SCRATCH_PATHS:
+        _SCRATCH_PATHS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def _s39_index_path(sf_dir: str) -> str:

@@ -405,7 +405,11 @@ def materialize(
                     parts = [parts]
                 writer = writer.partitionBy(*parts)
             writer.parquet(out)
-            df = spark.read.parquet(out)
+            # register the written schema instead of inferring it again (an
+            # extra Spark job) — except for partitioned output, whose read
+            # types partition columns from the directory names (a string
+            # column of digits reads back as int) and must keep doing so
+            df = spark.read.parquet(out) if parts else spark.read.schema(df.schema).parquet(out)
         df.createOrReplaceTempView(rel)
         return RunResult(
             name,

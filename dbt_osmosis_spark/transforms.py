@@ -14,6 +14,12 @@ Spark introspection replacing warehouse adapters:
 
 Metadata is small (thousands of nodes) → driver-side by design; the *data*
 introspected (spark.table(...).schema) is catalog metadata, not rows.
+
+One schema read per node per pipeline call: within one
+``TransformPipeline.__call__`` every step gets a node's live columns from
+the same ``get_columns`` read (``YamlRefactorContext.db_columns``). No
+transform touches Spark, so no relation can change mid-call; the next
+call reads again, so a context reused after a rebuild sees the new schema.
 """
 
 from __future__ import annotations
@@ -46,6 +52,8 @@ class YamlRefactorContext:
     settings: dict = field(default_factory=dict)
     mutated: bool = False
     pm: object = None
+    # node -> live columns read during the current pipeline call
+    _live: dict | None = field(default=None, init=False, repr=False, compare=False)
 
     def __post_init__(self):
         if self.pm is None:
@@ -105,7 +113,13 @@ class YamlRefactorContext:
         return p
 
     def db_columns(self, model_name: str):
-        return get_columns(self.spark, relation_name(model_name), use_cache=False)
+        """Live columns of a model's relation, read once per pipeline call."""
+        if self._live is None:
+            return get_columns(self.spark, relation_name(model_name))
+        cols = self._live.get(model_name)
+        if cols is None:
+            cols = self._live[model_name] = get_columns(self.spark, relation_name(model_name))
+        return cols
 
 
 TransformFn = Callable[[YamlRefactorContext, str], None]
@@ -146,11 +160,15 @@ class TransformPipeline:
             for n in ctx.manifest.topo_sort()
             if ctx.manifest.models[n].materialized != "ephemeral"
         ]
-        for step in self.steps:
-            t0 = time.perf_counter()
-            for n in nodes:
-                step.fn(ctx, n)
-            self.timings.append((step.name, time.perf_counter() - t0))
+        ctx._live = {}
+        try:
+            for step in self.steps:
+                t0 = time.perf_counter()
+                for n in nodes:
+                    step.fn(ctx, n)
+                self.timings.append((step.name, time.perf_counter() - t0))
+        finally:
+            ctx._live = None
 
 
 def _transform(name: str) -> Callable[[TransformFn], Transform]:

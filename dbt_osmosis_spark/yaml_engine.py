@@ -1,12 +1,14 @@
 """Schema-YAML engine (SURVEY M24/M25/M26, simplified).
 
 The reference round-trips YAML with ruamel (comment/format preservation,
-LRU buffer cache with dirty pinning, atomic temp-file writes — reference:
+an LRU buffer cache, atomic temp-file writes — reference:
 src/dbt_osmosis/core/schema/reader.py:34-178, writer.py:118-260,
-parser.py:15-22). ruamel is not available here, so this engine uses pyyaml:
-structure and managed-key partitioning are preserved verbatim; comments are
-NOT (documented limitation — swap the load/dump functions for ruamel when
-present).
+parser.py:15-22). This engine uses PyYAML instead: structure and
+managed-key partitioning are preserved verbatim; comments are NOT
+(documented limitation). Loading and dumping go through libyaml's C
+classes when PyYAML was built with them, and through the pure-Python
+classes otherwise; either way the bytes written are the pure-Python
+emitter's (see ``_dump``), so switching builds never rewrites a file.
 
 Managed top-level keys: {version, models, sources, seeds} — everything else
 in a document is preserved untouched on write (the reference's "partition
@@ -16,46 +18,79 @@ into managed/unmanaged" behavior, parser.py:49-65).
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 from collections import OrderedDict
 from pathlib import Path
 
 import yaml
 
+try:
+    from yaml import CSafeDumper as _Dumper
+    from yaml import CSafeLoader as _Loader
+except ImportError:  # PyYAML built without libyaml
+    from yaml import SafeDumper as _Dumper
+    from yaml import SafeLoader as _Loader
+
 MANAGED_KEYS = ("version", "models", "sources", "seeds")
+
+# where libyaml's text can differ from the pure-Python emitter's (_dump):
+# an escape, an empty mapping key, a line long enough for a 123+ char key
+_LIBYAML_DIVERGES = re.compile(r"\\|'':|^.{123}", re.M)
+
+
+def _load(text: str):
+    return yaml.load(text, Loader=_Loader)
+
+
+def _dump(doc: dict) -> str:
+    """``yaml.safe_dump(doc, sort_keys=False, allow_unicode=True)``, byte
+    for byte, emitted by libyaml where that gives the same bytes.
+
+    libyaml's emitter departs from the pure-Python one in four places:
+    it escapes U+0085 and characters above U+FFFF (Python writes them
+    raw), it folds long double-quoted scalars at spaces (Python ends the
+    line with an escape), it writes an empty mapping key inline (Python
+    as an explicit ``? ''``), and it keeps a mapping key inline up to 128
+    bytes (Python below 123 characters, as it counts the ``!!str`` tag).
+    Its text is kept only when it shows none of them: no backslash (no
+    escape, hence no double-quoted scalar), no ``'':``, no line of 123+
+    characters and, in non-ASCII text, no ``?`` (no key made explicit by
+    its byte count). Anything else is emitted again in Python."""
+    text = yaml.dump(doc, Dumper=_Dumper, sort_keys=False, allow_unicode=True)
+    if _Dumper is yaml.SafeDumper:
+        return text
+    if _LIBYAML_DIVERGES.search(text) or (not text.isascii() and "?" in text):
+        return yaml.safe_dump(doc, sort_keys=False, allow_unicode=True)
+    return text
 
 
 class YamlHandler:
     """Buffer-cached YAML IO with atomic writes.
 
-    Cache semantics follow the reference: a bounded buffer of clean parses;
-    dirty (mutated, unwritten) entries are pinned until committed
-    (reference: schema/reader.py:151-159)."""
+    The buffer holds up to ``max_entries`` parsed documents, least
+    recently used evicted first (reference: schema/reader.py:151-159).
+    ``read`` hands out the cached object itself; ``write`` caches the
+    document it merged."""
 
-    def __init__(self, max_clean: int = 256):
+    def __init__(self, max_entries: int = 256):
         self._cache: OrderedDict[str, dict] = OrderedDict()
-        self._dirty: set[str] = set()
-        self._max_clean = max_clean
+        self._max_entries = max_entries
 
     def read(self, path: str | Path) -> dict:
         key = str(Path(path).resolve())
         if key in self._cache:
             self._cache.move_to_end(key)
             return self._cache[key]
-        doc = yaml.safe_load(Path(path).read_text()) or {}
+        doc = _load(Path(path).read_text()) or {}
         self._put(key, doc)
         return doc
 
     def _put(self, key: str, doc: dict) -> None:
         self._cache[key] = doc
         self._cache.move_to_end(key)
-        clean = [k for k in self._cache if k not in self._dirty]
-        while len(clean) > self._max_clean:
-            evict = clean.pop(0)
-            del self._cache[evict]
-
-    def mark_dirty(self, path: str | Path) -> None:
-        self._dirty.add(str(Path(path).resolve()))
+        if len(self._cache) > self._max_entries:
+            self._cache.popitem(last=False)
 
     def _merge(self, path: str | Path, doc: dict | None) -> tuple[str, dict, str, bool]:
         """(cache key, merged document, its YAML text, whether that text
@@ -73,12 +108,12 @@ class YamlHandler:
         elif doc is cached:
             existing = doc
         else:
-            existing = yaml.safe_load(on_disk) or {}
+            existing = _load(on_disk) or {}
         merged = dict(existing)
         for k in MANAGED_KEYS:
             if k in doc:
                 merged[k] = doc[k]
-        text = yaml.safe_dump(merged, sort_keys=False, allow_unicode=True)
+        text = _dump(merged)
         return key, merged, text, text != on_disk
 
     def changes(self, path: str | Path, doc: dict | None = None) -> bool:
@@ -98,23 +133,13 @@ class YamlHandler:
                 with os.fdopen(fd, "w") as f:
                     f.write(text)
                 # validate the temp file parses before replacing
-                yaml.safe_load(Path(tmp).read_text())
+                _load(Path(tmp).read_text())
                 os.replace(tmp, path)
             finally:
                 if os.path.exists(tmp):
                     os.unlink(tmp)
         self._put(key, merged)
-        self._dirty.discard(key)
         return changed
-
-    def commit_all(self) -> int:
-        """Write every dirty buffer (the reference's commit_yamls);
-        returns how many files changed."""
-        n = 0
-        for key in sorted(self._dirty):
-            n += self.write(key)
-        return n
-
 
 class YamlSyncError(ValueError):
     """Fail-closed sync guard: the document is ambiguous (duplicate

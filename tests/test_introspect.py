@@ -33,3 +33,13 @@ def test_generate_catalog_discovers_views(spark, sf_dir):
     register_testdata(spark, sf_dir)
     cat = generate_catalog(spark)
     assert "lineitem" in cat["nodes"]
+
+
+def test_get_columns_sees_reregistered_relation(spark, sf_dir):
+    """A relation re-registered with an added column reports the new column."""
+    register_testdata(spark, sf_dir)
+    spark.table("region").createOrReplaceTempView("region_live")
+    assert [c.name for c in get_columns(spark, "region_live")] == ["r_regionkey", "r_name"]
+    spark.sql("select *, 1 as r_added from region").createOrReplaceTempView("region_live")
+    assert [c.name for c in get_columns(spark, "region_live")] == ["r_regionkey", "r_name", "r_added"]
+    spark.catalog.dropTempView("region_live")

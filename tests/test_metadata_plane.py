@@ -96,6 +96,121 @@ def test_second_sync_over_unchanged_project_writes_nothing(ctx):
     assert {p: p.stat().st_mtime_ns for p in ymls} == before
 
 
+def _full_pipeline():
+    return (
+        inject_missing_columns
+        >> remove_columns_not_in_database
+        >> inherit_upstream_column_knowledge
+        >> sort_columns_as_in_database
+        >> synchronize_data_types
+    )
+
+
+def test_pipeline_reads_each_live_schema_once(ctx, monkeypatch):
+    """One pipeline call reads each non-ephemeral model's schema exactly
+    once, however many of its steps look at the live columns."""
+    import dbt_osmosis_spark.transforms as transforms
+    from dbt_osmosis_spark.compile import relation_name
+
+    reads = []
+    real = transforms.get_columns
+
+    def counting(spark, relation):
+        reads.append(relation)
+        return real(spark, relation)
+
+    monkeypatch.setattr(transforms, "get_columns", counting)
+    _full_pipeline()(ctx)
+    want = sorted(
+        relation_name(n) for n, m in ctx.manifest.models.items() if m.materialized != "ephemeral"
+    )
+    assert want and sorted(reads) == want
+
+
+def test_reused_context_sees_column_added_between_calls(ctx):
+    """The schema read is shared within one pipeline call only: the next
+    call on the same context picks up a column the relation gained."""
+    from pyspark.sql import functions as F
+
+    from dbt_osmosis_spark.compile import relation_name
+
+    _full_pipeline()(ctx)
+    assert "added_col" not in ctx.columns_of["customers"]
+    rel = relation_name("customers")
+    original = ctx.spark.table(rel)
+    original.withColumn("added_col", F.lit(1)).createOrReplaceTempView(rel)
+    try:
+        _full_pipeline()(ctx)
+    finally:
+        original.createOrReplaceTempView(rel)
+    assert list(ctx.columns_of["customers"])[-1] == "added_col"
+
+
+_AWKWARD_STRINGS = [
+    "x" * 200,
+    "word " * 60,
+    "a" * 80 + "\n" + "b " * 60,
+    "line one\nline two\n",
+    "line one\n\nline two",
+    "ends with space \nnext",
+    "  leading",
+    "trailing  ",
+    "it's \"quoted\"",
+    "back\\slash",
+    "",
+    " ",
+    "héllo wörld ✓ 日本語",
+    "emoji 😀 outside the BMP",
+    "next\x85line",
+    "line\u2028separator",
+    "tab\there",
+    "yes",
+    "no",
+    "on",
+    "0123",
+    "1e3",
+    "null",
+    "~",
+    "2020-01-01",
+    "key: value",
+    "- item",
+    "# not a comment",
+    "? not a key",
+]
+
+
+def test_yaml_handler_writes_pure_python_emitter_bytes(ctx, tmp_path):
+    """Whatever emitter backs YamlHandler, the bytes it writes are
+    ``yaml.safe_dump(..., sort_keys=False, allow_unicode=True)``'s: on the
+    repo's YAML, on a refactor pass's output, and on awkward strings and
+    mapping keys either side of the emitters' inline-key limits."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    texts = [(repo / d).glob("**/*.yml") for d in ("demo_spark", "demo_dbt")]
+    texts = [p.read_text() for group in texts for p in group]
+    _full_pipeline()(ctx)
+    sync_to_yaml(ctx)
+    texts += [p.read_text() for p in Path(ctx.project_dir).rglob("*.yml")]
+    docs = [d for d in map(pyyaml.safe_load, texts) if isinstance(d, dict)]
+    docs += [
+        {"version": 2, "models": [{"name": "m", "description": s, "columns": [{"name": s, "meta": {s: [s]}}]}]}
+        for s in _AWKWARD_STRINGS
+    ]
+    docs += [
+        {"version": 2, "models": [{"name": "m", "meta": {ch * n: ch}}]}
+        for ch in ("k", "é", "日")
+        for n in range(38, 132)
+    ]
+    h = YamlHandler()
+    for i, doc in enumerate(docs):
+        path = tmp_path / f"doc{i}.yml"
+        # an existing file, so the merge keeps the document's key order
+        path.write_text(pyyaml.safe_dump(doc, sort_keys=False))
+        h.write(path, doc)
+        assert path.read_text() == pyyaml.safe_dump(doc, sort_keys=False, allow_unicode=True), i
+
+
 def test_inheritance_propagates_descriptions(ctx):
     # document customer_id at the staging layer, then inherit into the mart
     inject_missing_columns(ctx)

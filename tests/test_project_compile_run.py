@@ -401,3 +401,34 @@ def test_source_selector_prefix(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown source"):
         m.select(["source:nope.nothing"])
+
+
+def test_table_readback_matches_inferred_schema(spark, sf_dir, tmp_path):
+    """A materialized table is registered with the schema and rows a
+    schema-inferring parquet read of its output gives, partitioned or not
+    (a partition column of digit strings reads back as int)."""
+    proj = tmp_path / "proj"
+    (proj / "models").mkdir(parents=True)
+    (proj / "project.yml").write_text("name: readback\n")
+    (proj / "sources.yml").write_text(
+        "sources:\n- name: tpch\n  tables:\n"
+        f"  - name: orders\n    path: {sf_dir}/orders.parquet\n"
+    )
+    select = (
+        "select o_orderkey, o_orderstatus, o_totalprice, o_orderdate, "
+        "cast(o_orderkey % 3 as int) as o_bucket, cast(o_orderkey % 2 as string) as o_parity, "
+        "1 as one from {{ source('tpch', 'orders') }}"
+    )
+    (proj / "models" / "orders_flat.sql").write_text(
+        "{{ config(materialized='table') }}\n" + select
+    )
+    (proj / "models" / "orders_part.sql").write_text(
+        "{{ config(materialized='table', partition_by=['o_orderstatus', 'o_bucket', 'o_parity']) }}\n" + select
+    )
+    wh = tmp_path / "wh"
+    materialize(spark, load_project(proj), warehouse_dir=str(wh))
+    for name in ("orders_flat", "orders_part"):
+        registered = spark.table(name)
+        inferred = spark.read.parquet(str(wh / f"{name}.parquet"))
+        assert registered.schema == inferred.schema, name
+        assert sorted(registered.collect()) == sorted(inferred.collect()), name

@@ -506,3 +506,30 @@ def test_s38_serve_scan_prunes_to_probed_term_buckets(spark, sf_dir):
     # one scan of documents is the BUILD job; the returned (serve) plan
     # must not contain any
     assert not serve_scans, serve_scans
+
+
+def test_scratch_layout_removed_at_interpreter_exit():
+    """A layout directory handed out by ``_scratch_path`` is gone once the
+    process that asked for it exits."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import os\n"
+        "from dbt_osmosis_spark.operators.retrieval_ext import _scratch_path\n"
+        "p = _scratch_path('.postings_tiered', 'sf-exit-probe', 'probe')\n"
+        "os.makedirs(os.path.join(p, 'seg=0'))\n"
+        "open(os.path.join(p, 'seg=0', 'part.parquet'), 'w').close()\n"
+        "assert _scratch_path('.postings_tiered', 'sf-exit-probe', 'probe') == p\n"
+        "print(p)\n"
+    )
+    repo = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr
+    path = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(path).startswith("sf-exit-probe-probe-")
+    assert not os.path.exists(path)
