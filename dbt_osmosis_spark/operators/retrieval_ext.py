@@ -546,8 +546,8 @@ def s43_phrase_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A production deployment swaps segments atomically via a manifest;
 # here the registered op is sequential so directory renames suffice.
 
-def _s44_layout_path(sf_dir: str) -> str:
-    return _scratch_path(".postings_tiered", sf_dir)
+def _s44_layout_path(sf_dir: str, op: str = "") -> str:
+    return _scratch_path(".postings_tiered", sf_dir, op)
 
 
 def _seg_id(seg: str) -> int:
@@ -1746,8 +1746,8 @@ ORDER BY phrase_id, rnk
 """
 
 
-def _s47_layout_path(sf_dir: str) -> str:
-    return _scratch_path(".positional_tiered", sf_dir)
+def _s47_layout_path(sf_dir: str, op: str = "") -> str:
+    return _scratch_path(".positional_tiered", sf_dir, op)
 
 
 def ingest_positional_segment(
@@ -1958,7 +1958,7 @@ def s48_bm25_maintained_positional(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir) + "-bm"
+    path = _s47_layout_path(sf_dir, "bm")
     shutil.rmtree(path, ignore_errors=True)
     # guide §2.6: disjoint slices into disjoint segment dirs — upsert is
     # a provable no-op, ingests submitted concurrently (s47's rationale)
@@ -2094,7 +2094,7 @@ def s49_reingest_upsert_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir) + "-up"
+    path = _s47_layout_path(sf_dir, "up")
     shutil.rmtree(path, ignore_errors=True)
     # guide §2.6: the two BASE loads are disjoint slices (%10 <8 / >=8)
     # into disjoint segment dirs — upsert is a provable no-op for them,

@@ -78,7 +78,7 @@ def s52_termset_segment_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir) + "-ts"
+    path = _s47_layout_path(sf_dir, "ts")
     shutil.rmtree(path, ignore_errors=True)
     hi = docs.agg(F.max("doc_id")).first()[0]
     span = hi // _S52_SEGMENTS + 1
@@ -134,7 +134,7 @@ def s53_time_travel_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir) + "-tt"
+    path = _s47_layout_path(sf_dir, "tt")
     shutil.rmtree(path, ignore_errors=True)
     # guide §2.6: disjoint base slices, disjoint segment dirs — upsert
     # is a provable no-op for the base loads, ingests run concurrently

@@ -78,8 +78,8 @@ _S54_EMPTY = (
 )
 
 
-def _s54_layout_path(sf_dir: str) -> str:
-    return _scratch_path(".vector_segments", sf_dir)
+def _s54_layout_path(sf_dir: str, op: str = "") -> str:
+    return _scratch_path(".vector_segments", sf_dir, op)
 
 
 def ingest_vector_segment(
@@ -411,7 +411,7 @@ def s55_vector_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     emb = _s54_emb(spark, sf_dir)
-    path = _s54_layout_path(sf_dir) + "-rt"
+    path = _s54_layout_path(sf_dir, "rt")
     shutil.rmtree(path, ignore_errors=True)
     base = emb.filter(F.col("doc_id") % 10 < 8)
     lloyd_train(base).write.mode("overwrite").parquet(f"{path}/centroids")

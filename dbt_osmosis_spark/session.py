@@ -17,37 +17,8 @@ Scale notes (100 TB design intent, tested on local[N]):
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import SparkSession
-
-
-def _ensure_protobuf() -> None:
-    """Make ``google.protobuf`` importable from the vendored runtime
-    (``vendor/google/protobuf``, see vendor/google/protobuf/VENDORED.md)
-    when no installed copy exists.
-
-    transformWithState's Python worker speaks protobuf to the JVM state
-    server; this container has no pip-installed protobuf.  The vendor dir
-    is APPENDED to sys.path so an installed protobuf always wins, and
-    PYTHONPATH is extended BEFORE the JVM launches so executor-side Python
-    workers (forked from the daemon, which inherits the driver's env) see
-    the same package.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendor = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor")
-    if not os.path.isdir(os.path.join(vendor, "google", "protobuf")):
-        return
-    if vendor not in sys.path:
-        sys.path.append(vendor)
-    pp = os.environ.get("PYTHONPATH", "")
-    if vendor not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pp + (os.pathsep if pp else "") + vendor
 
 
 def get_spark(
@@ -61,7 +32,6 @@ def get_spark(
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    _ensure_protobuf()  # before the JVM forks: workers inherit PYTHONPATH
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -289,70 +289,6 @@ def run_merge_to_files(
     q.awaitTermination()
 
 
-def tws_user_totals(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """Per-user running totals on the transformWithState API (Spark 4) —
-    the successor to applyInPandasWithState (running_user_totals above is
-    the same logic on the legacy API).
-
-    Why it matters at scale: TWS state is SCHEMA'D and TYPED inside the
-    state store (not an opaque pickled tuple), supports per-state TTL
-    (`ttl_ms` — state for idle keys is evicted by the store itself, no
-    timeout bookkeeping in user code), multiple independent state
-    variables per key, and timers. State stays one tiny row per user,
-    hash-partitioned across executors; each key's updates are serial so
-    plain float accumulation is deterministic.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    # TWS requires the RocksDB state store: its typed state variables are
-    # column families, which the default HDFSBackedStateStoreProvider
-    # rejects outright (STATE_STORE_MULTIPLE_COLUMN_FAMILIES). RocksDB is
-    # also the provider a 100 TB deployment wants — state lives off-heap
-    # and spills to disk instead of competing with executor heap.
-    #
-    # The conf is session-level and read at query START, so it must be in
-    # place before .start(); it is only switched when the session still
-    # runs the DEFAULT provider — an explicit user-set provider is left
-    # alone (and TWS will fail loudly against HDFS, which beats silently
-    # flipping the provider under queries whose checkpoints were written
-    # by it: a checkpoint is only readable by the provider that wrote it).
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    _key = "spark.sql.streaming.stateStore.providerClass"
-    _default = (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    )
-    if events.sparkSession.conf.get(_key, _default) == _default:
-        events.sparkSession.conf.set(_key, _ROCKSDB)
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            ttl = ttl_ms if ttl_ms and ttl_ms > 0 else None
-            self._agg = handle.getValueState("agg", "n long, total double", ttl)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def distinct_accrual_stream(events: DataFrame, reach: int = 3) -> DataFrame:
     """Streaming twin of q56_distinct_accrual: per-user running distinct
     event-type count, with the timestamp at which each user first reached
@@ -475,11 +411,11 @@ def click_attribution_outer(
 def event_transition_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of q60's transition matrix input: per-user
     FIRST-ORDER TRANSITIONS (prev_type -> next_type) emitted as raw rows,
-    via transformWithState keyed by user. State per user is one tiny row:
-    the (timestamp, type) of the user's latest event — the minimal state
-    any order-1 Markov feed needs, and the part a windowed aggregation
-    cannot express (the previous event may be arbitrarily far in the
-    past, outside any watermark-bounded window).
+    via applyInPandasWithState keyed by user. State per user is one tiny
+    row: the (timestamp, type) of the user's latest event — the minimal
+    state any order-1 Markov feed needs, and the part a windowed
+    aggregation cannot express (the previous event may be arbitrarily far
+    in the past, outside any watermark-bounded window).
 
     Rows are replayed in (ts, event_id) order WITHIN each micro-batch;
     across batches the carried last-event state makes the boundary
@@ -491,61 +427,42 @@ def event_transition_stream(events: DataFrame) -> DataFrame:
     stream-to-serving split.
     """
     import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    session = events.sparkSession
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    _key = "spark.sql.streaming.stateStore.providerClass"
-    _default = (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    )
-    if session.conf.get(_key, _default) == _default:
-        session.conf.set(_key, _ROCKSDB)
-
-    class Transitions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last", "last_us long, last_type string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            last_us, last_type = (
-                self._last.get() if self._last.exists() else (None, None)
+    def update(key, pdfs, state: GroupState):
+        last_us, last_type = state.get if state.exists else (None, None)
+        prevs, nexts, uss = [], [], []
+        # A user's batch rows arrive as MULTIPLE Arrow chunks in
+        # arbitrary order (maxRecordsPerBatch splits, shuffle order);
+        # sorting per-chunk would interleave event time across chunk
+        # boundaries. Concat-then-sort (the distinct_accrual_stream
+        # precedent) restores one total (ts, event_id) order per batch.
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
+        for ts, et in zip(batch["ts"], batch["event_type"]):
+            us = int(ts.value // 1_000)
+            if last_type is not None:
+                prevs.append(last_type)
+                nexts.append(et)
+                uss.append(us)
+            last_us, last_type = us, et
+        state.update((last_us, last_type))
+        if prevs:
+            yield pd.DataFrame(
+                {
+                    "user_id": [key[0]] * len(prevs),
+                    "prev_type": prevs,
+                    "next_type": nexts,
+                    "ts": [pd.Timestamp(u * 1_000) for u in uss],
+                }
             )
-            prevs, nexts, uss = [], [], []
-            # A user's batch rows arrive as MULTIPLE Arrow chunks in
-            # arbitrary order (maxRecordsPerBatch splits, shuffle order);
-            # sorting per-chunk would interleave event time across chunk
-            # boundaries. Concat-then-sort (the distinct_accrual_stream
-            # precedent) restores one total (ts, event_id) order per batch.
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
-            for ts, et in zip(batch["ts"], batch["event_type"]):
-                us = int(ts.value // 1_000)
-                if last_type is not None:
-                    prevs.append(last_type)
-                    nexts.append(et)
-                    uss.append(us)
-                last_us, last_type = us, et
-            self._last.update((last_us, last_type))
-            if prevs:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(prevs),
-                        "prev_type": prevs,
-                        "next_type": nexts,
-                        "ts": [pd.Timestamp(u * 1_000) for u in uss],
-                    }
-                )
 
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Transitions(),
+    return events.groupBy("user_id").applyInPandasWithState(
+        update,
         outputStructType="user_id long, prev_type string, next_type string, ts timestamp",
-        outputMode="Append",
-        timeMode="None",
+        stateStructType="last_us long, last_type string",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

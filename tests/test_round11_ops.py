@@ -5,7 +5,6 @@ the serve-path guard for delete-free layouts."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -14,11 +13,6 @@ from pyspark.sql import functions as F
 from dbt_osmosis_spark.operators import QUERIES, load_all
 
 load_all()
-
-
-def _scratch(name: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo, ".test_scratch", f"{name}-{os.getpid()}")
 
 
 # --------------------------------------------------------------------------
@@ -54,14 +48,13 @@ def test_q84_cumulative_sums_are_decimal(spark, sf_dir):
 # An empty doc has no posting rows, so its dl is only recoverable from
 # the doc-keyed doclen sidecar the ingest writes.
 # --------------------------------------------------------------------------
-def test_delete_empty_document_corrects_stats(spark):
+def test_delete_empty_document_corrects_stats(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         delete_segmented,
         ingest_segment,
     )
 
-    path = _scratch("empty-doc-delete")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "empty-doc-delete")
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma"),
@@ -96,14 +89,13 @@ def test_delete_empty_document_corrects_stats(spark):
 # serve (empty tombstone set), not raise PATH_NOT_FOUND — and its empty
 # tombstone relation must not cost a shuffled anti-join per segment.
 # --------------------------------------------------------------------------
-def test_tombstone_serve_without_deletes_dir(spark):
+def test_tombstone_serve_without_deletes_dir(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         ingest_segment,
         query_segmented_postings,
     )
 
-    path = _scratch("no-deletes-serve")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "no-deletes-serve")
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha"), (3, "beta beta")],
         "doc_id bigint, text string",
@@ -115,7 +107,7 @@ def test_tombstone_serve_without_deletes_dir(spark):
     assert {r.doc_id for r in out} == {1, 2, 3}
 
 
-def test_delete_free_two_segment_serve_plan_budget(spark):
+def test_delete_free_two_segment_serve_plan_budget(spark, tmp_path):
     """Without a deletes/ dir the tombstone relation is an in-memory
     empty relation Spark cannot prove empty; un-hinted, each segment
     branch planned a shuffled anti-join (13 exchanges for this layout).
@@ -126,8 +118,7 @@ def test_delete_free_two_segment_serve_plan_budget(spark):
     )
     from dbt_osmosis_spark.plans.audit import exchange_count, physical_plan
 
-    path = _scratch("no-deletes-plan")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "no-deletes-plan")
     batch = [
         [(1, "alpha beta"), (2, "alpha"), (3, "beta beta")],
         [(4, "alpha gamma"), (5, "beta")],
@@ -226,7 +217,7 @@ def _s44_lifecycle(spark, sf_dir):
     from dbt_osmosis_spark.sources.parquet import read_parquet, spread
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s44_layout_path(sf_dir) + "-t"
+    path = _s44_layout_path(sf_dir, "t")
     shutil.rmtree(path, ignore_errors=True)
     ingest_segment(spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0)
     ingest_segment(spark, docs.filter(F.col("doc_id") % 10 == 8), path, 1)
@@ -586,7 +577,7 @@ def test_s48_serve_plan_pruned_bounded_no_corpus(spark, sf_dir):
     )
 
     QUERIES["s48_bm25_maintained_positional"](spark, sf_dir).collect()
-    path = _s47_layout_path(sf_dir) + "-bm"
+    path = _s47_layout_path(sf_dir, "bm")
     serve = query_bm25_segmented(spark, path, _QUERY_TERMS)
     assert not has_cartesian(serve)
     pf = partition_filters(serve)
@@ -596,9 +587,7 @@ def test_s48_serve_plan_pruned_bounded_no_corpus(spark, sf_dir):
     assert exchange_count(serve) <= 10
 
 
-def test_s48_without_deletes_equals_s45(spark, sf_dir):
-    import shutil
-
+def test_s48_without_deletes_equals_s45(spark, sf_dir, tmp_path):
     from dbt_osmosis_spark.operators.retrieval import _QUERY_TERMS
     from dbt_osmosis_spark.operators.retrieval_ext import (
         ingest_positional_segment,
@@ -607,8 +596,7 @@ def test_s48_without_deletes_equals_s45(spark, sf_dir):
     from dbt_osmosis_spark.sources.parquet import read_parquet, spread
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _scratch("s48-nodel")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "s48-nodel")
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 2 == 0), path, 0)
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 2 == 1), path, 1)
     a = [tuple(r) for r in query_bm25_segmented(spark, path, _QUERY_TERMS).collect()]
@@ -617,7 +605,7 @@ def test_s48_without_deletes_equals_s45(spark, sf_dir):
 
 
 @pytest.mark.lifecycle_soak  # sibling: test_round12b_ops.test_sloppy_segmented_equals_monolithic_live (default, same segmented==monolithic contract)
-def test_proximity_segmented_matches_monolithic_on_live_corpus(spark, sf_dir):
+def test_proximity_segmented_matches_monolithic_on_live_corpus(spark, sf_dir, tmp_path):
     """The final matrix cell: proximity over the maintained layout ==
     proximity over a fresh monolithic build of the live corpus."""
     from dbt_osmosis_spark.operators.retrieval_ext import (
@@ -642,7 +630,7 @@ def test_proximity_segmented_matches_monolithic_on_live_corpus(spark, sf_dir):
     ]
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     live = docs.filter(F.col("doc_id") % _S47_MOD != _S47_REM)
-    ref = _scratch("prox-ref")
+    ref = str(tmp_path / "prox-ref")
     write_positional_index(spark, live, ref)
     want = [
         tuple(r)

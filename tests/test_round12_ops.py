@@ -8,19 +8,12 @@ All four ADVICE r11 items and VERDICT r11 items 2-3 are pinned here."""
 from __future__ import annotations
 
 import pytest
-import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from dbt_osmosis_spark.operators import QUERIES, load_all
 
 load_all()
-
-
-def _scratch(name: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo, ".test_scratch", f"{name}-{os.getpid()}")
 
 
 def _stats(spark, path):
@@ -48,14 +41,13 @@ def _mini(spark):
 # update: re-ingesting a revised doc supersedes the old version — the
 # old text stops serving, the new text serves, stats stay exact.
 # --------------------------------------------------------------------------
-def test_upsert_update_supersedes_old_version(spark):
+def test_upsert_update_supersedes_old_version(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         ingest_positional_segment,
         query_phrase_segmented,
     )
 
-    path = _scratch("upsert-update")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "upsert-update")
     ingest_positional_segment(spark, _mini(spark), path, 0)
     assert _stats(spark, path) == (4, 9)
     rev = spark.createDataFrame(
@@ -74,15 +66,14 @@ def test_upsert_update_supersedes_old_version(spark):
 # re-add: delete, then re-ingest a new version — it serves again
 # (VERDICT r11 item 2's headline case), and stats are exact throughout.
 # --------------------------------------------------------------------------
-def test_delete_then_reingest_readds_doc(spark):
+def test_delete_then_reingest_readds_doc(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         delete_segmented,
         ingest_positional_segment,
         query_bm25_segmented,
     )
 
-    path = _scratch("readd")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "readd")
     ingest_positional_segment(spark, _mini(spark), path, 0)
     delete_segmented(spark, path, spark.createDataFrame([(2,)], "doc_id bigint"), 0)
     assert _stats(spark, path) == (3, 7)
@@ -106,14 +97,13 @@ def test_delete_then_reingest_readds_doc(spark):
 # --------------------------------------------------------------------------
 # double-delete still subtracts once under the generation-scoped scheme.
 # --------------------------------------------------------------------------
-def test_segmented_double_delete_subtracts_once(spark):
+def test_segmented_double_delete_subtracts_once(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         delete_segmented,
         ingest_positional_segment,
     )
 
-    path = _scratch("seg-double-delete")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "seg-double-delete")
     ingest_positional_segment(spark, _mini(spark), path, 0)
     gone = spark.createDataFrame([(3,)], "doc_id bigint")
     delete_segmented(spark, path, gone, 0)
@@ -126,15 +116,14 @@ def test_segmented_double_delete_subtracts_once(spark):
 # defined — it kills nothing, subtracts zero, and the later ingest
 # serves with exact stats (out-of-order streams).
 # --------------------------------------------------------------------------
-def test_delete_before_ingest_is_defined(spark):
+def test_delete_before_ingest_is_defined(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         delete_segmented,
         ingest_positional_segment,
         query_bm25_segmented,
     )
 
-    path = _scratch("delete-first")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "delete-first")
     delete_segmented(spark, path, spark.createDataFrame([(1,)], "doc_id bigint"), 0)
     assert _stats(spark, path) == (0, 0)
     ingest_positional_segment(spark, _mini(spark), path, 0)
@@ -150,7 +139,7 @@ def test_delete_before_ingest_is_defined(spark):
 # ADVICE r11 (low): every segmented serve on a NOT-YET-INGESTED layout
 # returns empty instead of raising.
 # --------------------------------------------------------------------------
-def test_empty_layout_serves_empty(spark):
+def test_empty_layout_serves_empty(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         query_bm25_segmented,
         query_phrase_segmented,
@@ -158,8 +147,7 @@ def test_empty_layout_serves_empty(spark):
         query_segmented_postings,
     )
 
-    path = _scratch("empty-layout")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "empty-layout")
     assert query_segmented_postings(spark, path, (("q", "alpha"),)).count() == 0
     assert query_bm25_segmented(spark, path, (("q", "alpha"),)).count() == 0
     assert query_phrase_segmented(spark, path, (("p", ("a", "b")),), 5).count() == 0
@@ -174,7 +162,7 @@ def test_empty_layout_serves_empty(spark):
 # Previously-deleted docs stay dead; the new delete works; stats exact.
 # --------------------------------------------------------------------------
 @pytest.mark.lifecycle_soak  # sibling: test_round13_opt.test_pinned_snapshot_tombstones_survive_delete_id_reuse (default)
-def test_delete_id_reuse_after_compaction_safe(spark):
+def test_delete_id_reuse_after_compaction_safe(spark, tmp_path):
     from dbt_osmosis_spark.operators.retrieval_ext import (
         compact_segments,
         delete_segmented,
@@ -182,8 +170,7 @@ def test_delete_id_reuse_after_compaction_safe(spark):
         query_bm25_segmented,
     )
 
-    path = _scratch("id-reuse")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "id-reuse")
     ingest_positional_segment(spark, _mini(spark), path, 0)
     ingest_positional_segment(
         spark,
@@ -277,7 +264,7 @@ def test_s49_compaction_never_resurfaces_old_versions(spark, sf_dir):
     )
 
     QUERIES["s49_reingest_upsert_serve"](spark, sf_dir).collect()
-    path = _s47_layout_path(sf_dir) + "-up"
+    path = _s47_layout_path(sf_dir, "up")
     before = [
         tuple(r) for r in query_bm25_segmented(spark, path, _QUERY_TERMS).collect()
     ]
@@ -288,7 +275,7 @@ def test_s49_compaction_never_resurfaces_old_versions(spark, sf_dir):
     assert before == after
 
 
-def test_s49_phrase_serve_sees_revisions_not_originals(spark):
+def test_s49_phrase_serve_sees_revisions_not_originals(spark, tmp_path):
     """The revised text's phrases serve; the superseded version's
     phrases do not — checked via the positional phrase path on a corpus
     where both versions contain distinguishable phrases."""
@@ -298,8 +285,7 @@ def test_s49_phrase_serve_sees_revisions_not_originals(spark):
         query_phrase_segmented,
     )
 
-    path = _scratch("s49-phrases")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "s49-phrases")
     v1 = spark.createDataFrame(
         [(1, "old phrase here"), (2, "stable doc")], "doc_id bigint, text string"
     )
@@ -384,14 +370,13 @@ def test_s50_s51_plans_pruned_bounded_no_corpus(spark, sf_dir):
 # s51 equality against a direct computation: a 4-doc corpus small enough
 # to BM25 by hand (python floats, same integer-micros quantization).
 # --------------------------------------------------------------------------
-def test_s51_matches_direct_python_bm25(spark):
+def test_s51_matches_direct_python_bm25(spark, tmp_path):
     import math
 
     from dbt_osmosis_spark.operators.retrieval_ext import write_positional_index
     from dbt_osmosis_spark.operators.retrieval_ext2 import query_bm25_phrases
 
-    path = _scratch("s51-direct")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "s51-direct")
     rows = [
         (1, "big data big data pipeline"),
         (2, "big data lake"),

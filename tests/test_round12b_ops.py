@@ -28,11 +28,6 @@ load_all()
 _Q = (("q1", "beta"),)
 
 
-def _scratch(name: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo, ".test_scratch", f"{name}-{os.getpid()}")
-
-
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
@@ -44,7 +39,6 @@ def _docs(spark, rows):
 def _vocab_layout(spark, path):
     """Three segments with controlled vocabularies: only seg-0 contains
     'beta'; seg-1 and seg-2 are disjoint from the query."""
-    shutil.rmtree(path, ignore_errors=True)
     ingest_positional_segment(
         spark, _docs(spark, [(1, "alpha beta beta"), (2, "beta alpha")]), path, 0
     )
@@ -54,8 +48,8 @@ def _vocab_layout(spark, path):
     ingest_positional_segment(spark, _docs(spark, [(5, "gamma epsilon")]), path, 2)
 
 
-def test_termset_pruning_selects_only_matching_segments(spark):
-    path = _scratch("ts-prune")
+def test_termset_pruning_selects_only_matching_segments(spark, tmp_path):
+    path = str(tmp_path / "ts-prune")
     _vocab_layout(spark, path)
     segs = _live_segments(path)
     assert segs == ["seg-0", "seg-1", "seg-2"]
@@ -66,21 +60,29 @@ def test_termset_pruning_selects_only_matching_segments(spark):
     assert query_bm25_segmented(spark, path, (("q", "zzz"),)).count() == 0
 
 
-def test_termset_pruned_serve_reads_no_termfree_segment_files(spark):
+def test_termset_pruned_serve_reads_no_termfree_segment_files(spark, tmp_path):
     from dbt_osmosis_spark.plans.audit import physical_plan
 
-    path = _scratch("ts-plan")
+    path = str(tmp_path / "ts-plan")
     _vocab_layout(spark, path)
     serve = query_bm25_segmented(spark, path, _Q)
-    plan = physical_plan(serve)
+    # scan locations print cut to this many characters; print them whole
+    # so the segment names below stay visible under any tmp_path
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = physical_plan(serve)
+    finally:
+        spark.conf.set(key, prev)
     assert "/seg-0/" in plan  # the one segment holding 'beta'
     assert "/seg-1/" not in plan and "/seg-2/" not in plan
 
 
-def test_termset_pruning_is_pure_optimization(spark):
+def test_termset_pruning_is_pure_optimization(spark, tmp_path):
     """Removing the sidecars (pre-round-12 layout) disables pruning but
     never changes the answer."""
-    path = _scratch("ts-equal")
+    path = str(tmp_path / "ts-equal")
     _vocab_layout(spark, path)
     pruned = query_bm25_segmented(spark, path, _Q).collect()
     for s in _live_segments(path):
@@ -89,8 +91,8 @@ def test_termset_pruning_is_pure_optimization(spark):
     assert pruned == unpruned and len(pruned) > 0
 
 
-def test_compacted_segment_carries_termset(spark):
-    path = _scratch("ts-compact")
+def test_compacted_segment_carries_termset(spark, tmp_path):
+    path = str(tmp_path / "ts-compact")
     _vocab_layout(spark, path)
     compact_segments(spark, path)  # merges the two smaller segments
     segs = _live_segments(path)
@@ -103,9 +105,8 @@ def test_compacted_segment_carries_termset(spark):
 # s53: checkpoint manifests pin segments AND tombstones AND stats — later
 # activity is invisible to a pinned serve.
 # --------------------------------------------------------------------------
-def test_checkpoint_pin_ignores_later_activity(spark):
-    path = _scratch("tt-pin")
-    shutil.rmtree(path, ignore_errors=True)
+def test_checkpoint_pin_ignores_later_activity(spark, tmp_path):
+    path = str(tmp_path / "tt-pin")
     ingest_positional_segment(
         spark,
         _docs(spark, [(1, "alpha beta"), (2, "beta beta gamma"), (3, "alpha")]),
@@ -136,7 +137,7 @@ def test_checkpoint_pin_ignores_later_activity(spark):
     assert now[1] != {r.doc_id: r.score_micros for r in snapshot}[1]
 
 
-def test_s53_pointer_view_serves_final_state(spark, sf_dir):
+def test_s53_pointer_view_serves_final_state(spark, sf_dir, tmp_path):
     """After the registered s53 lifecycle (checkpoint + revision upsert +
     second delete + compaction), the POINTER view equals a from-scratch
     maintained build over the final corpus state."""
@@ -151,7 +152,7 @@ def test_s53_pointer_view_serves_final_state(spark, sf_dir):
     from dbt_osmosis_spark.sources.parquet import read_parquet
 
     QUERIES["s53_time_travel_serve"](spark, sf_dir).collect()
-    path = _s47_layout_path(sf_dir) + "-tt"
+    path = _s47_layout_path(sf_dir, "tt")
     pointer = query_bm25_segmented(spark, path, _QUERY_TERMS).collect()
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
@@ -165,15 +166,13 @@ def test_s53_pointer_view_serves_final_state(spark, sf_dir):
         .filter(F.expr(_S53_REVISED) | (F.col("doc_id") % 7 != 2))
         .filter(F.col("doc_id") % _S53_DEL2_MOD != _S53_DEL2_REM)
     )
-    fresh = _scratch("tt-fresh")
-    shutil.rmtree(fresh, ignore_errors=True)
+    fresh = str(tmp_path / "tt-fresh")
     ingest_positional_segment(spark, final, fresh, 0, upsert=False)
     assert pointer == query_bm25_segmented(spark, fresh, _QUERY_TERMS).collect()
 
 
-def test_vacuum_drops_pinned_history_but_not_pointer_view(spark):
-    path = _scratch("tt-vacuum")
-    shutil.rmtree(path, ignore_errors=True)
+def test_vacuum_drops_pinned_history_but_not_pointer_view(spark, tmp_path):
+    path = str(tmp_path / "tt-vacuum")
     ingest_positional_segment(
         spark, _docs(spark, [(1, "alpha beta"), (2, "beta gamma")]), path, 0
     )
@@ -283,7 +282,7 @@ def test_s54_lifecycle_liveness(spark, sf_dir):
 # round-12b closures: sloppy phrases on the maintained layout, manifest
 # pins for the phrase query class, vector-layout compaction invariance.
 # --------------------------------------------------------------------------
-def test_sloppy_segmented_equals_monolithic_live(spark, sf_dir):
+def test_sloppy_segmented_equals_monolithic_live(spark, sf_dir, tmp_path):
     """n-term sloppy phrases over the maintained layout == the s50
     monolithic serve over the live corpus."""
     from dbt_osmosis_spark.operators.retrieval_ext2 import (
@@ -296,25 +295,22 @@ def test_sloppy_segmented_equals_monolithic_live(spark, sf_dir):
     from dbt_osmosis_spark.sources.parquet import read_parquet
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    path = _scratch("sloppy-seg")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "sloppy-seg")
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0)
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 10 >= 8), path, 1)
     delete_segmented(spark, path, docs.filter(F.col("doc_id") % 7 == 2).select("doc_id"), 0)
     got = query_sloppy_phrase_segmented(spark, path, _S50_QUERIES, _S50_K).collect()
 
-    mono = _scratch("sloppy-mono")
-    shutil.rmtree(mono, ignore_errors=True)
+    mono = str(tmp_path / "sloppy-mono")
     write_positional_index(spark, docs.filter(F.col("doc_id") % 7 != 2), mono)
     assert got == query_sloppy_phrase_index(spark, mono, _S50_QUERIES, _S50_K).collect()
 
 
-def test_phrase_serve_pins_to_checkpoint(spark):
+def test_phrase_serve_pins_to_checkpoint(spark, tmp_path):
     """The mgen pin works for the phrase query class too, not just BM25."""
     from dbt_osmosis_spark.operators.retrieval_ext import query_phrase_segmented
 
-    path = _scratch("tt-phrase")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "tt-phrase")
     ingest_positional_segment(
         spark,
         _docs(spark, [(1, "alpha beta alpha beta"), (2, "alpha beta"), (3, "beta")]),
@@ -358,7 +354,7 @@ def test_vector_layout_compaction_and_vacuum_invariant(spark, sf_dir):
     assert query_vectors_segmented(spark, path, queries, cents).collect() == before
 
 
-def test_bm25_phrases_segmented_equals_monolithic_live(spark, sf_dir):
+def test_bm25_phrases_segmented_equals_monolithic_live(spark, sf_dir, tmp_path):
     """BM25-weighted phrases over the maintained layout == the s51
     monolithic serve over the live corpus (the last cell of the
     layout x query-class matrix)."""
@@ -372,8 +368,7 @@ def test_bm25_phrases_segmented_equals_monolithic_live(spark, sf_dir):
     from dbt_osmosis_spark.sources.parquet import read_parquet
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    path = _scratch("bm25p-seg")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "bm25p-seg")
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0)
     ingest_positional_segment(spark, docs.filter(F.col("doc_id") % 10 >= 8), path, 1)
     delete_segmented(
@@ -381,8 +376,7 @@ def test_bm25_phrases_segmented_equals_monolithic_live(spark, sf_dir):
     )
     got = query_bm25_phrases_segmented(spark, path, _S51_PHRASES, _S51_K).collect()
 
-    mono = _scratch("bm25p-mono")
-    shutil.rmtree(mono, ignore_errors=True)
+    mono = str(tmp_path / "bm25p-mono")
     write_positional_index(spark, docs.filter(F.col("doc_id") % 7 != 2), mono)
     assert got == query_bm25_phrases(spark, mono, _S51_PHRASES, _S51_K).collect()
     assert len(got) > 0

@@ -17,7 +17,6 @@ Pins the behavior the r13 optimizations changed internals of:
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -38,11 +37,6 @@ from dbt_osmosis_spark.plans.audit import physical_plan
 load_all()
 
 
-def _scratch(name: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo, ".test_scratch", f"{name}-{os.getpid()}")
-
-
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
@@ -55,9 +49,8 @@ def _ids(spark, ids):
 # termset from the in-flight relation: content must equal the written
 # segment's physical term dictionary (the read-back derivation it replaced).
 # --------------------------------------------------------------------------
-def test_termset_sidecar_equals_written_postings_terms(spark):
-    path = _scratch("r13-ts-eq")
-    shutil.rmtree(path, ignore_errors=True)
+def test_termset_sidecar_equals_written_postings_terms(spark, tmp_path):
+    path = str(tmp_path / "r13-ts-eq")
     ingest_segment(spark, _docs(spark, [(1, "alpha beta beta"), (2, "beta gamma")]), path, 0)
     ingest_positional_segment(spark, _docs(spark, [(3, "delta delta epsilon")]), path, 1)
     for seg in _live_segments(path):
@@ -74,9 +67,8 @@ def test_termset_sidecar_equals_written_postings_terms(spark):
         assert sidecar == written and len(sidecar) > 0
 
 
-def test_compacted_termset_equals_written_postings_terms(spark):
-    path = _scratch("r13-ts-compact")
-    shutil.rmtree(path, ignore_errors=True)
+def test_compacted_termset_equals_written_postings_terms(spark, tmp_path):
+    path = str(tmp_path / "r13-ts-compact")
     # seg-0 must be the size-tiered BASE (largest on disk): at toy scale
     # per-file parquet overhead rivals data bytes, so make its data
     # unambiguously dominate rather than assume 3 tiny docs outweigh 1.
@@ -113,9 +105,8 @@ def test_compacted_termset_equals_written_postings_terms(spark):
 # empty-relation writes: all-tombstoned compaction and empty micro-batch
 # ingest complete and leave a readable, serveable layout (ADVICE r12).
 # --------------------------------------------------------------------------
-def test_compaction_with_every_merged_row_tombstoned_completes(spark):
-    path = _scratch("r13-empty-compact")
-    shutil.rmtree(path, ignore_errors=True)
+def test_compaction_with_every_merged_row_tombstoned_completes(spark, tmp_path):
+    path = str(tmp_path / "r13-empty-compact")
     # seg-0 is the (largest) base; seg-1/seg-2 merge and are fully dead
     ingest_positional_segment(
         spark,
@@ -137,9 +128,8 @@ def test_compaction_with_every_merged_row_tombstoned_completes(spark):
     assert query_bm25_segmented(spark, path, (("q", "kappa"),)).count() == 0
 
 
-def test_empty_micro_batch_ingest_leaves_readable_layout(spark):
-    path = _scratch("r13-empty-ingest")
-    shutil.rmtree(path, ignore_errors=True)
+def test_empty_micro_batch_ingest_leaves_readable_layout(spark, tmp_path):
+    path = str(tmp_path / "r13-empty-ingest")
     ingest_positional_segment(spark, _docs(spark, [(1, "alpha beta")]), path, 0)
     ingest_positional_segment(spark, _docs(spark, []), path, 1)  # empty batch
     ingest_segment(spark, _docs(spark, []), path, 2)  # empty bag-of-words batch
@@ -153,9 +143,8 @@ def test_empty_micro_batch_ingest_leaves_readable_layout(spark):
 # anti-join even with auto-broadcast off; above it the un-hinted plan
 # degrades to a shuffled (sort-merge) anti-join. Results identical.
 # --------------------------------------------------------------------------
-def test_tombstone_broadcast_is_size_conditional(spark, monkeypatch):
-    path = _scratch("r13-tomb-bcast")
-    shutil.rmtree(path, ignore_errors=True)
+def test_tombstone_broadcast_is_size_conditional(spark, monkeypatch, tmp_path):
+    path = str(tmp_path / "r13-tomb-bcast")
     ingest_positional_segment(
         spark, _docs(spark, [(1, "alpha beta"), (2, "beta gamma"), (3, "beta")]), path, 0
     )
@@ -182,9 +171,8 @@ def test_tombstone_broadcast_is_size_conditional(spark, monkeypatch):
 # stream reusing id 0 lands in a bumped epoch and the pinned snapshot's
 # tombstones stay immutable.
 # --------------------------------------------------------------------------
-def test_pinned_snapshot_tombstones_survive_delete_id_reuse(spark):
-    path = _scratch("r13-pin-reuse")
-    shutil.rmtree(path, ignore_errors=True)
+def test_pinned_snapshot_tombstones_survive_delete_id_reuse(spark, tmp_path):
+    path = str(tmp_path / "r13-pin-reuse")
     ingest_positional_segment(
         spark,
         _docs(spark, [(1, "alpha beta"), (2, "beta gamma"), (3, "beta delta")]),
@@ -213,17 +201,15 @@ def test_pinned_snapshot_tombstones_survive_delete_id_reuse(spark):
 # --------------------------------------------------------------------------
 # ADVICE r12: empty-layout checkpoint + pinned-empty stats guards.
 # --------------------------------------------------------------------------
-def test_checkpoint_on_never_ingested_layout(spark):
-    path = _scratch("r13-ckpt-empty")
-    shutil.rmtree(path, ignore_errors=True)
+def test_checkpoint_on_never_ingested_layout(spark, tmp_path):
+    path = str(tmp_path / "r13-ckpt-empty")
     gen = checkpoint_manifest(path)  # directory did not exist
     assert gen == 1
     assert query_bm25_segmented(spark, path, (("q", "beta"),), mgen=gen).count() == 0
 
 
-def test_stats_agg_on_pinned_empty_manifest_is_zero_not_null(spark):
-    path = _scratch("r13-stats-empty")
-    shutil.rmtree(path, ignore_errors=True)
+def test_stats_agg_on_pinned_empty_manifest_is_zero_not_null(spark, tmp_path):
+    path = str(tmp_path / "r13-stats-empty")
     gen = checkpoint_manifest(path)
     row = _stats_agg(spark, path, mgen=gen).collect()[0]
     assert row.n_docs == 0 and row.avgdl is None
@@ -234,8 +220,7 @@ def test_stats_agg_on_pinned_empty_manifest_is_zero_not_null(spark):
     assert row.n_docs == 0 and row.avgdl is None
 
 
-def test_scoped_tombstones_empty_layout_unhinted_schema(spark):
-    path = _scratch("r13-tombs-empty")
-    shutil.rmtree(path, ignore_errors=True)
+def test_scoped_tombstones_empty_layout_unhinted_schema(spark, tmp_path):
+    path = str(tmp_path / "r13-tombs-empty")
     t = _scoped_tombstones(spark, path)
     assert t.columns == ["doc_id", "gen"] and t.count() == 0

@@ -10,9 +10,6 @@ Pins the behavior round-14 optimizations changed internals of:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from dbt_osmosis_spark.operators import load_all
 from dbt_osmosis_spark.operators.retrieval import query_postings_index
 from dbt_osmosis_spark.operators.retrieval_ext import (
@@ -26,11 +23,6 @@ from dbt_osmosis_spark.plans.audit import physical_plan
 load_all()
 
 
-def _scratch(name: str) -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo, ".test_scratch", f"{name}-{os.getpid()}")
-
-
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
@@ -40,7 +32,6 @@ def _ids(spark, ids):
 
 
 def _build_layout(spark, path):
-    shutil.rmtree(path, ignore_errors=True)
     ingest_segment(
         spark,
         _docs(spark, [(1, "alpha beta"), (2, "beta gamma"), (3, "beta beta")]),
@@ -51,8 +42,10 @@ def _build_layout(spark, path):
     delete_segmented(spark, path, _ids(spark, [2]), 0)
 
 
-def test_incremental_serve_tombstone_broadcast_is_size_conditional(spark, monkeypatch):
-    path = _scratch("r14-tomb-incr")
+def test_incremental_serve_tombstone_broadcast_is_size_conditional(
+    spark, monkeypatch, tmp_path
+):
+    path = str(tmp_path / "r14-tomb-incr")
     _build_layout(spark, path)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -70,7 +63,9 @@ def test_incremental_serve_tombstone_broadcast_is_size_conditional(spark, monkey
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
 
-def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch):
+def test_delete_apply_and_compaction_gated_results_identical(
+    spark, monkeypatch, tmp_path
+):
     """delete_segmented and bake_postings_index run their internal
     tombstone joins; the gate must not change what either writes. Build
     the same layout twice — broadcast-hinted vs gate forced off — and
@@ -85,10 +80,9 @@ def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch)
                 monkeypatch.delenv("SPARK_GRAFT_TOMB_BCAST_BYTES", raising=False)
             else:
                 monkeypatch.setenv("SPARK_GRAFT_TOMB_BCAST_BYTES", "0")
-            path = _scratch(f"r14-tomb-compact-{mode}")
+            path = str(tmp_path / f"r14-tomb-compact-{mode}")
             _build_layout(spark, path)
-            out = _scratch(f"r14-tomb-out-{mode}")
-            shutil.rmtree(out, ignore_errors=True)
+            out = str(tmp_path / f"r14-tomb-out-{mode}")
             bake_postings_index(spark, path, out)
             serve = query_postings_index(spark, out, (("q", "beta"),))
             stats = spark.read.parquet(f"{out}/stats").collect()
@@ -99,7 +93,7 @@ def test_delete_apply_and_compaction_gated_results_identical(spark, monkeypatch)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
 
-def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch):
+def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch, tmp_path):
     """Round 14: with fewer live segments than
     $SPARK_GRAFT_TERMSET_PROBE_MIN_SEGS (default 3) the termset probe
     job is skipped — _segments_with_terms returns the segments unchanged
@@ -110,8 +104,7 @@ def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch):
         _segments_with_terms,
     )
 
-    path = _scratch("r14-probe-skip")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "r14-probe-skip")
     ingest_segment(spark, _docs(spark, [(1, "alpha beta"), (2, "alpha")]), path, 0,
                    upsert=False)
     ingest_segment(spark, _docs(spark, [(3, "gamma")]), path, 1, upsert=False)
@@ -126,20 +119,17 @@ def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch):
     assert _segments_with_terms(spark, path, segs, ["beta"]) == ["seg-0"]
     probed = query_segmented_postings(spark, path, (("q", "beta"),)).collect()
     assert skipped == probed and len(probed) == 1
-    shutil.rmtree(path, ignore_errors=True)
 
 
-def test_upsert_supersede_sinks_empty_without_prior_segments(spark):
+def test_upsert_supersede_sinks_empty_without_prior_segments(spark, tmp_path):
     """The supersede builder degenerates to (no sinks, no-op cleanup) on
     a fresh layout — the overlapped submission adds no work to a first
     ingest."""
     from dbt_osmosis_spark.operators.retrieval_ext import _upsert_supersede_sinks
 
-    path = _scratch("r14-supersede-empty")
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "r14-supersede-empty")
     sinks, cleanup = _upsert_supersede_sinks(
         spark, _docs(spark, [(1, "alpha")]), path, 0
     )
     assert sinks == []
     cleanup()  # must be callable and harmless
-    shutil.rmtree(path, ignore_errors=True)

@@ -192,71 +192,39 @@ def test_foreach_batch_merge_upsert(spark, sf_dir, tmp_path):
     assert after.filter(F.col("event_id") == first.event_id).first().value == 123456.0
 
 
-def _protobuf_available() -> bool:
-    # transformWithState's Python worker speaks protobuf to the JVM state
-    # server; without google.protobuf the query cannot start. The vendored
-    # runtime (vendor/google/protobuf) fills in when none is installed.
-    from dbt_osmosis_spark.session import _ensure_protobuf
+def test_get_spark_adds_no_vendor_import_path(spark):
+    """Session start must not put a vendored package directory on this
+    process's import path or on the PYTHONPATH the Python workers inherit."""
+    import os
+    import sys
 
-    _ensure_protobuf()
+    pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    vendor = [
+        p
+        for p in sys.path + pythonpath
+        if p and os.path.basename(os.path.normpath(p)) == "vendor"
+    ]
+    assert vendor == []
+
+
+def test_stream_plan_build_leaves_state_store_provider_unset(spark, sf_dir):
+    """Building a stateful stream's plan must not switch the session's
+    state-store provider: a checkpoint is only readable by the provider
+    that wrote it, so a plan-time switch would leak into every later
+    checkpointed stream in the process."""
+    from dbt_osmosis_spark.streaming.events import event_transition_stream
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.unset(key)
     try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState needs google.protobuf (no installed or "
-    "vendored runtime found); the same semantics are covered by "
-    "test_stateful_running_totals_match_batch on the legacy API",
-)
-def test_transform_with_state_matches_batch_twin(spark, sf_dir):
-    """transformWithState running totals: after draining the backlog the
-    final per-user state must equal the batch groupBy — and agree with the
-    legacy applyInPandasWithState operator's semantics."""
-    from dbt_osmosis_spark.sources.parquet import read_parquet
-    from dbt_osmosis_spark.streaming.events import (
-        run_to_memory,
-        stream_events,
-        tws_user_totals,
-    )
-
-    stream = stream_events(spark, sf_dir).select("user_id", "value")
-    run_to_memory(tws_user_totals(stream), "tws_out", output_mode="update")
-    # update mode re-emits a user on every batch it appears in: keep the
-    # final (max n_events) emission per user
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            "select user_id, max_by(n_events, n_events) n_events,"
-            " max_by(total_value, n_events) total_value from tws_out group by user_id"
-        ).collect()
-    }
-    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    want = {
-        r.user_id: (r.n, r.t)
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    assert set(got) == set(want) and len(got) > 0
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert got[u][1] == pytest.approx(want[u][1], rel=1e-9)
-
-
-def test_transform_with_state_plan_builds(spark, sf_dir):
-    """The TWS operator's unstarted plan builds everywhere (protobuf is
-    only needed once the query starts): output schema is declared and the
-    node appears in the logical plan."""
-    from dbt_osmosis_spark.streaming.events import stream_events, tws_user_totals
-
-    df = tws_user_totals(stream_events(spark, sf_dir).select("user_id", "value"))
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == ["user_id", "n_events", "total_value"]
+        stream = stream_events(spark, sf_dir).select(
+            "user_id", "event_id", "ts", "event_type"
+        )
+        df = event_transition_stream(stream)
+        assert df.isStreaming
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.unset(key)
 
 
 def test_streaming_phash_dedup_bounded_state(spark, sf_dir, tmp_path):
