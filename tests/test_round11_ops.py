@@ -660,3 +660,190 @@ def test_t32_curve_monotone_and_consistent(spark, sf_dir):
         r.n_tokens for r in QUERIES["t30_bpe_encode"](spark, sf_dir).collect()
     )
     assert rows[8].n_tokens == t30_total
+
+
+# --------------------------------------------------------------------------
+# Segmented serve plan budgets: the exact shuffle-exchange count of each
+# maintained-layout serve and the number of ``retrieval_ext.read_layout``
+# calls one serve build makes (termset probe, per-segment scans,
+# tombstones, doclen, stats). Any change to either is a change to the
+# serve's physical plan or to its driver-side reads.
+# --------------------------------------------------------------------------
+def _copied_layout(spark, sf_dir, tmp_path_factory, entry, op):
+    """Run a registered lifecycle entry and copy its layout aside, so the
+    served layout is immune to later rebuilds or compactions of the
+    entry's shared scratch path."""
+    import shutil
+
+    from dbt_osmosis_spark.operators.retrieval_ext import _s47_layout_path
+
+    QUERIES[entry](spark, sf_dir).collect()
+    dst = str(tmp_path_factory.mktemp(entry) / "layout")
+    shutil.copytree(_s47_layout_path(sf_dir, op), dst)
+    return dst
+
+
+@pytest.fixture(scope="module")
+def s47_layout(spark, sf_dir, tmp_path_factory):
+    return _copied_layout(spark, sf_dir, tmp_path_factory, "s47_positional_lifecycle", "")
+
+
+@pytest.fixture(scope="module")
+def s53_layout(spark, sf_dir, tmp_path_factory):
+    return _copied_layout(spark, sf_dir, tmp_path_factory, "s53_time_travel_serve", "tt")
+
+
+def _budget(monkeypatch, build):
+    """(shuffle exchanges, read_layout calls) of one serve build."""
+    from dbt_osmosis_spark.operators import retrieval_ext
+    from dbt_osmosis_spark.plans.audit import exchange_count
+
+    real = retrieval_ext.read_layout
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(retrieval_ext, "read_layout", counting)
+    serve = build()
+    monkeypatch.setattr(retrieval_ext, "read_layout", real)
+    return exchange_count(serve), len(calls)
+
+
+# read_layout calls on the s47 layout (3 segments, one delete batch): 3
+# termset probes + 3 postings + 1 tombstones; scorers that read dl and
+# stats add 3 doclen + 1 stats.
+def test_phrase_segmented_plan_budget(spark, s47_layout, monkeypatch):
+    from dbt_osmosis_spark.operators.retrieval_ext import (
+        _S42_K,
+        _S42_PHRASES,
+        query_phrase_segmented,
+    )
+
+    assert _budget(
+        monkeypatch,
+        lambda: query_phrase_segmented(spark, s47_layout, _S42_PHRASES, _S42_K),
+    ) == (6, 7)
+
+
+def test_proximity_segmented_plan_budget(spark, s47_layout, monkeypatch):
+    from dbt_osmosis_spark.operators.retrieval_ext import (
+        _S46_K,
+        _S46_QUERIES,
+        query_proximity_segmented,
+    )
+
+    assert _budget(
+        monkeypatch,
+        lambda: query_proximity_segmented(spark, s47_layout, _S46_QUERIES, _S46_K),
+    ) == (6, 7)
+
+
+def test_sloppy_phrase_segmented_plan_budget(spark, s47_layout, monkeypatch):
+    from dbt_osmosis_spark.operators.retrieval_ext2 import (
+        _S50_K,
+        _S50_QUERIES,
+        query_sloppy_phrase_segmented,
+    )
+
+    assert _budget(
+        monkeypatch,
+        lambda: query_sloppy_phrase_segmented(spark, s47_layout, _S50_QUERIES, _S50_K),
+    ) == (11, 7)
+
+
+def test_bm25_phrases_segmented_plan_budget(spark, s47_layout, monkeypatch):
+    from dbt_osmosis_spark.operators.retrieval_ext2 import (
+        _S51_K,
+        _S51_PHRASES,
+        query_bm25_phrases_segmented,
+    )
+
+    assert _budget(
+        monkeypatch,
+        lambda: query_bm25_phrases_segmented(spark, s47_layout, _S51_PHRASES, _S51_K),
+    ) == (11, 11)
+
+
+def test_pinned_bm25_segmented_plan_budget(spark, s53_layout, monkeypatch):
+    from dbt_osmosis_spark.operators.retrieval import _QUERY_TERMS
+    from dbt_osmosis_spark.operators.retrieval_ext import query_bm25_segmented
+
+    # s53 checkpoints once (generation 1, two segments: below the termset
+    # probe bound) before its upsert, second delete and compaction: 2
+    # postings + 2 doclen + 1 tombstones + 1 stats
+    assert _budget(
+        monkeypatch,
+        lambda: query_bm25_segmented(spark, s53_layout, _QUERY_TERMS, mgen=1),
+    ) == (8, 6)
+
+
+# --------------------------------------------------------------------------
+# Empty-result contract: every segmented serve answers an empty frame of
+# its own result schema when no segment can hold a query term — on a
+# never-ingested layout, and on a layout whose termset sidecars prune
+# every segment (three segments, so the termset probe runs).
+# --------------------------------------------------------------------------
+def _serve_cases():
+    from dbt_osmosis_spark.operators import retrieval_ext as R
+    from dbt_osmosis_spark.operators import retrieval_ext2 as R2
+
+    terms = (("q", "alpha"), ("q", "beta"))
+    return {
+        "bag_of_words": (
+            R.ingest_segment,
+            lambda s, p: R.query_segmented_postings(s, p, terms),
+            "query_id:string rnk:bigint doc_id:bigint score_micros:bigint",
+        ),
+        "bm25": (
+            R.ingest_positional_segment,
+            lambda s, p: R.query_bm25_segmented(s, p, terms),
+            "query_id:string rnk:bigint doc_id:bigint score_micros:bigint",
+        ),
+        "phrase": (
+            R.ingest_positional_segment,
+            lambda s, p: R.query_phrase_segmented(s, p, (("p", ("alpha", "beta")),), 5),
+            "phrase_id:string rnk:bigint doc_id:bigint n_matches:bigint",
+        ),
+        "proximity": (
+            R.ingest_positional_segment,
+            lambda s, p: R.query_proximity_segmented(s, p, (("n", "alpha", "beta", 2),), 5),
+            "prox_id:string rnk:bigint doc_id:bigint n_matches:bigint",
+        ),
+        "sloppy": (
+            R.ingest_positional_segment,
+            lambda s, p: R2.query_sloppy_phrase_segmented(
+                s, p, (("s", ("alpha", "beta"), 1),), 5
+            ),
+            "sp_id:string rnk:bigint doc_id:bigint n_matches:bigint",
+        ),
+        "bm25_phrase": (
+            R.ingest_positional_segment,
+            lambda s, p: R2.query_bm25_phrases_segmented(s, p, (("p", ("alpha", "beta")),), 5),
+            "phrase_id:string rnk:bigint doc_id:bigint score_micros:bigint",
+        ),
+    }
+
+
+@pytest.mark.parametrize("layout", ["never_ingested", "all_segments_pruned"])
+@pytest.mark.parametrize(
+    "serve", ["bag_of_words", "bm25", "phrase", "proximity", "sloppy", "bm25_phrase"]
+)
+def test_segmented_serve_empty_result_contract(spark, tmp_path, serve, layout):
+    ingest, query, schema = _serve_cases()[serve]
+    path = str(tmp_path / "layout")
+    if layout == "all_segments_pruned":
+        for seg_id, rows in enumerate(
+            [[(1, "gamma delta")], [(2, "delta")], [(3, "epsilon gamma")]]
+        ):
+            ingest(
+                spark,
+                spark.createDataFrame(rows, "doc_id bigint, text string"),
+                path,
+                seg_id,
+                upsert=False,
+            )
+    out = query(spark, path)
+    assert " ".join(f"{f.name}:{f.dataType.simpleString()}" for f in out.schema) == schema
+    assert out.count() == 0
