@@ -40,7 +40,7 @@ from pyspark.sql.window import Window as W
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.caching import keep_cached
 from dbt_osmosis_spark.operators.sinks import run_sinks
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import read_parquet, spread
 
 _K = 5  # top-k per query
 _BUCKETS = 32  # two-phase rank fan-in
@@ -377,28 +377,52 @@ ORDER BY query_id, rnk
 """
 
 
-def _bm25_scores(
-    docs: DataFrame, stats: DataFrame, qterms: DataFrame, terms: list[str]
+def _bm25_tail(
+    tf: DataFrame,
+    qterms: DataFrame,
+    stats: DataFrame,
+    k: int | None = None,
+    *,
+    dl: DataFrame | None = None,
+    df: bool = True,
 ) -> DataFrame:
-    """(query_id, doc_id, score_micros): one BM25 pass for a (tiny)
-    (query_id, term) relation whose distinct terms are the LITERAL
-    ``terms`` list. Round 14 (guide §2.4): the pruned tf relation is the
-    map-side _pruned_tf fold — the r13 semi-join broadcast build, the
-    term-distinct shuffle, the (doc, term) groupBy exchange and the
-    tf⋈dl doc_id join are all gone (dl rides the fold); df is computed
-    on the cached pruned tf exactly as before. tf feeds BOTH df and the
-    contribution join; cached so the corpus pass behind it runs once per
-    pass — it is pruned-postings-sized, not corpus-sized."""
-    tf = keep_cached(_pruned_tf(docs, terms))
-    df_rel = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        tf.join(F.broadcast(df_rel), "term")
-        .join(F.broadcast(qterms), "term")
+    """The one BM25 scorer: (query_id, doc_id, score_micros) from a
+    (term, doc_id, tf[, dl][, df]) relation, or its two-phase top-``k``
+    when ``k`` is given. Joins, in this order: df (derived from ``tf``'s
+    own rows unless ``df=False`` says the rows carry it), the doc-keyed
+    ``dl`` relation when given, the broadcast (query_id, term) relation,
+    then the one-row (n_docs, avgdl) stats. Every contribution is
+    quantized to integer micros before the per-(query, doc) sum."""
+    if df:
+        tf = tf.join(
+            F.broadcast(
+                tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+            ),
+            "term",
+        )
+    if dl is not None:
+        tf = tf.join(dl, "doc_id")
+    scores = (
+        tf.join(F.broadcast(qterms), "term")
         .crossJoin(F.broadcast(stats))
         .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").cast("bigint").alias("score_micros"))
     )
+    if k is None:
+        return scores
+    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
+
+
+def _bm25_scores(
+    docs: DataFrame, stats: DataFrame, qterms: DataFrame, terms: list[str]
+) -> DataFrame:
+    """(query_id, doc_id, score_micros): one BM25 pass over the corpus for
+    a (tiny) (query_id, term) relation whose distinct terms are the
+    LITERAL ``terms`` list. tf is the map-side ``_pruned_tf`` fold (dl
+    rides it), cached because it feeds both df and the contribution
+    join; it is pruned-postings-sized, not corpus-sized."""
+    return _bm25_tail(keep_cached(_pruned_tf(docs, terms)), qterms, stats)
 
 
 @register("s32_prf_expansion", oracle=_S32_ORACLE)
@@ -803,27 +827,14 @@ def write_postings_index(spark: SparkSession, docs: DataFrame, path: str) -> Non
 def query_postings_index(
     spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K
 ) -> DataFrame:
-    """Serve a query batch from the persisted layout: the scan lists ONLY
-    the buckets the batch's terms hash into (isin on the partition column
-    -> static pruning) and pushes the term IN-list to the parquet reader;
-    scoring joins the broadcast query/stats relations and ranks two-phase."""
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
+    """Serve a query batch from the persisted layout: the monolithic
+    reader's bucket-pruned, term-pushed scan and stats row, scored by the
+    BM25 tail with the df baked into the rows."""
+    from dbt_osmosis_spark.operators.retrieval_ext import _index_read
+
     qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-    stats = read_layout(spark, path, "stats")
-    postings = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    scores = (
-        postings.join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
+    postings, _, stats = _index_read(spark, path, (t for _, t in query_terms), stats=True)
+    return _bm25_tail(postings, qterms, stats, k, df=False)
 
 
 @register("s34_postings_index_serve", oracle=_S31_ORACLE)
@@ -1144,21 +1155,9 @@ def _s36_index_path(sf_dir: str) -> str:
 def _build_s36_layout(spark: SparkSession, docs: DataFrame, path: str) -> None:
     """Rebuild ``path`` as the corpus in two segments: 80% of docs
     (doc_id % 5 != 0), then the remaining 20%."""
-    import shutil
+    from dbt_osmosis_spark.operators.retrieval_ext import _ingest_slices, ingest_segment
 
-    from dbt_osmosis_spark.operators.retrieval_ext import ingest_segment
-
-    shutil.rmtree(path, ignore_errors=True)
-    # the two doc slices are disjoint, so the upsert supersede pass is a
-    # provable no-op: skipped, and the two segment writes run concurrently
-    run_sinks(
-        lambda: ingest_segment(
-            spark, docs.filter(F.col("doc_id") % 5 != 0), path, 0, upsert=False
-        ),
-        lambda: ingest_segment(
-            spark, docs.filter(F.col("doc_id") % 5 == 0), path, 1, upsert=False
-        ),
-    )
+    _ingest_slices(spark, ingest_segment, docs, path, "doc_id % 5 <> 0", "doc_id % 5 = 0")
 
 
 @register("s36_postings_incremental_serve", oracle=_S31_ORACLE)
@@ -1354,20 +1353,16 @@ def s37_qld_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s38_qld_postings_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the s37 query batch from the s34 postings index: pruned
     bucket scan, serve-side cf/kq derivation, identical QLD scores."""
+    from dbt_osmosis_spark.operators.retrieval_ext import _index_read
+
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s34_index_path(sf_dir)
     write_postings_index(spark, docs, path)
-    probes = sorted({_s34_tbkt_py(t) for _, t in _QUERY_TERMS})
-    terms = sorted({t for _, t in _QUERY_TERMS})
     qterms = spark.createDataFrame(
         list(_QUERY_TERMS), "query_id string, term string"
     )
-    stats = read_layout(spark, path, "stats").select("c_tot")
-    postings = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
+    postings, _, stats = _index_read(spark, path, (t for _, t in _QUERY_TERMS), stats=True)
+    stats = stats.select("c_tot")
     cf = postings.groupBy("term").agg(F.sum("tf").cast("bigint").alias("cf"))
     kq = (
         qterms.join(F.broadcast(cf), "term")

@@ -1,18 +1,41 @@
-"""Lexical retrieval, part 2: index maintenance + the positional layout.
+"""Lexical retrieval, part 2: the maintained segmented index and the
+positional layout.
 
-Module map (each section carries its own design comment):
-- s39  tombstone deletes: s36's two segments plus one delete batch
-- s41  the live segments baked into the s34 format (df in the rows)
-- s42  phrase search (one-shot, no index)
-- s43  persisted positional-postings layout + phrase serve
-- s44  the segmented-index core: immutable segments, generation-scoped
-       tombstones, manifest-published tiered compaction, checkpoint,
-       vacuum, and the segment-union BM25 serve
-- s45  unified serve: BM25 FROM the positional layout
-- s46  proximity (sloppy-phrase) search over the positional layout
-- s47  maintainable positional index (segments + deletes + serve)
-- s49  update/re-add: generation-scoped tombstones + upsert ingest,
-       manifest-published non-destructive compaction
+Registered entries: s39 (tombstone deletes), s41 (bake the live segments
+into the s34 format), s42 (one-shot phrase search), s43/s45/s46 (phrase,
+BM25 and proximity serves from the monolithic positional layout) and
+s44/s47/s48/s49 (segmented-index lifecycles).
+
+Two persisted layouts, each with ONE reader:
+- monolithic (``write_positional_index``; the s34 postings index has
+  the same shape): ``postings/tbkt=*``, ``doclen``, one-row ``stats``.
+  ``_index_read`` returns its bucket-pruned, term-pushed postings scan
+  and, when the scorer needs them, doclen and stats.
+- segmented (``ingest_segment`` / ``ingest_positional_segment``):
+  immutable ``seg-<id>`` segments, each with ``postings/tbkt=*``,
+  ``doclen`` and a ``termset`` sidecar; generation-scoped tombstones
+  under ``deletes/delete=<k>``; additive stats deltas under
+  ``stats/part=*``; manifests that publish compactions and checkpoints.
+  ``_segmented_read`` returns the live, tombstone-filtered relations.
+
+Each query class has ONE scorer over the reader's relations: BM25
+(``retrieval._bm25_tail``), exact phrase (``_phrase_match_counts``),
+proximity (``_proximity_match_counts``), sloppy phrase
+(``_sloppy_match_counts``) and BM25-phrase
+(``retrieval_ext2._bm25_phrase_rank``). Each public ``query_*`` serve is
+a reader call plus a scorer call; the monolithic serves are the
+reference the maintained index is tested against.
+
+Segmented-layout invariants:
+- each document lives wholly in one segment, and a tombstone (doc_id,
+  gen) kills the doc in every segment whose id is <= gen, so a later
+  re-ingest (a higher segment id) serves the new version;
+- a segment whose termset sidecar holds none of the query terms is never
+  listed; pruning never changes an answer (sidecar-less segments are
+  always kept);
+- ``mgen=None`` serves the current manifest's view; ``mgen=G`` serves
+  exactly manifest G's segments, tombstone partitions and stats
+  partitions, which stay on disk until ``vacuum_segments``.
 
 Reference parity: the reference ships SQL to a warehouse
 (src/dbt_osmosis/core/sql_operations.py:69); the index-maintenance
@@ -20,6 +43,9 @@ surface is engine-side functionality this repo adds.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +59,7 @@ from dbt_osmosis_spark.operators.retrieval import (
     _QUERY_VALUES,
     _S31_ORACLE,
     _S34_SPARK_TBKT,
+    _bm25_tail,
     _build_s36_layout,
     _doc_dl,
     _doc_dl_stats,
@@ -267,10 +294,12 @@ _S42_K = 5
 _S42_TERMS = sorted({w for _, ws in _S42_PHRASES for w in ws})
 
 
-def _s42_oracle() -> str:
-    terms = ", ".join(f"'{t}'" for t in _S42_TERMS)
+def _phrase_matches_sql(phrases: tuple[tuple[str, tuple[str, ...]], ...]) -> str:
+    """DuckDB UNION ALL of per-(phrase, doc) exact-match counts over a
+    ``pos`` (doc_id, tok, pos) relation: the oracle side of
+    ``_phrase_match_counts``."""
     phrase_sqls = []
-    for pid, words in _S42_PHRASES:
+    for pid, words in phrases:
         joins = "\n    ".join(
             f"JOIN pos w{i} ON w{i}.doc_id = w0.doc_id"
             f" AND w{i}.pos = w0.pos + {i} AND w{i}.tok = '{w}'"
@@ -285,7 +314,12 @@ def _s42_oracle() -> str:
     WHERE w0.tok = '{words[0]}'
     GROUP BY w0.doc_id"""
         )
-    union = "\n  UNION ALL\n  ".join(phrase_sqls)
+    return "\n  UNION ALL\n  ".join(phrase_sqls)
+
+
+def _s42_oracle() -> str:
+    terms = ", ".join(f"'{t}'" for t in _S42_TERMS)
+    union = _phrase_matches_sql(_S42_PHRASES)
     return f"""
 WITH raw AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok,
@@ -352,10 +386,10 @@ def s42_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _phrase_match_counts(
     pos: DataFrame, phrases: tuple[tuple[str, tuple[str, ...]], ...]
 ) -> DataFrame:
-    """Per-(phrase, doc) exact adjacent-match counts from a positional
-    relation (doc_id, term, pos): each phrase is a chain of |phrase|-1
-    (doc_id, pos) equi-joins between term-filtered branches — always
-    position-list-sized, never corpus-sized."""
+    """Exact-phrase scorer: per-(phrase, doc) adjacent-match counts from a
+    positional relation (doc_id, term, pos). Each phrase is a chain of
+    |phrase|-1 (doc_id, pos) equi-joins between term-filtered branches,
+    always position-list-sized, never corpus-sized."""
     per_phrase = []
     for pid, words in phrases:
         cur = pos.filter(F.col("term") == words[0]).select(
@@ -374,22 +408,83 @@ def _phrase_match_counts(
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_matches"))
             .select(F.lit(pid).alias("phrase_id"), "doc_id", "n_matches")
         )
-    matches = per_phrase[0]
-    for m in per_phrase[1:]:
-        matches = matches.unionByName(m)
-    return matches
+    return reduce(DataFrame.unionByName, per_phrase)
 
 
-def _rank_phrase_matches(matches: DataFrame, k: int) -> DataFrame:
-    """Two-phase bucketed top-k per phrase (the s31/s39 rank pattern):
-    a common phrase over a 100 TB corpus has an unbounded match relation,
-    so ranking it in one row_number per phrase_id is a single-reducer
-    skew point. Phase 1 ranks within (phrase_id, doc-hash bucket) in
-    parallel and keeps only each bucket's top-k survivors (<= buckets*k
-    rows per phrase); phase 2's global rank runs on that bounded set —
-    provably the same top-k."""
-    return _topn_two_phase(matches, "n_matches", k, key="phrase_id").orderBy(
+def _proximity_match_counts(
+    pos: DataFrame, queries: tuple[tuple[str, str, str, int], ...]
+) -> DataFrame:
+    """Proximity scorer: per-(query, doc) counts of ordered position pairs
+    (p1, p2), w1 at p1 and w2 at p2, with 0 < p2 - p1 <= slop. One
+    doc_id equi-join per query with the slop window as the join filter."""
+    per_query = []
+    for qid, w1, w2, slop in queries:
+        a = pos.filter(F.col("term") == w1).select("doc_id", F.col("pos").alias("p1"))
+        b = pos.filter(F.col("term") == w2).select(
+            F.col("doc_id").alias("d_"), F.col("pos").alias("p2")
+        )
+        pairs = a.join(
+            b,
+            (F.col("doc_id") == F.col("d_"))
+            & (F.col("p2") > F.col("p1"))
+            & (F.col("p2") <= F.col("p1") + slop),
+        )
+        per_query.append(
+            pairs.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_matches"))
+            .select(F.lit(qid).alias("phrase_id"), "doc_id", "n_matches")
+        )
+    return reduce(DataFrame.unionByName, per_query)
+
+
+def _sloppy_match_counts(
+    pos: DataFrame, queries: tuple[tuple[str, tuple[str, ...], int], ...]
+) -> DataFrame:
+    """Sloppy-phrase scorer: per-(query, doc) distinct-anchor counts for
+    ordered n-term phrases under a total slop budget. A chain of
+    |phrase|-1 per-doc equi-joins, each carrying the ordering bound
+    (p_i > p_{i-1}) and the cumulative-gap bound (p_i - p_1 - i <= slop;
+    the prefix bound is implied by the final one but prunes chains
+    early)."""
+    per_query = []
+    for qid, words, slop in queries:
+        cur = pos.filter(F.col("term") == words[0]).select(
+            "doc_id", F.col("pos").alias("p1"), F.col("pos").alias("plast")
+        )
+        for i, w in enumerate(words[1:], start=1):
+            nxt = pos.filter(F.col("term") == w).select(
+                F.col("doc_id").alias("d_"), F.col("pos").alias("p_")
+            )
+            cur = cur.join(
+                nxt,
+                (F.col("doc_id") == F.col("d_"))
+                & (F.col("p_") > F.col("plast"))
+                & (F.col("p_") - F.col("p1") - i <= slop),
+            ).select("doc_id", "p1", F.col("p_").alias("plast"))
+        per_query.append(
+            cur.groupBy("doc_id")
+            .agg(F.countDistinct("p1").cast("bigint").alias("n_matches"))
+            .select(F.lit(qid).alias("phrase_id"), "doc_id", "n_matches")
+        )
+    return reduce(DataFrame.unionByName, per_query)
+
+
+def _rank_phrase_matches(matches: DataFrame, k: int, key: str = "phrase_id") -> DataFrame:
+    """Two-phase bucketed top-k per phrase by match count, with the id
+    column renamed to ``key``. Phase 1 ranks within (phrase_id, doc-hash
+    bucket) and keeps each bucket's top-k; phase 2 ranks that bounded
+    set, so a common phrase's unbounded match relation is never one
+    reducer's partition."""
+    out = _topn_two_phase(matches, "n_matches", k, key="phrase_id").orderBy(
         "phrase_id", "rnk"
+    )
+    return out if key == "phrase_id" else out.withColumnRenamed("phrase_id", key)
+
+
+def _empty_ranked(spark: SparkSession, key: str, metric: str) -> DataFrame:
+    """The empty answer of a serve whose result is (key, rnk, doc_id, metric)."""
+    return spark.createDataFrame(
+        [], f"{key} string, rnk bigint, doc_id bigint, {metric} bigint"
     )
 
 
@@ -479,19 +574,21 @@ def query_phrase_index(
     phrases: tuple[tuple[str, tuple[str, ...]], ...],
     k: int,
 ) -> DataFrame:
-    """Serve a phrase batch from the persisted positional layout: the
-    scan lists only the buckets the phrase terms hash into and pushes
-    the term IN-list to the reader; match counting and the two-phase
-    rank are s42's exact plan over the scanned positions."""
-    terms = sorted({w for _, ws in phrases for w in ws})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    pos = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .select("doc_id", "term", "pos")
-    )
+    """Exact-phrase serve from the monolithic positional layout: the
+    reader's bucket-pruned, term-pushed position scan, the phrase scorer
+    and the two-phase rank."""
+    pos = _index_read(spark, path, (w for _, ws in phrases for w in ws), _POS)[0]
     return _rank_phrase_matches(_phrase_match_counts(pos, phrases), k)
+
+
+def _build_s43_index(spark: SparkSession, sf_dir: str) -> str:
+    """Build (idempotent overwrite) the corpus's monolithic positional
+    layout shared by s43, s45, s46, s50 and s51; returns its path."""
+    path = _s43_index_path(sf_dir)
+    write_positional_index(
+        spark, spread(read_parquet(spark, f"{sf_dir}/documents.parquet")), path
+    )
+    return path
 
 
 @register("s43_phrase_index_serve", oracle=_s42_oracle())
@@ -501,10 +598,7 @@ def s43_phrase_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     term buckets (module comment). The oracle is s42's: the index is a
     reorganized copy of the corpus positions, so serving from it must
     produce byte-identical phrase top-ks."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s43_index_path(sf_dir)
-    write_positional_index(spark, docs, path)
-    return query_phrase_index(spark, path, _S42_PHRASES, _S42_K)
+    return query_phrase_index(spark, _build_s43_index(spark, sf_dir), _S42_PHRASES, _S42_K)
 
 
 # ---------------------------------------------------------------------------
@@ -536,15 +630,14 @@ def s43_phrase_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # therefore scale with the merged DELTA segments + tombstones — the
 # test asserts base-file mtimes are untouched and new bytes << base.
 #
-# Serve (query_segmented_postings, also s36's and s39's): bucket-pruned
-# multi-path scan, broadcast tombstone anti-join, df from surviving pruned
-# postings, delta-merged stats, two-phase rank. df-derivation (not
-# baked df) is the right call for a multi-segment layout — a baked df
-# is global state that every merge would invalidate; Lucene likewise
-# recomputes corpus stats across live segments at search time.
-#
-# A production deployment swaps segments atomically via a manifest;
-# here the registered op is sequential so directory renames suffice.
+# Serve (query_segmented_postings, also s36's and s39's): the segmented
+# reader (termset-pruned, bucket-pruned segment union, tombstone
+# anti-join, delta-merged stats) and the BM25 tail with df counted from
+# the surviving postings. df-derivation (not baked df) is the right call
+# for a multi-segment layout — a baked df is global state that every
+# merge would invalidate; Lucene likewise recomputes corpus stats across
+# live segments at search time. Compactions publish through a manifest
+# (below), so a reader never sees a half-merged segment set.
 
 def _s44_layout_path(sf_dir: str, op: str = "") -> str:
     return _scratch_path(".postings_tiered", sf_dir, op)
@@ -588,18 +681,18 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-# --- generation-scoped tombstones + manifest (round 12) --------------------
+# --- generation-scoped tombstones + manifest --------------------------------
 # A tombstone row is (doc_id, gen): "this doc is deleted from every segment
 # whose id is <= gen". Deleting always stamps gen = the highest live segment
 # id, so a LATER re-ingest of the same doc (into a higher-id segment) serves
 # its new version — delete-then-repost and document revisions both work
-# (VERDICT r11 item 2; Lucene's deleted-docs + generation ordering).
-# Re-ingest is safe because ingest itself upserts: it tombstones any prior
-# version of the batch's docs at gen = seg_id - 1 (see _upsert_supersede),
-# so the one-doc-one-LIVE-version invariant is enforced, not assumed.
+# (Lucene's deleted-docs + generation ordering). Re-ingest is safe because
+# ingest itself upserts: it tombstones any prior version of the batch's
+# docs at gen = seg_id - 1 (see _upsert_supersede), so the
+# one-doc-one-LIVE-version invariant is enforced, not assumed.
 #
 # Tombstone partitions (deletes/delete=<id>) come from three writers in
-# disjoint id namespaces, so none can ever overwrite another (ADVICE r11):
+# disjoint id namespaces, so none can ever overwrite another:
 #   [0, 1e6)    user delete batches (delete_segmented asserts the bound)
 #   [1e6, 2e6)  upsert supersede-sets: delete = 1e6 + seg_id
 #   [2e6, ...)  compaction survivor sets: delete = 2e6 + manifest gen
@@ -609,7 +702,7 @@ def _dir_bytes(path: str) -> int:
 # (manifest-<G>.json listing live segments + retired delete partitions)
 # via an atomic pointer rename (_MANIFEST). Pre-compaction segments stay
 # on disk until vacuum_segments, so a reader holding any manifest
-# generation serves a consistent segment set (VERDICT r11 item 3).
+# generation serves a consistent segment set.
 _UPSERT_TOMB_NS = 1_000_000
 _COMPACT_TOMB_NS = 2_000_000
 # A compaction RETIRES partition values (consolidating their content into
@@ -622,6 +715,12 @@ _COMPACT_TOMB_NS = 2_000_000
 # LIVENESS (not batch content), the re-landed delta is zero — deletes
 # subtract exactly once under replay, reuse, and compaction interleaving.
 _DELETE_EPOCH_NS = 10_000_000
+# A tombstone relation whose live partitions hold at most this many bytes
+# on disk is broadcast-hinted (32 MiB of parquet fits executor memory
+# after decompression); a larger one is left to a shuffled anti-join.
+_TOMB_BCAST_BYTES = 32 * 1024 * 1024
+# Fewest live segments for which a serve runs the termset probe.
+_TERMSET_PROBE_MIN_SEGS = 3
 
 
 def _manifest_referenced_delete_parts(path: str) -> set[int]:
@@ -718,9 +817,11 @@ def _scoped_tombstones(
     except the ones a compaction retired (their content was consolidated
     into that compaction's survivor partition) and, for replay-safe
     writers, the caller's own partition. A PINNED read (mgen=G) of a
-    snapshot-complete manifest (round 12: records ``live_deletes``)
-    reads exactly the partitions live at cut time, so tombstones written
-    AFTER the snapshot never leak into a time-travel serve."""
+    snapshot-complete manifest (one that records ``live_deletes``) reads
+    exactly the partitions live at cut time, so tombstones written AFTER
+    the snapshot never leak into a time-travel serve. The relation is
+    broadcast-hinted while its live partitions hold at most
+    ``_TOMB_BCAST_BYTES`` on disk."""
     import os as _os
 
     if not _os.path.isdir(f"{path}/deletes"):
@@ -739,24 +840,13 @@ def _scoped_tombstones(
     if exclude_delete_id is not None:
         t = t.filter(F.col("delete") != exclude_delete_id)
     out = t.select("doc_id", "gen")
-    # Round 13 (VERDICT r12 item 2): broadcast-hint the tombstone
-    # relation only while its live partitions are small ON DISK (a pure
-    # filesystem bound, no job). Between compactions a mass-takedown can
-    # grow tombstones past any sane broadcast size; un-hinted, AQE picks
-    # a shuffled anti-join instead of a forced executor-OOM broadcast.
-    if _live_tombstone_bytes(path, mgen) <= _tomb_bcast_bytes():
+    # broadcast-hint the tombstones only while their live partitions are
+    # small ON DISK (a filesystem bound, no job): a mass takedown between
+    # compactions can grow them past any broadcast size, and un-hinted,
+    # AQE picks a shuffled anti-join instead of an executor-OOM broadcast
+    if _live_tombstone_bytes(path, mgen) <= _TOMB_BCAST_BYTES:
         out = F.broadcast(out)
     return out
-
-
-def _tomb_bcast_bytes() -> int:
-    """On-disk size bound under which the tombstone relation is still
-    broadcast-hinted. Env-tunable (read per call, so a deployment — or a
-    test — can lower it); 32 MiB of parquet is comfortably inside
-    executor memory after decompression."""
-    import os as _os
-
-    return int(_os.environ.get("SPARK_GRAFT_TOMB_BCAST_BYTES", 32 * 1024 * 1024))
 
 
 def _live_tombstone_bytes(path: str, mgen: int | None = None) -> int:
@@ -806,14 +896,14 @@ def _stats_agg(spark: SparkSession, path: str, mgen: int | None = None) -> DataF
     import os as _os
 
     if not _os.path.isdir(f"{path}/stats"):
-        # never-ingested layout (ADVICE r12): zero docs, undefined avgdl
+        # never-ingested layout: zero docs, undefined avgdl
         return spark.createDataFrame([(0, None)], "n_docs bigint, avgdl double")
     rel = read_layout(spark, path, "stats")
     m = _read_manifest(path, mgen) if mgen is not None else None
     if m is not None and "stats_parts" in m:
         parts = list(m["stats_parts"])
         rel = rel.filter(F.col("part").isin(parts) if parts else F.lit(False))
-    # Coalesce + guarded division (ADVICE r12): a pinned view whose
+    # Coalesce + guarded division: a pinned view whose
     # stats_parts is empty (checkpoint cut on an empty layout) or a
     # fully-deleted corpus must yield n_docs = 0 with NULL avgdl — not
     # NULL-poisoned BM25 contribs downstream.
@@ -834,47 +924,38 @@ def _read_segments_tagged(
     partition pruning and filter pushdown intact (Spark refuses
     multi-root reads of tbkt-partitioned dirs: CONFLICTING_DIRECTORY_
     STRUCTURES)."""
-    dfs = [
-        read_layout(spark, path, f"{s}/{sub}").withColumn(
-            "seg_gen", F.lit(_seg_id(s)).cast("bigint")
-        )
-        for s in segs
-    ]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    return reduce(
+        DataFrame.unionByName,
+        (
+            read_layout(spark, path, f"{s}/{sub}").withColumn(
+                "seg_gen", F.lit(_seg_id(s)).cast("bigint")
+            )
+            for s in segs
+        ),
+    )
 
 
 def _segments_with_terms(
     spark: SparkSession, path: str, segs: list[str], terms: list[str]
 ) -> list[str]:
-    """Termset-sidecar segment pruning (round 12, s52 — the Lucene
-    term-dictionary skip at segment granularity): drop every segment
-    whose tiny ``termset`` sidecar proves it contains NONE of the query
-    terms, so the serve never even lists that segment's posting files.
-    At 100 TB with thousands of segments and a real vocabulary this
-    skips most of the per-segment read setup for selective terms; the
-    check itself reads only the vocabulary-sized sidecars and collects
-    one boolean per segment (metadata-sized, like the manifest read).
-    Segments without a sidecar (pre-round-12 layouts) are always kept —
-    pruning is a pure optimization, never a correctness dependency.
-    Exactness: a pruned segment contributes no tf rows for any query
-    term, so its docs are never candidates; dropping its doclen rows is
-    harmless because dl joins candidates on doc_id (inner)."""
+    """Termset-sidecar segment pruning (the Lucene term-dictionary skip
+    at segment granularity): drop every segment whose tiny ``termset``
+    sidecar proves it contains NONE of the query terms, so the serve
+    never lists that segment's posting files. The check reads only the
+    vocabulary-sized sidecars and collects one row per hit segment.
+    Segments without a sidecar are always kept: pruning is an
+    optimization, never a correctness dependency. Exactness: a pruned
+    segment contributes no tf rows for any query term, so its docs are
+    never candidates, and dropping its doclen rows is harmless because
+    dl joins candidates on doc_id (inner).
+
+    The probe is one scheduling round trip plus a sidecar scan, so it
+    runs only with at least ``_TERMSET_PROBE_MIN_SEGS`` live segments:
+    below that it could save at most one or two segment listings, less
+    than its own cost. Skipping it is always correct."""
     import os as _os
 
-    if not terms:
-        return segs
-    # Round 14 (guide §1.2 — don't pay fixed costs that can't pay back):
-    # the probe is one scheduling round-trip + a sidecar scan; with
-    # fewer live segments than the bound it can save at most one or two
-    # segment listings, strictly less than its own cost at ANY scale.
-    # Pruning's payoff is thousand-segment layouts (module comment), and
-    # skipping the probe is always correct — pruning is a pure
-    # optimization. Env-tunable so a deployment (or the pruning tests,
-    # which use 3-4 segment layouts) can move the bound.
-    if len(segs) < int(_os.environ.get("SPARK_GRAFT_TERMSET_PROBE_MIN_SEGS", "3")):
+    if not terms or len(segs) < _TERMSET_PROBE_MIN_SEGS:
         return segs
     keep = [s for s in segs if not _os.path.isdir(_os.path.join(path, s, "termset"))]
     check = [s for s in segs if s not in keep]
@@ -898,18 +979,89 @@ def _apply_scoped_tombstones(rel: DataFrame, tombs: DataFrame) -> DataFrame:
     """Drop rows whose (doc_id, seg_gen) is covered by a tombstone
     (doc_id, gen >= seg_gen). Hash anti-join on doc_id with the
     generation bound as a join filter — never a nested loop; duplicate
-    tombstones are harmless (anti-join is duplicate-insensitive).
-    Round 13 (VERDICT r12 item 2): the broadcast hint is no longer
-    hard-coded here — _scoped_tombstones attaches it only while the live
-    tombstone partitions are small on disk, so a mass-takedown's
-    unbounded tombstone relation degrades to a shuffled anti-join
-    instead of forcing an executor-OOM-sized broadcast."""
+    tombstones are harmless (anti-join is duplicate-insensitive). The
+    join strategy follows the hint _scoped_tombstones attaches."""
     t = tombs.select(F.col("doc_id").alias("_t_doc"), F.col("gen").alias("_t_gen"))
     return rel.join(
         t,
         (F.col("doc_id") == F.col("_t_doc")) & (F.col("seg_gen") <= F.col("_t_gen")),
         "left_anti",
     )
+
+
+# --- the two layout readers ---------------------------------------------------
+_POS = ("doc_id", "term", "pos")  # the positional scorers' input columns
+
+
+def _term_pruned(postings: DataFrame, terms: list[str]) -> DataFrame:
+    """The postings rows of ``terms`` only: the md5 term-bucket filter
+    prunes partitions statically, the term IN-list is pushed to the
+    parquet reader."""
+    probes = sorted({_s34_tbkt_py(t) for t in terms})
+    return postings.filter(F.col("tbkt").isin(probes)).filter(F.col("term").isin(terms))
+
+
+def _index_read(
+    spark: SparkSession,
+    path: str,
+    terms: Iterable[str],
+    cols: tuple[str, ...] | None = None,
+    *,
+    doclen: bool = False,
+    stats: bool = False,
+) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+    """The monolithic layout's reader: (postings, doclen, stats). The
+    postings scan is term-pruned to ``terms`` and projected to ``cols``
+    when given; doclen and the one-row stats are read only when the
+    scorer asks for them (None otherwise)."""
+    terms = sorted(set(terms))
+    postings = _term_pruned(read_layout(spark, path, "postings"), terms)
+    return (
+        postings.select(*cols) if cols else postings,
+        read_layout(spark, path, "doclen") if doclen else None,
+        read_layout(spark, path, "stats") if stats else None,
+    )
+
+
+def _segmented_read(
+    spark: SparkSession,
+    path: str,
+    terms: Iterable[str],
+    mgen: int | None = None,
+    cols: tuple[str, ...] | None = None,
+    *,
+    doclen: bool = False,
+    stats: bool = False,
+) -> tuple[DataFrame, DataFrame | None, DataFrame | None] | None:
+    """The segmented layout's reader: (postings, doclen, stats) of the
+    live view, or None when no segment can hold a query term (a
+    never-ingested layout, or every segment termset-pruned).
+
+    Segments are the pointer view (``mgen=None``) or manifest ``mgen``'s
+    pinned list, termset-pruned to ``terms``. Postings are the tagged
+    per-segment scans, term-pruned, minus every row a scoped tombstone
+    covers, projected to ``cols`` (else all columns but ``seg_gen``).
+    doclen (doc_id, dl) passes the same tombstone relation, so tf and dl
+    both come from live versions only; stats are the delta-merged
+    (n_docs, avgdl) of the same view. doclen and stats are read only
+    when the scorer asks for them (None otherwise)."""
+    terms = sorted(set(terms))
+    segs = _segments_with_terms(spark, path, _live_segments(path, mgen), terms)
+    if not segs:
+        return None
+    agg = _stats_agg(spark, path, mgen) if stats else None
+    tombs = _scoped_tombstones(spark, path, mgen=mgen)
+    postings = _apply_scoped_tombstones(
+        _term_pruned(_read_segments_tagged(spark, path, segs, "postings"), terms), tombs
+    )
+    dl = (
+        _apply_scoped_tombstones(
+            _read_segments_tagged(spark, path, segs, "doclen"), tombs
+        ).select("doc_id", "dl")
+        if doclen
+        else None
+    )
+    return (postings.select(*cols) if cols else postings.drop("seg_gen")), dl, agg
 
 
 def _has_parquet_files(d: str) -> bool:
@@ -1417,49 +1569,44 @@ def vacuum_segments(path: str) -> dict[str, int]:
     return {"removed_segments": removed_s, "removed_delete_parts": removed_d}
 
 
+def _ingest_slices(
+    spark: SparkSession, ingest, docs: DataFrame, path: str, *slices: str
+) -> None:
+    """Rebuild ``path`` from disjoint doc slices (SQL predicates over
+    ``docs``): slice i becomes segment i via ``ingest``
+    (``ingest_segment`` or ``ingest_positional_segment``). Disjoint slices
+    hold no prior version of any doc, so the upsert pass is skipped, and
+    the ingests write disjoint segment dirs and stats partitions, so they
+    are submitted concurrently."""
+    import shutil
+
+    shutil.rmtree(path, ignore_errors=True)
+    run_sinks(
+        *(
+            lambda i=i, cond=cond: ingest(spark, docs.filter(cond), path, i, upsert=False)
+            for i, cond in enumerate(slices)
+        )
+    )
+
+
+# base segment (80% of docs) + two delta segments
+_BASE_AND_DELTAS = ("doc_id % 10 < 8", "doc_id % 10 = 8", "doc_id % 10 = 9")
+
+
 def query_segmented_postings(
     spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K,
     mgen: int | None = None,
 ) -> DataFrame:
-    """Serve from the segmented layout: bucket-pruned multi-path scan
-    over all live segments, generation-scoped tombstone anti-join, df
-    from the surviving pruned postings, delta-merged stats, two-phase
-    rank. A not-yet-ingested
-    layout serves an empty result instead of raising (ADVICE r11).
-    ``mgen`` pins the serve to a historical manifest generation's
-    segment view (compaction retains those segments until vacuum)."""
-    segs = _live_segments(path, mgen)
-    if not segs:
-        return spark.createDataFrame(
-            [], "query_id string, rnk bigint, doc_id bigint, score_micros bigint"
-        )
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "query_id string, rnk bigint, doc_id bigint, score_micros bigint"
-        )
+    """BM25 serve from the segmented bag-of-words layout: the segmented
+    reader's live postings (tf and dl in the rows) and delta-merged
+    stats, scored by the BM25 tail with df counted from the surviving
+    postings. ``mgen`` pins the serve to a manifest generation."""
+    read = _segmented_read(spark, path, (t for _, t in query_terms), mgen, stats=True)
+    if read is None:
+        return _empty_ranked(spark, "query_id", "score_micros")
+    postings, _, stats = read
     qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-    stats = _stats_agg(spark, path, mgen)
-    postings = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    postings = _apply_scoped_tombstones(
-        postings, _scoped_tombstones(spark, path, mgen=mgen)
-    ).drop("seg_gen")
-    df_rel = postings.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    scores = (
-        postings.join(F.broadcast(df_rel), "term")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
+    return _bm25_tail(postings, qterms, stats, k)
 
 
 @register("s44_tiered_compaction", oracle=_S39_ORACLE)
@@ -1470,27 +1617,9 @@ def s44_tiered_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     files stay byte-untouched, asserted in tests), then a serve over
     (base + compacted segment). Oracle is s39's: the corpus minus the
     deleted docs."""
-    import shutil
-
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s44_layout_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    # Round 13 (guide §2.6): the three ingests write disjoint segment
-    # dirs + stats partitions and their doc slices are disjoint by
-    # construction (%10 <8 / ==8 / ==9), so the upsert supersede pass is
-    # a provable no-op — skipped (upsert=False) and the three ingest
-    # jobs submitted concurrently instead of serially.
-    run_sinks(
-        lambda: ingest_segment(
-            spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0, upsert=False
-        ),
-        lambda: ingest_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 8), path, 1, upsert=False
-        ),
-        lambda: ingest_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 9), path, 2, upsert=False
-        ),
-    )
+    _ingest_slices(spark, ingest_segment, docs, path, *_BASE_AND_DELTAS)
     delete_segmented(
         spark,
         path,
@@ -1504,64 +1633,46 @@ def s44_tiered_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # s45: unified index serve — BM25 from the POSITIONAL layout
 # ---------------------------------------------------------------------------
-# The layout-unification move the s43 module comment names: real engines
-# (Lucene proximity, ES match_phrase) store positions ONCE and derive
-# frequencies, instead of maintaining a bag-of-words index (s34) and a
-# positional index (s43) side by side. s45 proves this repo's positional
-# layout is that single index: BM25 ranked search served from it with
-# results byte-identical to s31/s34 — tf = COUNT(*) of a (term, doc)'s
-# positions in the pruned buckets, df = COUNT of (term, doc) groups,
-# dl from the layout's doc-keyed doclen sidecar, stats from its one-row
-# corpus stats. One persisted artifact answers both query classes.
+# Real engines (Lucene proximity, ES match_phrase) store positions ONCE
+# and derive frequencies, instead of maintaining a bag-of-words index
+# (s34) and a positional index (s43) side by side. s45 serves BM25 from
+# the positional layout with results byte-identical to s31/s34 — tf =
+# COUNT(*) of a (term, doc)'s positions in the pruned buckets, df = COUNT
+# of (term, doc) groups, dl from the layout's doc-keyed doclen sidecar,
+# stats from its one-row corpus stats. One persisted artifact answers
+# every query class.
 #
 # Scale shape: the scan is the same bucket-pruned, term-pushed read as
 # s43 (|query terms' position lists|, corpus-independent); tf/df are
 # local aggregates of that pruned relation; the one doc-keyed cost is
 # the dl join — doclen is doc-sized (far smaller than postings) and the
 # join keys on candidate docs only, left to AQE to broadcast-or-shuffle
-# by the actual candidate volume (the t23 margin-join discipline).
+# by the actual candidate volume.
 
 @register("s45_unified_index_serve", oracle=_S31_ORACLE)
 def s45_unified_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One positional-index build + one BM25 serve FROM THE POSITIONS
     (module comment): the s31 query batch, scored from position counts,
     must hash-match the s31/s34 bag-of-words answer exactly."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s43_index_path(sf_dir)
-    write_positional_index(spark, docs, path)
-    return query_bm25_from_positional(spark, path, _QUERY_TERMS)
+    return query_bm25_from_positional(spark, _build_s43_index(spark, sf_dir), _QUERY_TERMS)
+
+
+def _position_tf(pos: DataFrame) -> DataFrame:
+    """(term, doc_id, tf): tf = the count of a (term, doc)'s positions."""
+    return pos.groupBy("term", "doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
 
 
 def query_bm25_from_positional(
     spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K
 ) -> DataFrame:
-    """BM25 serve from the positional layout: bucket-pruned position
-    scan -> per-(term, doc) tf = COUNT(positions), df = COUNT(groups),
-    dl joined from the doc-keyed sidecar, stats from the persisted
-    one-row relation; scoring and the two-phase rank are s34's."""
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
+    """BM25 serve from the monolithic positional layout: the reader's
+    pruned position scan, doclen and stats row; tf counted from the
+    positions, then the BM25 tail (df from the tf groups, dl joined)."""
     qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-    stats = read_layout(spark, path, "stats")
-    tf_rel = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    pos, dl, stats = _index_read(
+        spark, path, (t for _, t in query_terms), doclen=True, stats=True
     )
-    df_rel = tf_rel.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    dl_rel = read_layout(spark, path, "doclen")
-    scores = (
-        tf_rel.join(F.broadcast(df_rel), "term")
-        .join(dl_rel, "doc_id")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
+    return _bm25_tail(_position_tf(pos), qterms, stats, k, dl=dl)
 
 
 # ---------------------------------------------------------------------------
@@ -1631,49 +1742,18 @@ def query_proximity_index(
     queries: tuple[tuple[str, str, str, int], ...],
     k: int,
 ) -> DataFrame:
-    """Serve ordered within-slop pair queries from the positional
-    layout: bucket-pruned scan, per-query (doc_id) equi-join between the
-    two term branches with the slop window as a post-filter, exact match
-    counts, two-phase rank."""
-    terms = sorted({t for q in queries for t in (q[1], q[2])})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    pos = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .select("doc_id", "term", "pos")
-    )
-    per_query = []
-    for qid, w1, w2, slop in queries:
-        a = pos.filter(F.col("term") == w1).select("doc_id", F.col("pos").alias("p1"))
-        b = pos.filter(F.col("term") == w2).select(
-            F.col("doc_id").alias("d_"), F.col("pos").alias("p2")
-        )
-        pairs = a.join(
-            b,
-            (F.col("doc_id") == F.col("d_"))
-            & (F.col("p2") > F.col("p1"))
-            & (F.col("p2") <= F.col("p1") + slop),
-        )
-        per_query.append(
-            pairs.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_matches"))
-            .select(F.lit(qid).alias("phrase_id"), "doc_id", "n_matches")
-        )
-    matches = per_query[0]
-    for m in per_query[1:]:
-        matches = matches.unionByName(m)
-    return _rank_phrase_matches(matches, k).withColumnRenamed("phrase_id", "prox_id")
+    """Proximity serve from the monolithic positional layout: the
+    reader's pruned position scan, the proximity scorer, two-phase
+    rank."""
+    pos = _index_read(spark, path, (t for q in queries for t in q[1:3]), _POS)[0]
+    return _rank_phrase_matches(_proximity_match_counts(pos, queries), k, "prox_id")
 
 
 @register("s46_proximity_search", oracle=_s46_oracle())
 def s46_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional-index build (idempotent, shared with s43/s45) + one
     proximity-query serve (module comment)."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s43_index_path(sf_dir)
-    write_positional_index(spark, docs, path)
-    return query_proximity_index(spark, path, _S46_QUERIES, _S46_K)
+    return query_proximity_index(spark, _build_s43_index(spark, sf_dir), _S46_QUERIES, _S46_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1684,66 +1764,32 @@ def s46_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proves it is MAINTAINABLE: the s44 segment discipline applied to
 # positions. Immutable per-segment positional postings (term, doc_id,
 # pos) + per-segment doclen + additive stats deltas + global tombstones;
-# phrase serve = the s43 plan over the segment union with a broadcast
-# tombstone anti-join bolted on. Results must equal a from-scratch
-# positional build over the live corpus (the oracle computes exactly
-# that), no matter how the index was assembled — the same contract every
-# maintained layout in this repo carries. Positions are per-document, so
-# segment boundaries never affect them (each doc lives wholly in one
-# segment, the s36 invariant).
+# phrase serve = the segmented reader feeding the s43 phrase scorer.
+# Results must equal a from-scratch positional build over the live
+# corpus (the oracle computes exactly that), no matter how the index was
+# assembled — the same contract every maintained layout in this repo
+# carries. Positions are per-document, so segment boundaries never
+# affect them (each doc lives wholly in one segment).
 
 _S47_MOD = 7  # delete set: doc_id % 7 == 2 (disjoint from phrase anchors)
 _S47_REM = 2
 
-
-def _s47_oracle() -> str:
-    terms = ", ".join(f"'{t}'" for t in _S42_TERMS)
-    phrase_sqls = []
-    for pid, words in _S42_PHRASES:
-        joins = "\n    ".join(
-            f"JOIN pos w{i} ON w{i}.doc_id = w0.doc_id"
-            f" AND w{i}.pos = w0.pos + {i} AND w{i}.tok = '{w}'"
-            for i, w in enumerate(words)
-            if i > 0
-        )
-        phrase_sqls.append(
-            f"""SELECT '{pid}' AS phrase_id, w0.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_matches
-    FROM pos w0
-    {joins}
-    WHERE w0.tok = '{words[0]}'
-    GROUP BY w0.doc_id"""
-        )
-    union = "\n  UNION ALL\n  ".join(phrase_sqls)
-    return f"""
-WITH live AS (
+_S47_ORACLE = _s42_oracle().replace(
+    """WITH raw AS (
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok,
+         generate_subscripts(string_split(lower(text), ' '), 1) AS rawpos
+  FROM documents
+),""",
+    f"""WITH live AS (
   SELECT * FROM documents WHERE doc_id % {_S47_MOD} <> {_S47_REM}
 ),
 raw AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok,
          generate_subscripts(string_split(lower(text), ' '), 1) AS rawpos
   FROM live
-),
-pos_all AS (
-  SELECT doc_id, tok,
-         CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY rawpos)
-              AS BIGINT) AS pos
-  FROM raw WHERE tok <> ''
-),
-pos AS (SELECT * FROM pos_all WHERE tok IN ({terms})),
-matches AS (
-  {union}
-),
-ranked AS (
-  SELECT phrase_id, doc_id, n_matches,
-         ROW_NUMBER() OVER (PARTITION BY phrase_id
-                            ORDER BY n_matches DESC, doc_id) AS rnk
-  FROM matches
+),""",
 )
-SELECT phrase_id, CAST(rnk AS BIGINT) AS rnk, doc_id, n_matches
-FROM ranked WHERE rnk <= {_S42_K}
-ORDER BY phrase_id, rnk
-"""
+assert "FROM live" in _S47_ORACLE  # the template replace must hit
 
 
 def _s47_layout_path(sf_dir: str, op: str = "") -> str:
@@ -1816,83 +1862,52 @@ def query_phrase_segmented(
     k: int,
     mgen: int | None = None,
 ) -> DataFrame:
-    """Phrase serve over the segmented positional layout: bucket-pruned
-    segment-union scan, generation-scoped broadcast tombstone anti-join,
-    then the s43 position-join chain and two-phase rank. Empty layout
-    serves empty (ADVICE r11). ``mgen`` pins to a manifest snapshot
-    (s53's time-travel contract — every query class supports it)."""
-    segs = _live_segments(path, mgen)
-    if not segs:
-        return spark.createDataFrame(
-            [], "phrase_id string, rnk bigint, doc_id bigint, n_matches bigint"
-        )
-    terms = sorted({w for _, ws in phrases for w in ws})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "phrase_id string, rnk bigint, doc_id bigint, n_matches bigint"
-        )
-    pos = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    pos = _apply_scoped_tombstones(
-        pos, _scoped_tombstones(spark, path, mgen=mgen)
-    ).select("doc_id", "term", "pos")
-    return _rank_phrase_matches(_phrase_match_counts(pos, phrases), k)
+    """Exact-phrase serve over the segmented positional layout: the
+    segmented reader's live positions, the phrase scorer, two-phase
+    rank. ``mgen`` pins the serve to a manifest snapshot."""
+    read = _segmented_read(spark, path, (w for _, ws in phrases for w in ws), mgen, _POS)
+    if read is None:
+        return _empty_ranked(spark, "phrase_id", "n_matches")
+    return _rank_phrase_matches(_phrase_match_counts(read[0], phrases), k)
 
 
-@register("s47_positional_lifecycle", oracle=_s47_oracle())
-def s47_positional_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full lifecycle on the unified positional layout: base segment
-    (80% of docs) + two delta segments, one tombstone batch
-    (doc_id % 7 == 2, via the layout-generic delete_segmented — the
-    doclen sidecars make it layout-agnostic), then a phrase serve that
-    must equal a from-scratch positional build over the live corpus."""
-    import shutil
-
+def _build_s47_layout(spark: SparkSession, sf_dir: str, op: str = "") -> str:
+    """The s47 lifecycle layout: a base segment (80% of docs) + two delta
+    segments, then one tombstone batch (doc_id % 7 == 2); returns its
+    path."""
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: disjoint slices (%10 <8/==8/==9) into disjoint segment
-    # dirs — upsert is a provable no-op, ingests submitted concurrently
-    run_sinks(
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 8), path, 1, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 9), path, 2, upsert=False
-        ),
-    )
+    path = _s47_layout_path(sf_dir, op)
+    _ingest_slices(spark, ingest_positional_segment, docs, path, *_BASE_AND_DELTAS)
     delete_segmented(
         spark,
         path,
         docs.filter(F.col("doc_id") % _S47_MOD == _S47_REM).select("doc_id"),
         0,
     )
-    return query_phrase_segmented(spark, path, _S42_PHRASES, _S42_K)
+    return path
+
+
+@register("s47_positional_lifecycle", oracle=_S47_ORACLE)
+def s47_positional_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full lifecycle on the unified positional layout (the s47 layout,
+    deleted via the layout-generic delete_segmented — the doclen sidecars
+    make it layout-agnostic), then a phrase serve that must equal a
+    from-scratch positional build over the live corpus."""
+    return query_phrase_segmented(spark, _build_s47_layout(spark, sf_dir), _S42_PHRASES, _S42_K)
 
 
 # ---------------------------------------------------------------------------
-# s48: BM25 on the MAINTAINED positional index — the last cell of the
-# layout x query-class matrix
+# s48: BM25 on the MAINTAINED positional index
 # ---------------------------------------------------------------------------
 # s45 serves BM25 from the monolithic positional layout; s47 serves
-# phrases from the maintained (segmented + tombstoned) one. s48 closes
-# the matrix: BM25 ranked search over the segmented positional layout
-# with live deletes — what a serving deployment actually runs once the
-# index is in production. Plan: bucket-pruned segment-union position
-# scan, broadcast tombstone anti-join BEFORE tf aggregation (a deleted
-# doc's positions must not count), tf = COUNT(positions) per (term,
-# doc), df = COUNT of surviving (term, doc) groups (the s39 live-df
-# rule), dl joined from the live doclen sidecars, stats delta-merged
-# (ingest positives + delete negatives). Results are byte-identical to
-# s31 over the live corpus — the oracle computes exactly that.
+# phrases from the maintained (segmented + tombstoned) one. s48 serves
+# BM25 ranked search over the segmented positional layout with live
+# deletes. Plan: the segmented reader's live positions (the tombstone
+# anti-join runs BEFORE tf aggregation — a deleted doc's positions must
+# not count) and live doclen; tf = COUNT(positions) per (term, doc),
+# df = COUNT of surviving (term, doc) groups, stats delta-merged (ingest
+# positives + delete negatives). Results are byte-identical to s31 over
+# the live corpus — the oracle computes exactly that.
 
 _S48_ORACLE = _S39_ORACLE.replace(
     f"doc_id % {_S39_MOD} <> {_S39_REM}", f"doc_id % {_S47_MOD} <> {_S47_REM}"
@@ -1903,83 +1918,29 @@ def query_bm25_segmented(
     spark: SparkSession, path: str, query_terms: tuple[tuple[str, str], ...], k: int = _K,
     mgen: int | None = None,
 ) -> DataFrame:
-    """BM25 serve from the maintained positional layout (module
-    comment), generation-scoped: a re-ingested doc's dead versions are
-    excluded from tf AND dl (the upsert supersede-tombstones guarantee
-    exactly one live doclen row per doc). Empty layout serves empty.
-    ``mgen`` pins the serve to a manifest generation — with a
-    snapshot-complete manifest (checkpoint_manifest / round-12
-    compaction) the segment set, tombstones, AND stats are all read as
-    of the snapshot, so this is a true time-travel serve (s53)."""
-    segs = _live_segments(path, mgen)
-    if not segs:
-        return spark.createDataFrame(
-            [], "query_id string, rnk bigint, doc_id bigint, score_micros bigint"
-        )
-    probes = sorted({_s34_tbkt_py(t) for _, t in query_terms})
-    terms = sorted({t for _, t in query_terms})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "query_id string, rnk bigint, doc_id bigint, score_micros bigint"
-        )
+    """BM25 serve from the segmented positional layout: the segmented
+    reader's live positions, live doclen and delta-merged stats; tf
+    counted from the positions, then the BM25 tail. A re-ingested doc's
+    dead versions are excluded from tf AND dl (the upsert supersede
+    tombstones leave exactly one live doclen row per doc). ``mgen`` pins
+    the segment set, tombstones and stats to a snapshot-complete
+    manifest: a time-travel serve."""
+    read = _segmented_read(
+        spark, path, (t for _, t in query_terms), mgen, ("doc_id", "term"),
+        doclen=True, stats=True,
+    )
+    if read is None:
+        return _empty_ranked(spark, "query_id", "score_micros")
+    pos, dl, stats = read
     qterms = spark.createDataFrame(list(query_terms), "query_id string, term string")
-    stats = _stats_agg(spark, path, mgen)
-    tombs = _scoped_tombstones(spark, path, mgen=mgen)
-    pos = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    pos = _apply_scoped_tombstones(pos, tombs).select("doc_id", "term")
-    dl_rel = _apply_scoped_tombstones(
-        _read_segments_tagged(spark, path, segs, "doclen"), tombs
-    ).select("doc_id", "dl")
-    tf_rel = pos.groupBy("term", "doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    df_rel = tf_rel.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    scores = (
-        tf_rel.join(F.broadcast(df_rel), "term")
-        .join(dl_rel, "doc_id")
-        .join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", F.expr(_CONTRIB).alias("c"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c").cast("bigint").alias("score_micros"))
-    )
-    return _topn_two_phase(scores, "score_micros", k).orderBy("query_id", "rnk")
+    return _bm25_tail(_position_tf(pos), qterms, stats, k, dl=dl)
 
 
 @register("s48_bm25_maintained_positional", oracle=_S48_ORACLE)
 def s48_bm25_maintained_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s47's lifecycle (3 positional segments + one tombstone batch)
     followed by a BM25 serve — must hash-match s31 over the live corpus."""
-    import shutil
-
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s47_layout_path(sf_dir, "bm")
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: disjoint slices into disjoint segment dirs — upsert is
-    # a provable no-op, ingests submitted concurrently (s47's rationale)
-    run_sinks(
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 8), path, 1, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 == 9), path, 2, upsert=False
-        ),
-    )
-    delete_segmented(
-        spark,
-        path,
-        docs.filter(F.col("doc_id") % _S47_MOD == _S47_REM).select("doc_id"),
-        0,
-    )
-    return query_bm25_segmented(spark, path, _QUERY_TERMS)
+    return query_bm25_segmented(spark, _build_s47_layout(spark, sf_dir, "bm"), _QUERY_TERMS)
 
 
 def query_proximity_segmented(
@@ -1989,64 +1950,22 @@ def query_proximity_segmented(
     k: int,
     mgen: int | None = None,
 ) -> DataFrame:
-    """Proximity (sloppy-phrase) serve over the maintained positional
-    layout — the s46 pair-join plan on the s47 segment union with the
-    broadcast tombstone anti-join. Unregistered (its machinery is
-    exactly s46 + s47, both oracle-pinned); tested for equivalence with
-    the monolithic serve in tests/test_round11_ops.py. ``mgen`` pins to
-    a manifest snapshot (s53's time-travel contract)."""
-    segs = _live_segments(path, mgen)
-    if not segs:
-        return spark.createDataFrame(
-            [], "prox_id string, rnk bigint, doc_id bigint, n_matches bigint"
-        )
-    terms = sorted({t for q in queries for t in (q[1], q[2])})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "prox_id string, rnk bigint, doc_id bigint, n_matches bigint"
-        )
-    pos = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    pos = _apply_scoped_tombstones(
-        pos, _scoped_tombstones(spark, path, mgen=mgen)
-    ).select("doc_id", "term", "pos")
-    per_query = []
-    for qid, w1, w2, slop in queries:
-        a = pos.filter(F.col("term") == w1).select("doc_id", F.col("pos").alias("p1"))
-        b = pos.filter(F.col("term") == w2).select(
-            F.col("doc_id").alias("d_"), F.col("pos").alias("p2")
-        )
-        pairs = a.join(
-            b,
-            (F.col("doc_id") == F.col("d_"))
-            & (F.col("p2") > F.col("p1"))
-            & (F.col("p2") <= F.col("p1") + slop),
-        )
-        per_query.append(
-            pairs.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_matches"))
-            .select(F.lit(qid).alias("phrase_id"), "doc_id", "n_matches")
-        )
-    matches = per_query[0]
-    for m in per_query[1:]:
-        matches = matches.unionByName(m)
-    return _rank_phrase_matches(matches, k).withColumnRenamed("phrase_id", "prox_id")
+    """Proximity serve over the segmented positional layout: the
+    segmented reader's live positions, the proximity scorer, two-phase
+    rank. Unregistered (s46 pins the scorer, s47 the reader); equality
+    with the monolithic serve over the live corpus is tested. ``mgen``
+    pins the serve to a manifest snapshot."""
+    read = _segmented_read(spark, path, (t for q in queries for t in q[1:3]), mgen, _POS)
+    if read is None:
+        return _empty_ranked(spark, "prox_id", "n_matches")
+    return _rank_phrase_matches(_proximity_match_counts(read[0], queries), k, "prox_id")
 
 
 # ---------------------------------------------------------------------------
 # s49: document update / re-add on the maintained index — generation
 # ordering makes delete-then-repost and revisions first-class
 # ---------------------------------------------------------------------------
-# Round 11's maintained layouts could delete but never UPDATE or RE-ADD:
-# tombstones were global and permanent, so re-ingesting a new version of
-# a deleted doc served nothing, and re-ingesting without deleting
-# double-counted. Round 12 closes the contract (VERDICT r11 item 2) with
-# generation-scoped tombstones (kill versions in segments <= gen) plus
+# Generation-scoped tombstones (kill versions in segments <= gen) plus
 # upsert-at-ingest (prior versions of a batch's docs are superseded at
 # gen = seg_id - 1 and their stats subtracted) — Lucene's delete+add
 # update discipline on this repo's segment layout. s49 registers the
@@ -2057,10 +1976,9 @@ def query_proximity_segmented(
 # n_docs/avgdl are exact throughout.
 #
 # Scale shape: the upsert adds one batch-semi-joined read of the
-# doc-keyed doclen sidecars per ingest (doc-sized, never the postings)
-# and one batch-sized window; serve plans are unchanged except the
-# tombstone anti-join carries the generation bound as a join filter on
-# the same broadcast hash join.
+# doc-keyed doclen sidecars per ingest (doc-sized, never the postings);
+# serve plans are unchanged except the tombstone anti-join carries the
+# generation bound as a join filter on the same broadcast hash join.
 
 # re-ingested (revised) docs: half of the deleted set re-added + a
 # never-deleted slice updated in place. %14==2 implies %7==2 (re-add
@@ -2091,22 +2009,12 @@ def s49_reingest_upsert_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     revised documents (re-adds half the deleted set, updates a live
     slice), then a BM25 serve that must hash-match s31 over the final
     corpus state."""
-    import shutil
-
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s47_layout_path(sf_dir, "up")
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: the two BASE loads are disjoint slices (%10 <8 / >=8)
-    # into disjoint segment dirs — upsert is a provable no-op for them,
-    # so they skip the supersede pass and run concurrently. The REVISION
-    # ingest below is the one that exercises upsert, unchanged.
-    run_sinks(
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 >= 8), path, 1, upsert=False
-        ),
+    # the two base loads are disjoint slices; the revision ingest below
+    # is the one that exercises upsert
+    _ingest_slices(
+        spark, ingest_positional_segment, docs, path, "doc_id % 10 < 8", "doc_id % 10 >= 8"
     )
     delete_segmented(
         spark, path, docs.filter(F.col("doc_id") % 7 == 2).select("doc_id"), 0

@@ -1,13 +1,18 @@
-"""Lexical retrieval, part 3: relevance-ranked phrase queries (round 12).
+"""Lexical retrieval, part 3: relevance-ranked phrase queries.
 
 - s50  n-term sloppy-phrase search — Lucene PhraseQuery~N semantics
        (ordered n-term phrases with a TOTAL slop budget) over the
        persisted positional layout, generalizing s46's pair-only plan
-       (VERDICT r11 item 4)
 - s51  BM25-weighted phrase ranking — phrase results ranked by
        relevance (phrase tf = exact match count, phrase df = docs with
        >= 1 match) instead of raw counts, served from the SAME
-       positional artifact (VERDICT r11 item 5; ES match_phrase parity)
+       positional artifact (ES match_phrase parity)
+
+Each query class is served from both layouts by the layout's reader in
+``retrieval_ext`` (``_index_read`` for the monolithic layout,
+``_segmented_read`` for the maintained one, with its tombstone, termset
+and ``mgen`` invariants) plus one scorer: ``_sloppy_match_counts`` for
+s50 and ``_bm25_phrase_rank`` for s51.
 
 Semantics of s50 (the SQL-expressible core of Lucene's sloppy phrase):
 an ordered chain of positions p_1 < p_2 < ... < p_n, one per phrase
@@ -19,11 +24,10 @@ bounded by the anchor term's position list, so a generous slop cannot
 blow up the count combinatorially.
 
 Scale shape (both ops): the scan reads only the probed term buckets of
-the persisted layout with term equality pushed to the reader (the
-s43/s46 discipline); each phrase resolves as |phrase|-1 per-doc
-equi-joins with the slop window as a join filter (never a nested
-loop); prefix-gap bounds prune chains as early as possible. Ranking is
-the two-phase bucketed top-k everywhere.
+the persisted layout with term equality pushed to the reader; each
+phrase resolves as |phrase|-1 per-doc equi-joins with the slop window as
+a join filter (never a nested loop); prefix-gap bounds prune chains as
+early as possible. Ranking is the two-phase bucketed top-k everywhere.
 
 Reference parity: the reference ships SQL to a warehouse
 (src/dbt_osmosis/core/sql_operations.py:69); phrase retrieval is
@@ -36,17 +40,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_osmosis_spark.operators import register
-from dbt_osmosis_spark.operators.retrieval import (
-    _s34_tbkt_py,
-    _topn_two_phase,
-)
+from dbt_osmosis_spark.operators.retrieval import _topn_two_phase
 from dbt_osmosis_spark.operators.retrieval_ext import (
+    _POS,
+    _build_s43_index,
+    _empty_ranked,
+    _index_read,
     _phrase_match_counts,
+    _phrase_matches_sql,
     _rank_phrase_matches,
-    _s43_index_path,
-    write_positional_index,
+    _segmented_read,
+    _sloppy_match_counts,
 )
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
 
 # ---------------------------------------------------------------------------
 # s50: n-term sloppy phrase
@@ -110,60 +115,17 @@ ORDER BY sp_id, rnk
 """
 
 
-def _sloppy_match_counts(
-    pos: DataFrame, queries: tuple[tuple[str, tuple[str, ...], int], ...]
-) -> DataFrame:
-    """Per-(query, doc) distinct-anchor counts for ordered n-term
-    phrases under a total slop budget: a chain of |phrase|-1 per-doc
-    equi-joins, each carrying the ordering bound (p_i > p_{i-1}) and the
-    cumulative-gap bound (p_i - p_1 - i <= slop; the prefix bound is
-    implied by the final one but prunes chains early)."""
-    per_query = []
-    for qid, words, slop in queries:
-        cur = pos.filter(F.col("term") == words[0]).select(
-            "doc_id", F.col("pos").alias("p1"), F.col("pos").alias("plast")
-        )
-        for i, w in enumerate(words[1:], start=1):
-            nxt = pos.filter(F.col("term") == w).select(
-                F.col("doc_id").alias("d_"), F.col("pos").alias("p_")
-            )
-            cur = cur.join(
-                nxt,
-                (F.col("doc_id") == F.col("d_"))
-                & (F.col("p_") > F.col("plast"))
-                & (F.col("p_") - F.col("p1") - i <= slop),
-            ).select("doc_id", "p1", F.col("p_").alias("plast"))
-        per_query.append(
-            cur.groupBy("doc_id")
-            .agg(F.countDistinct("p1").cast("bigint").alias("n_matches"))
-            .select(F.lit(qid).alias("phrase_id"), "doc_id", "n_matches")
-        )
-    matches = per_query[0]
-    for m in per_query[1:]:
-        matches = matches.unionByName(m)
-    return matches
-
-
 def query_sloppy_phrase_index(
     spark: SparkSession,
     path: str,
     queries: tuple[tuple[str, tuple[str, ...], int], ...],
     k: int,
 ) -> DataFrame:
-    """Serve n-term sloppy-phrase queries from the persisted positional
-    layout: bucket-pruned term-pushed scan, the _sloppy_match_counts
-    join chain, two-phase rank."""
-    terms = sorted({w for _, ws, _ in queries for w in ws})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    pos = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .select("doc_id", "term", "pos")
-    )
-    return _rank_phrase_matches(_sloppy_match_counts(pos, queries), k).withColumnRenamed(
-        "phrase_id", "sp_id"
-    )
+    """n-term sloppy-phrase serve from the monolithic positional layout:
+    the reader's pruned position scan, the sloppy scorer, two-phase
+    rank."""
+    pos = _index_read(spark, path, (w for _, ws, _ in queries for w in ws), _POS)[0]
+    return _rank_phrase_matches(_sloppy_match_counts(pos, queries), k, "sp_id")
 
 
 def query_sloppy_phrase_segmented(
@@ -173,51 +135,26 @@ def query_sloppy_phrase_segmented(
     k: int,
     mgen: int | None = None,
 ) -> DataFrame:
-    """n-term sloppy-phrase serve over the MAINTAINED positional layout
-    (round 12b): the s50 join chain on the s47 segment union — termset-
-    pruned, generation-scoped tombstone anti-join, optional manifest
-    pin. Unregistered (machinery = s50 + s47, both oracle-pinned);
-    equivalence with the monolithic serve over the live corpus is
-    tested in tests/test_round12b_ops.py. Completes the layout x
-    query-class matrix for sloppy phrases (s46's segmented twin was
-    pairs-only)."""
-    from dbt_osmosis_spark.operators.retrieval_ext import (
-        _apply_scoped_tombstones,
-        _live_segments,
-        _read_segments_tagged,
-        _scoped_tombstones,
-        _segments_with_terms,
+    """n-term sloppy-phrase serve over the segmented positional layout:
+    the segmented reader's live positions, the sloppy scorer, two-phase
+    rank; ``mgen`` pins a manifest snapshot. Unregistered (s50 pins the
+    scorer, s47 the reader); equality with the monolithic serve over the
+    live corpus is tested."""
+    read = _segmented_read(
+        spark, path, (w for _, ws, _ in queries for w in ws), mgen, _POS
     )
-
-    segs = _live_segments(path, mgen)
-    terms = sorted({w for _, ws, _ in queries for w in ws})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "sp_id string, rnk bigint, doc_id bigint, n_matches bigint"
-        )
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    pos = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    pos = _apply_scoped_tombstones(
-        pos, _scoped_tombstones(spark, path, mgen=mgen)
-    ).select("doc_id", "term", "pos")
-    return _rank_phrase_matches(_sloppy_match_counts(pos, queries), k).withColumnRenamed(
-        "phrase_id", "sp_id"
-    )
+    if read is None:
+        return _empty_ranked(spark, "sp_id", "n_matches")
+    return _rank_phrase_matches(_sloppy_match_counts(read[0], queries), k, "sp_id")
 
 
 @register("s50_sloppy_nterm_phrase", oracle=_s50_oracle())
 def s50_sloppy_nterm_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional-index build (idempotent, shared with s43/s45/s46) +
     one n-term sloppy-phrase batch serve (module comment)."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s43_index_path(sf_dir)
-    write_positional_index(spark, docs, path)
-    return query_sloppy_phrase_index(spark, path, _S50_QUERIES, _S50_K)
+    return query_sloppy_phrase_index(
+        spark, _build_s43_index(spark, sf_dir), _S50_QUERIES, _S50_K
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -253,23 +190,7 @@ def _s51_oracle() -> str:
     terms = ", ".join(
         f"'{t}'" for t in sorted({w for _, ws in _S51_PHRASES for w in ws})
     )
-    branches = []
-    for pid, words in _S51_PHRASES:
-        joins = "\n    ".join(
-            f"JOIN pos w{i} ON w{i}.doc_id = w0.doc_id"
-            f" AND w{i}.pos = w0.pos + {i} AND w{i}.tok = '{w}'"
-            for i, w in enumerate(words)
-            if i > 0
-        )
-        branches.append(
-            f"""SELECT '{pid}' AS phrase_id, w0.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_matches
-    FROM pos w0
-    {joins}
-    WHERE w0.tok = '{words[0]}'
-    GROUP BY w0.doc_id"""
-        )
-    union = "\n  UNION ALL\n  ".join(branches)
+    union = _phrase_matches_sql(_S51_PHRASES)
     return f"""
 WITH raw AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok,
@@ -319,40 +240,40 @@ ORDER BY phrase_id, rnk
 """
 
 
+def _bm25_phrase_rank(
+    matches: DataFrame, dl: DataFrame, stats: DataFrame, k: int
+) -> DataFrame:
+    """The one BM25-phrase scorer: each phrase is one synthetic term with
+    tf = its exact match count and df = the docs with >= 1 match; joins
+    df, then the doc-keyed (doc_id, dl), then the one-row (n_docs, avgdl)
+    stats, and ranks the integer-micros score two-phase."""
+    df_rel = matches.groupBy("phrase_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df")
+    )
+    scored = (
+        matches.join(F.broadcast(df_rel), "phrase_id")
+        .join(dl.select("doc_id", "dl"), "doc_id")
+        .crossJoin(F.broadcast(stats.select("n_docs", "avgdl")))
+        .select("phrase_id", "doc_id", F.expr(_S51_CONTRIB).alias("score_micros"))
+    )
+    return _topn_two_phase(scored, "score_micros", k, key="phrase_id").orderBy(
+        "phrase_id", "rnk"
+    )
+
+
 def query_bm25_phrases(
     spark: SparkSession,
     path: str,
     phrases: tuple[tuple[str, tuple[str, ...]], ...],
     k: int,
 ) -> DataFrame:
-    """BM25-weighted phrase serve from the positional layout (module
-    comment): exact match counts from the bucket-pruned position scan,
-    phrase df from the match relation, dl from the doclen sidecar,
-    stats from the persisted one-row relation, two-phase rank on the
-    integer-micros score."""
-    terms = sorted({w for _, ws in phrases for w in ws})
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    pos = (
-        read_layout(spark, path, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-        .select("doc_id", "term", "pos")
+    """BM25-weighted phrase serve from the monolithic positional layout
+    (module comment): the reader's pruned position scan, doclen and
+    stats row, exact match counts, then the BM25-phrase scorer."""
+    pos, dl, stats = _index_read(
+        spark, path, (w for _, ws in phrases for w in ws), _POS, doclen=True, stats=True
     )
-    matches = _phrase_match_counts(pos, phrases)
-    df_rel = matches.groupBy("phrase_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    dl_rel = read_layout(spark, path, "doclen").select("doc_id", "dl")
-    stats = read_layout(spark, path, "stats").select("n_docs", "avgdl")
-    scored = (
-        matches.join(F.broadcast(df_rel), "phrase_id")
-        .join(dl_rel, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("phrase_id", "doc_id", F.expr(_S51_CONTRIB).alias("score_micros"))
-    )
-    return _topn_two_phase(scored, "score_micros", k, key="phrase_id").orderBy(
-        "phrase_id", "rnk"
-    )
+    return _bm25_phrase_rank(_phrase_match_counts(pos, phrases), dl, stats, k)
 
 
 def query_bm25_phrases_segmented(
@@ -362,61 +283,24 @@ def query_bm25_phrases_segmented(
     k: int,
     mgen: int | None = None,
 ) -> DataFrame:
-    """BM25-weighted phrase serve over the MAINTAINED positional layout
-    (round 12b): the s51 scoring on the s47 segment union — termset-
-    pruned scan, generation-scoped tombstone anti-join on positions AND
-    doclen (phrase tf and dl both come from live versions only),
-    delta-merged stats, optional manifest pin. Unregistered (machinery
-    = s51 + s48, both oracle-pinned); equivalence with the monolithic
-    serve over the live corpus is tested in tests/test_round12b_ops.py."""
-    from dbt_osmosis_spark.operators.retrieval_ext import (
-        _apply_scoped_tombstones,
-        _live_segments,
-        _read_segments_tagged,
-        _scoped_tombstones,
-        _segments_with_terms,
-        _stats_agg,
+    """BM25-weighted phrase serve over the segmented positional layout:
+    the segmented reader's live positions and doclen (phrase tf and dl
+    both from live versions only) and delta-merged stats, exact match
+    counts, then the BM25-phrase scorer; ``mgen`` pins a manifest
+    snapshot. Unregistered (s51 pins the scorer, s48 the reader);
+    equality with the monolithic serve over the live corpus is tested."""
+    read = _segmented_read(
+        spark, path, (w for _, ws in phrases for w in ws), mgen, _POS,
+        doclen=True, stats=True,
     )
-
-    segs = _live_segments(path, mgen)
-    terms = sorted({w for _, ws in phrases for w in ws})
-    segs = _segments_with_terms(spark, path, segs, terms)
-    if not segs:
-        return spark.createDataFrame(
-            [], "phrase_id string, rnk bigint, doc_id bigint, score_micros bigint"
-        )
-    probes = sorted({_s34_tbkt_py(t) for t in terms})
-    tombs = _scoped_tombstones(spark, path, mgen=mgen)
-    pos = (
-        _read_segments_tagged(spark, path, segs, "postings")
-        .filter(F.col("tbkt").isin(probes))
-        .filter(F.col("term").isin(terms))
-    )
-    pos = _apply_scoped_tombstones(pos, tombs).select("doc_id", "term", "pos")
-    matches = _phrase_match_counts(pos, phrases)
-    df_rel = matches.groupBy("phrase_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    dl_rel = _apply_scoped_tombstones(
-        _read_segments_tagged(spark, path, segs, "doclen"), tombs
-    ).select("doc_id", "dl")
-    stats = _stats_agg(spark, path, mgen)
-    scored = (
-        matches.join(F.broadcast(df_rel), "phrase_id")
-        .join(dl_rel, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("phrase_id", "doc_id", F.expr(_S51_CONTRIB).alias("score_micros"))
-    )
-    return _topn_two_phase(scored, "score_micros", k, key="phrase_id").orderBy(
-        "phrase_id", "rnk"
-    )
+    if read is None:
+        return _empty_ranked(spark, "phrase_id", "score_micros")
+    pos, dl, stats = read
+    return _bm25_phrase_rank(_phrase_match_counts(pos, phrases), dl, stats, k)
 
 
 @register("s51_bm25_phrase_rank", oracle=_s51_oracle())
 def s51_bm25_phrase_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional-index build (idempotent, shared with s43/s45/s46/s50)
     + one BM25-weighted phrase serve (module comment)."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s43_index_path(sf_dir)
-    write_positional_index(spark, docs, path)
-    return query_bm25_phrases(spark, path, _S51_PHRASES, _S51_K)
+    return query_bm25_phrases(spark, _build_s43_index(spark, sf_dir), _S51_PHRASES, _S51_K)

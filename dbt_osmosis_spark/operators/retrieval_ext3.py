@@ -1,4 +1,4 @@
-"""Lexical retrieval, part 4: segment pruning + time travel (round 12).
+"""Lexical retrieval, part 4: segment pruning + time travel.
 
 - s52  termset segment pruning — every segment carries a tiny
        term-dictionary sidecar (distinct terms), and every segmented
@@ -17,9 +17,9 @@
        partitions + stats partitions) without compacting, the
        Iceberg-commit / Lucene-commit-point analog; a serve pinned to
        that generation reproduces the index state at the checkpoint
-       even after later upsert-ingests, deletes, and a compaction.
-       Round 11's manifests pinned only the SEGMENT set; round 12 pins
-       tombstones and stats too, so the pinned BM25 answer is exact.
+       even after later upsert-ingests, deletes, and a compaction. The
+       manifest pins the segment set, the tombstone partitions and the
+       stats partitions, so the pinned BM25 answer is exact.
 
 Reference parity: the reference ships SQL to a warehouse
 (src/dbt_osmosis/core/sql_operations.py:69); maintained-index serving
@@ -33,12 +33,12 @@ from pyspark.sql import functions as F
 
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.retrieval import _QUERY_TERMS, _QUERY_VALUES
-from dbt_osmosis_spark.operators.sinks import run_sinks
 from dbt_osmosis_spark.operators.retrieval_ext import (
     _S39_MOD,
     _S39_ORACLE,
     _S39_REM,
     _S48_ORACLE,
+    _ingest_slices,
     _s47_layout_path,
     checkpoint_manifest,
     compact_segments,
@@ -75,29 +75,16 @@ def s52_termset_segment_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rare-term query — the serve consults the termset sidecars and
     never lists a term-free segment's posting files. The one collect is
     the doc_id max (metadata-sized), which sizes the spans."""
-    import shutil
-
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s47_layout_path(sf_dir, "ts")
-    shutil.rmtree(path, ignore_errors=True)
     hi = docs.agg(F.max("doc_id")).first()[0]
     span = hi // _S52_SEGMENTS + 1
-    # spans are disjoint by construction — no prior version to supersede
-    # (upsert=False), and each ingest writes its own segment dir + stats
-    # partition, so all four are submitted concurrently (guide §2.6)
-    run_sinks(
-        *(
-            lambda i=i: ingest_positional_segment(
-                spark,
-                docs.filter(
-                    (F.col("doc_id") >= i * span) & (F.col("doc_id") < (i + 1) * span)
-                ),
-                path,
-                i,
-                upsert=False,
-            )
-            for i in range(_S52_SEGMENTS)
-        )
+    _ingest_slices(
+        spark,
+        ingest_positional_segment,
+        docs,
+        path,
+        *(f"doc_id >= {i * span} AND doc_id < {(i + 1) * span}" for i in range(_S52_SEGMENTS)),
     )
     delete_segmented(
         spark,
@@ -131,20 +118,10 @@ def s53_time_travel_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the maintained positional index AS OF a checkpoint manifest
     (module comment): later upserts, deletes, and a compaction leave the
     pinned answer byte-identical to the snapshot state."""
-    import shutil
-
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
     path = _s47_layout_path(sf_dir, "tt")
-    shutil.rmtree(path, ignore_errors=True)
-    # guide §2.6: disjoint base slices, disjoint segment dirs — upsert
-    # is a provable no-op for the base loads, ingests run concurrently
-    run_sinks(
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 < 8), path, 0, upsert=False
-        ),
-        lambda: ingest_positional_segment(
-            spark, docs.filter(F.col("doc_id") % 10 >= 8), path, 1, upsert=False
-        ),
+    _ingest_slices(
+        spark, ingest_positional_segment, docs, path, "doc_id % 10 < 8", "doc_id % 10 >= 8"
     )
     delete_segmented(
         spark, path, docs.filter(F.col("doc_id") % 7 == 2).select("doc_id"), 0

@@ -20,7 +20,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from dbt_osmosis_spark.operators import load_all
+from dbt_osmosis_spark.operators import load_all, retrieval_ext
 from dbt_osmosis_spark.operators.retrieval_ext import (
     _live_segments,
     _scoped_tombstones,
@@ -152,11 +152,10 @@ def test_tombstone_broadcast_is_size_conditional(spark, monkeypatch, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        monkeypatch.delenv("SPARK_GRAFT_TOMB_BCAST_BYTES", raising=False)
         small = query_bm25_segmented(spark, path, (("q", "beta"),))
         small_plan = physical_plan(small)
         assert "BroadcastHashJoin" in small_plan and "LeftAnti" in small_plan
-        monkeypatch.setenv("SPARK_GRAFT_TOMB_BCAST_BYTES", "0")
+        monkeypatch.setattr(retrieval_ext, "_TOMB_BCAST_BYTES", 0)
         big = query_bm25_segmented(spark, path, (("q", "beta"),))
         big_plan = physical_plan(big)
         assert "SortMergeJoin" in big_plan and "LeftAnti" in big_plan

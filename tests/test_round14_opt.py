@@ -10,7 +10,7 @@ Pins the behavior round-14 optimizations changed internals of:
 
 from __future__ import annotations
 
-from dbt_osmosis_spark.operators import load_all
+from dbt_osmosis_spark.operators import load_all, retrieval_ext
 from dbt_osmosis_spark.operators.retrieval import query_postings_index
 from dbt_osmosis_spark.operators.retrieval_ext import (
     bake_postings_index,
@@ -50,11 +50,10 @@ def test_incremental_serve_tombstone_broadcast_is_size_conditional(
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        monkeypatch.delenv("SPARK_GRAFT_TOMB_BCAST_BYTES", raising=False)
         small = query_segmented_postings(spark, path, (("q", "beta"),))
         small_plan = physical_plan(small)
         assert "BroadcastHashJoin" in small_plan and "LeftAnti" in small_plan
-        monkeypatch.setenv("SPARK_GRAFT_TOMB_BCAST_BYTES", "0")
+        monkeypatch.setattr(retrieval_ext, "_TOMB_BCAST_BYTES", 0)
         big = query_segmented_postings(spark, path, (("q", "beta"),))
         big_plan = physical_plan(big)
         assert "SortMergeJoin" in big_plan and "LeftAnti" in big_plan
@@ -76,10 +75,8 @@ def test_delete_apply_and_compaction_gated_results_identical(
     try:
         results = {}
         for mode in ("bcast", "shuffle"):
-            if mode == "bcast":
-                monkeypatch.delenv("SPARK_GRAFT_TOMB_BCAST_BYTES", raising=False)
-            else:
-                monkeypatch.setenv("SPARK_GRAFT_TOMB_BCAST_BYTES", "0")
+            if mode == "shuffle":
+                monkeypatch.setattr(retrieval_ext, "_TOMB_BCAST_BYTES", 0)
             path = str(tmp_path / f"r14-tomb-compact-{mode}")
             _build_layout(spark, path)
             out = str(tmp_path / f"r14-tomb-out-{mode}")
@@ -94,8 +91,8 @@ def test_delete_apply_and_compaction_gated_results_identical(
 
 
 def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch, tmp_path):
-    """Round 14: with fewer live segments than
-    $SPARK_GRAFT_TERMSET_PROBE_MIN_SEGS (default 3) the termset probe
+    """With fewer live segments than
+    ``_TERMSET_PROBE_MIN_SEGS`` (3) the termset probe
     job is skipped — _segments_with_terms returns the segments unchanged
     — and the serve result is identical to the probed serve (pruning is
     a pure optimization either way)."""
@@ -111,11 +108,10 @@ def test_termset_probe_skipped_below_segment_bound(spark, monkeypatch, tmp_path)
     segs = _live_segments(path)
     assert segs == ["seg-0", "seg-1"]
     # default bound (3): 2 segments -> probe skipped, nothing pruned
-    monkeypatch.delenv("SPARK_GRAFT_TERMSET_PROBE_MIN_SEGS", raising=False)
     assert _segments_with_terms(spark, path, segs, ["beta"]) == segs
     skipped = query_segmented_postings(spark, path, (("q", "beta"),)).collect()
     # bound lowered to 2: the probe runs and prunes the beta-free segment
-    monkeypatch.setenv("SPARK_GRAFT_TERMSET_PROBE_MIN_SEGS", "2")
+    monkeypatch.setattr(retrieval_ext, "_TERMSET_PROBE_MIN_SEGS", 2)
     assert _segments_with_terms(spark, path, segs, ["beta"]) == ["seg-0"]
     probed = query_segmented_postings(spark, path, (("q", "beta"),)).collect()
     assert skipped == probed and len(probed) == 1

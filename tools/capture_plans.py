@@ -14,8 +14,9 @@ plan the bench times. A one-line summary (exchange count, join
 strategies) heads each file.
 
 Plans are always normalized (``normalize``): expression ids, exchange
-``plan_id``s, the repository root and the per-process ``-<pid>`` suffix
-of scratch layouts are replaced by placeholders, and scan locations are
+``plan_id``s, RDD and codegen-stage counters, the repository root and
+the per-process ``-<pid>`` suffix of scratch layouts are replaced by
+placeholders, and scan locations are
 rendered untruncated. Two captures of the same plans — from two
 checkouts, two processes — are then byte-equal, so ``diff -r`` of two
 capture directories is empty exactly when the plans are equal.
@@ -37,11 +38,14 @@ from dbt_osmosis_spark.session import get_spark  # noqa: E402
 
 def normalize(plan: str) -> str:
     """Replace the run-specific tokens of a formatted plan with fixed
-    placeholders: ``#123`` expression ids, ``plan_id=N``, the repository
-    root and the ``-<pid>`` suffix of per-process scratch layouts."""
+    placeholders: ``#123`` expression ids, ``plan_id=N``, the session's
+    RDD and whole-stage-codegen counters, the repository root and the
+    ``-<pid>`` suffix of per-process scratch layouts."""
     plan = plan.replace(_REPO, "<repo>")
     plan = re.sub(rf"-{os.getpid()}(?=[/\],\s]|$)", "-<pid>", plan)
     plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    plan = re.sub(r"codegen id : \d+", "codegen id : N", plan)
     return re.sub(r"plan_id=\d+", "plan_id=N", plan)
 
 
