@@ -30,7 +30,7 @@ from pyspark.sql.window import Window as W
 from dbt_osmosis_spark.functions.timeutil import epoch_us_sql as _eus
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.relational import session_break_flag, t
-from dbt_osmosis_spark.sources.parquet import read_layout
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout
 
 # --------------------------------------------------------------------------
 # q55: peak concurrent sessions per hour — distributed sweep line
@@ -574,8 +574,6 @@ def q61_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # column is a DATE-derived string (day), keeping per-partition file counts
 # bounded (one dir per day, not per timestamp).
 
-import os as _os
-
 _Q62_FROM = "2024-01-10"
 _Q62_TO = "2024-01-13"  # exclusive
 
@@ -591,9 +589,7 @@ ORDER BY day, event_type
 
 
 def _q62_layout_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".events_by_day", tag)
+    return _scratch_path(".events_by_day", sf_dir, "q62")
 
 
 def build_partitioned_events(spark: SparkSession, sf_dir: str) -> str:

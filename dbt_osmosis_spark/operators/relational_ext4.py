@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from dbt_osmosis_spark.functions.timeutil import epoch_us_sql as _eus
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.relational import t
-from dbt_osmosis_spark.sources.parquet import read_layout
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout
 
 # --------------------------------------------------------------------------
 # q73: ordered conversion funnel — chained conditional-min aggregates
@@ -373,9 +373,7 @@ import os as _os  # noqa: E402
 
 
 def _q76_layout_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".events_zorder", tag)
+    return _scratch_path(".events_zorder", sf_dir, "q76")
 
 
 def build_zorder_events(spark: SparkSession, sf_dir: str) -> str:
@@ -974,9 +972,7 @@ ORDER BY event_type
 
 
 def _q81_paths(sf_dir: str) -> tuple[str, str]:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    base = _os.path.join(repo, ".events_compact", tag)
+    base = _scratch_path(".events_compact", sf_dir, "q81")
     return _os.path.join(base, "frag"), _os.path.join(base, "compacted")
 
 

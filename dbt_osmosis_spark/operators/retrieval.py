@@ -40,7 +40,7 @@ from pyspark.sql.window import Window as W
 from dbt_osmosis_spark.operators import register
 from dbt_osmosis_spark.operators.caching import keep_cached
 from dbt_osmosis_spark.operators.sinks import run_sinks
-from dbt_osmosis_spark.sources.parquet import read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_parquet, spread
 
 _K = 5  # top-k per query
 _BUCKETS = 32  # two-phase rank fan-in
@@ -770,12 +770,8 @@ def _s34_tbkt_py(term: str) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % _S34_NB
 
 
-def _s34_index_path(sf_dir: str) -> str:
-    import os as _os2
-
-    repo = _os2.path.dirname(_os2.path.dirname(_os2.path.dirname(_os2.path.abspath(__file__))))
-    tag = _os2.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os2.path.join(repo, ".postings_index", tag)
+def _s34_index_path(sf_dir: str, op: str = "s34") -> str:
+    return _scratch_path(".postings_index", sf_dir, op)
 
 
 def write_postings_index(spark: SparkSession, docs: DataFrame, path: str) -> None:
@@ -1147,8 +1143,6 @@ def s35_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index.
 
 def _s36_index_path(sf_dir: str) -> str:
-    from dbt_osmosis_spark.operators.retrieval_ext import _scratch_path
-
     return _scratch_path(".postings_tiered", sf_dir, "s36")
 
 
@@ -1356,7 +1350,7 @@ def s38_qld_postings_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_osmosis_spark.operators.retrieval_ext import _index_read
 
     docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"))
-    path = _s34_index_path(sf_dir)
+    path = _s34_index_path(sf_dir, "s38")
     write_postings_index(spark, docs, path)
     qterms = spark.createDataFrame(
         list(_QUERY_TERMS), "query_id string, term string"

@@ -33,9 +33,14 @@ Segmented-layout invariants:
 - a segment whose termset sidecar holds none of the query terms is never
   listed; pruning never changes an answer (sidecar-less segments are
   always kept);
-- ``mgen=None`` serves the current manifest's view; ``mgen=G`` serves
-  exactly manifest G's segments, tombstone partitions and stats
-  partitions, which stay on disk until ``vacuum_segments``.
+- every operation reads the manifest once (``_view``) and serves or
+  writes from that one generation: ``mgen=None`` is the current
+  manifest's view, ``mgen=G`` exactly manifest G's segments, tombstone
+  partitions and stats partitions, which stay on disk until
+  ``vacuum_segments``;
+- each kind of state has one writer: segments ``_segment_sinks``,
+  tombstones with their negative stats delta ``_tombstone_sinks``,
+  manifests ``_cut_manifest``.
 
 Reference parity: the reference ships SQL to a warehouse
 (src/dbt_osmosis/core/sql_operations.py:69); the index-maintenance
@@ -46,6 +51,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +73,7 @@ from dbt_osmosis_spark.operators.retrieval import (
     _s34_tbkt_py,
     _topn_two_phase,
 )
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout, read_parquet, spread
 
 _S39_MOD = 7  # registered delete set: doc_id % 7 == 3
 _S39_REM = 3
@@ -118,32 +124,6 @@ SELECT query_id, CAST(rnk AS BIGINT) AS rnk, doc_id, score_micros
 FROM ranked WHERE rnk <= {_K}
 ORDER BY query_id, rnk
 """
-
-
-_SCRATCH_PATHS: set[str] = set()
-
-
-def _scratch_path(root: str, sf_dir: str, op: str = "") -> str:
-    """Per-process scratch directory ``<repo>/<root>/<sf tag>[-op]-<pid>``
-    for a registered op's layout. These ops rebuild their layout on
-    every call (rmtree + ingest), so two PROCESSES running them against
-    the same sf_dir concurrently (e.g. a scale probe next to the test
-    suite) would race on rmtree vs read; the pid suffix isolates them,
-    and within one process every reader sees the same path. The
-    directory is removed when the interpreter exits."""
-    import atexit
-    import os as _os
-    import shutil
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    if op:
-        tag = f"{tag}-{op}"
-    path = _os.path.join(repo, root, f"{tag}-{_os.getpid()}")
-    if path not in _SCRATCH_PATHS:
-        _SCRATCH_PATHS.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def _s39_index_path(sf_dir: str) -> str:
@@ -203,13 +183,14 @@ def bake_postings_index(spark: SparkSession, path: str, out_path: str) -> None:
     """Rewrite the live view of a segmented layout as a clean s34-format
     layout: live postings with df baked in, one-row stats (n_docs,
     avgdl, c_tot), term-bucket partitioning preserved."""
-    # the tombstone-filtered postings feed BOTH the df aggregate and the
-    # join's probe side — persisted for the call so the segments are
+    # the tombstone-filtered postings feed both the df aggregate and the
+    # join's probe side: persisted for the call so the segments are
     # scanned (and the anti-join run) once; the two sinks run concurrently
+    view = _view(path)
     postings = (
         _apply_scoped_tombstones(
-            _read_segments_tagged(spark, path, _live_segments(path), "postings"),
-            _scoped_tombstones(spark, path),
+            _read_segments_tagged(spark, path, view.segments, "postings"),
+            _scoped_tombstones(spark, view),
         )
         .drop("seg_gen")
         .persist()
@@ -351,16 +332,10 @@ ORDER BY phrase_id, rnk
 def _positional_tokens(docs: DataFrame) -> DataFrame:
     """(term, doc_id, pos): pos = 1-based index among a doc's non-empty
     tokens — the s42/oracle position rule (positions assigned AFTER
-    dropping empty tokens).
-
-    Round 14 (guide §2.4, remove shuffles outright): empties are dropped
-    INSIDE the token array (higher-order ``filter``) before posexplode,
-    so the position is the array index directly. The r13 form assigned
-    it with a row_number window partitioned by doc_id — a corpus-sized
-    Exchange + Sort paid by EVERY positional build/ingest (s42/s43/s45/
-    s46 builds, every s47–s53 lifecycle segment, the streaming twin).
-    Output is byte-identical: row_number over the raw split order of the
-    surviving tokens == 1 + index in the filtered array."""
+    dropping empty tokens). Empties are dropped inside the token array
+    before ``posexplode``, so the position is the array index and no
+    per-doc window (an exchange and a sort) is needed; the result equals
+    the oracle's row_number over the raw split order."""
     toks = F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
     return docs.select(
         "doc_id", F.posexplode(toks).alias("_p0", "term")
@@ -514,37 +489,22 @@ def _s43_index_path(sf_dir: str) -> str:
 
 
 def write_positional_index(spark: SparkSession, docs: DataFrame, path: str) -> None:
-    """Build + persist the positional layout: one tokenization, one
-    per-doc position window (row_number over the raw split order AFTER
-    dropping empty tokens — the s42/oracle position rule), written
-    partitioned by the md5 term bucket (the s34 rule, so serve-side
+    """Build + persist the positional layout: one tokenization into
+    (term, doc_id, pos) rows, written partitioned by the md5 term bucket (the s34 rule, so serve-side
     probe planning hashes terms identically in Python).
 
     Also persists the doc-keyed doclen sidecar (dl = 0 for zero-token
     docs) and the one-row corpus stats, making the layout a COMPLETE
     index: BM25 serves from it too (s45 below), since tf/df are
     derivable from positions — store positions once, derive frequencies
-    (the Lucene discipline).
-
-    Round 13 (guide §1.2, the ingest_positional_segment move): the
-    positional relation is persisted for the span of the build and the
-    doclen/stats sinks roll up from it (dl = count of a doc's position
-    rows — exact: pos holds one row per non-empty token), so the
-    tokenize+window runs once instead of three times (the r12 form
-    re-tokenized for dl and again inside the stats write).
-
-    Round 14 (guide §2.4): positions come from _positional_tokens —
-    array-index positions, no per-doc window, one less corpus-sized
-    shuffle+sort per build."""
+    (the Lucene discipline). Positions come from ``_positional_tokens``
+    (array-index positions, no per-doc window); doclen and stats are
+    map-only token-array-size scans of ``docs``."""
     pos = (
         _positional_tokens(docs).withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
     ).persist()
     try:
-        # three disjoint-directory sinks, submitted concurrently (§2.6).
-        # Round 14 (guide §2.4): doclen is a map-only token-array-size
-        # scan (no pos groupBy, no left join — zero-token docs get dl = 0
-        # from the empty array) and sum_dl is the cached relation's row
-        # count, so the stats sink never re-aggregates per doc.
+        # three disjoint-directory sinks, submitted concurrently
         run_sinks(
             lambda: (
                 pos.repartition("tbkt")
@@ -648,13 +608,11 @@ def _seg_id(seg: str) -> int:
 
 
 def _list_segments(path: str) -> list[str]:
-    """Every INGESTED segment directory on disk (numeric order).
-    Compaction outputs use the ``cseg-`` prefix, deliberately invisible
-    here: a reader on a layout with no manifest yet can never observe a
-    half-published merge (the manifest pointer is the only thing that
-    makes a compacted segment visible). After a compaction this listing
-    still includes retained pre-compaction segments until
-    ``vacuum_segments`` — readers want ``_live_segments``."""
+    """Every ingested ``seg-`` directory on disk, in id order. Compaction
+    outputs use the ``cseg-`` prefix and are never listed here: only a
+    published manifest makes a compacted segment live. After a compaction
+    the listing still holds the merged-away segments until
+    ``vacuum_segments``; readers want ``_view(path).segments``."""
     import os as _os
 
     if not _os.path.isdir(path):
@@ -669,8 +627,6 @@ def _list_segments(path: str) -> list[str]:
     )
 
 
-
-
 def _dir_bytes(path: str) -> int:
     import os as _os
 
@@ -681,39 +637,39 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-# --- generation-scoped tombstones + manifest --------------------------------
-# A tombstone row is (doc_id, gen): "this doc is deleted from every segment
-# whose id is <= gen". Deleting always stamps gen = the highest live segment
-# id, so a LATER re-ingest of the same doc (into a higher-id segment) serves
-# its new version — delete-then-repost and document revisions both work
-# (Lucene's deleted-docs + generation ordering). Re-ingest is safe because
-# ingest itself upserts: it tombstones any prior version of the batch's
-# docs at gen = seg_id - 1 (see _upsert_supersede), so the
-# one-doc-one-LIVE-version invariant is enforced, not assumed.
+# --- tombstones, stats deltas and manifests -----------------------------------
+# A tombstone row (doc_id, gen) deletes the doc from every segment whose id
+# is <= gen. A delete stamps gen = the highest live segment id; an upsert
+# ingest tombstones the prior versions of its batch's docs at gen =
+# seg_id - 1. A later re-ingest (a higher segment id) therefore serves the
+# new version, and each doc has at most one live version.
 #
-# Tombstone partitions (deletes/delete=<id>) come from three writers in
-# disjoint id namespaces, so none can ever overwrite another:
-#   [0, 1e6)    user delete batches (delete_segmented asserts the bound)
-#   [1e6, 2e6)  upsert supersede-sets: delete = 1e6 + seg_id
-#   [2e6, ...)  compaction survivor sets: delete = 2e6 + manifest gen
+# Tombstone partitions (deletes/delete=<v>) have three writers in disjoint
+# id namespaces, so none overwrites another:
+#   [0, 1e6)    user delete batches: v = delete_id
+#   [1e6, 2e6)  upsert supersede sets: v = 1e6 + seg_id
+#   [2e6, ...)  compaction survivor sets: v = 2e6 + manifest gen
+# A value that a manifest retired or lists in ``live_deletes`` is never
+# written again: the writer bumps it by whole ``_DELETE_EPOCH_NS`` epochs
+# (a delete stream restarted with a fresh checkpoint reuses id 0).
 #
-# Compaction is non-destructive: it writes the merged segment plus a
-# survivor tombstone partition, then publishes a manifest
-# (manifest-<G>.json listing live segments + retired delete partitions)
-# via an atomic pointer rename (_MANIFEST). Pre-compaction segments stay
-# on disk until vacuum_segments, so a reader holding any manifest
-# generation serves a consistent segment set.
+# Stats are additive one-row (n_docs, sum_dl) deltas, one partition per
+# write: ingest-<seg_id> (positive), delete-<v> and upsert-<v> (negative).
+# A negative delta subtracts the latest LIVE version of each doc, read with
+# the writer's own partition left out. A replay of the same batch id
+# therefore re-lands the same delta, and a replay whose id was bumped past
+# a compaction finds its docs already dead and lands a zero delta: each
+# version is subtracted once.
+#
+# Each operation reads the manifest once (``_view``) and works from that
+# one generation, so a compaction published mid-operation can never pair
+# one generation's segment list with another's tombstone filter. Writers
+# publish a generation by writing manifest-<G>.json and then renaming the
+# _MANIFEST pointer (``_cut_manifest``). Pre-compaction segments and
+# partitions stay on disk until ``vacuum_segments``, so a reader of any
+# older generation still serves a consistent set.
 _UPSERT_TOMB_NS = 1_000_000
 _COMPACT_TOMB_NS = 2_000_000
-# A compaction RETIRES partition values (consolidating their content into
-# its survivor set). A client may still legitimately reuse a retired id —
-# a delete stream restarted with a fresh checkpoint restarts batch ids at
-# 0 — so writers bump colliding values by whole epochs instead of writing
-# into (invisible) retired partitions. Stats deltas are keyed by the
-# bumped PHYSICAL value too: a replay that crosses a compaction lands in
-# a fresh partition, and because deltas are computed from current
-# LIVENESS (not batch content), the re-landed delta is zero — deletes
-# subtract exactly once under replay, reuse, and compaction interleaving.
 _DELETE_EPOCH_NS = 10_000_000
 # A tombstone relation whose live partitions hold at most this many bytes
 # on disk is broadcast-hinted (32 MiB of parquet fits executor memory
@@ -721,43 +677,6 @@ _DELETE_EPOCH_NS = 10_000_000
 _TOMB_BCAST_BYTES = 32 * 1024 * 1024
 # Fewest live segments for which a serve runs the termset probe.
 _TERMSET_PROBE_MIN_SEGS = 3
-
-
-def _manifest_referenced_delete_parts(path: str) -> set[int]:
-    """Delete-partition values referenced by ANY published manifest's
-    ``live_deletes`` — a pinned snapshot's tombstone set must stay
-    immutable (ADVICE r12), so writers may never overwrite them."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    vals: set[int] = set()
-    for p in _glob.glob(_os.path.join(path, "manifest-*.json")):
-        try:
-            with open(p) as fh:
-                m = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        vals.update(int(v) for v in (m.get("live_deletes") or []))
-    return vals
-
-
-def _delete_partition_value(path: str, base_id: int) -> int:
-    """Physical partition value for a writer's logical delete id: bump by
-    whole epochs past every RETIRED value (compaction consolidated its
-    content — writing there would be invisible) and every value a
-    published manifest's ``live_deletes`` references (ADVICE r12: a
-    delete stream restarted with a fresh checkpoint reuses id 0; without
-    this bound the overwrite would silently rewrite a pinned snapshot's
-    tombstones). The prior partition's content stays on disk as applied
-    history — overwriting it was dropping previously-applied deletes."""
-    protected = set(_retired_delete_parts(path)) | _manifest_referenced_delete_parts(
-        path
-    )
-    v = base_id
-    while v in protected:
-        v += _DELETE_EPOCH_NS
-    return v
 
 
 def _manifest_gen(path: str) -> int | None:
@@ -781,97 +700,133 @@ def _read_manifest(path: str, mgen: int | None = None) -> dict | None:
         return _json.load(fh)
 
 
-def _live_segments(path: str, mgen: int | None = None) -> list[str]:
-    """The segment set a reader should serve. Pointer view (mgen=None):
-    the current manifest's segments plus any segment ingested after its
-    watermark (post-compaction ingests). Pinned view (mgen=G): exactly
-    manifest G's segment list — a consistent historical snapshot (its
-    segments are retained on disk until vacuum)."""
+class _View(NamedTuple):
+    """A segmented layout as one manifest generation serves it."""
+
+    path: str
+    gen: int  # the manifest generation read; 0 before the first publish
+    segments: list[str]
+    retired: list[int]  # delete partitions a compaction consolidated
+    live_deletes: list[int] | None = None  # pinned: delete partitions at cut
+    stats_parts: list[str] | None = None  # pinned: stats partitions at cut
+    centroids: str | None = None  # a retrain's centroid artifact
+
+
+def _view(path: str, mgen: int | None = None) -> _View:
+    """Read the manifest once and describe the layout as that generation
+    serves it. Pointer view (``mgen=None``): the current manifest's
+    segments plus every ``seg-`` directory above its watermark (ingests
+    after the cut); without a manifest, every ``seg-`` directory. Pinned
+    view (``mgen=G``): exactly manifest G's segments, delete partitions
+    and stats partitions, which stay on disk until ``vacuum_segments``."""
     import os as _os
 
-    segs = _list_segments(path)
     m = _read_manifest(path, mgen)
     if m is None:
-        return segs
-    live = [
-        s for s in m["segments"] if _os.path.isdir(_os.path.join(path, s, "postings"))
-    ]
-    if mgen is not None:
-        return sorted(live, key=_seg_id)
-    w = m["seg_watermark"]
-    return sorted(set(live) | {s for s in segs if _seg_id(s) > w}, key=_seg_id)
+        return _View(path, 0, _list_segments(path), [])
+    segs = {s for s in m["segments"] if _os.path.isdir(_os.path.join(path, s, "postings"))}
+    pinned = mgen is not None
+    if not pinned:
+        segs |= {s for s in _list_segments(path) if _seg_id(s) > m["seg_watermark"]}
+    return _View(
+        path,
+        m["gen"],
+        sorted(segs, key=_seg_id),
+        list(m["retired_deletes"]),
+        list(m["live_deletes"]) if pinned else None,
+        list(m["stats_parts"]) if pinned else None,
+        m.get("centroids"),
+    )
 
 
-def _retired_delete_parts(path: str, mgen: int | None = None) -> list[int]:
-    m = _read_manifest(path, mgen)
-    return list(m["retired_deletes"]) if m else []
+def _live_segments(path: str, mgen: int | None = None) -> list[str]:
+    """The segment list of ``_view(path, mgen)``."""
+    return _view(path, mgen).segments
+
+
+def _manifest_referenced_delete_parts(path: str) -> set[int]:
+    """Delete-partition values listed in any published manifest's
+    ``live_deletes``: a pinned snapshot's tombstone set is immutable."""
+    import glob as _glob
+    import json as _json
+    import os as _os
+
+    vals: set[int] = set()
+    for p in _glob.glob(_os.path.join(path, "manifest-*.json")):
+        try:
+            with open(p) as fh:
+                m = _json.load(fh)
+        except (OSError, ValueError):
+            continue
+        vals.update(int(v) for v in (m.get("live_deletes") or []))
+    return vals
+
+
+def _delete_partition_value(view: _View, base_id: int) -> int:
+    """Physical partition value for a writer's logical delete id:
+    ``base_id`` bumped by whole epochs past every value the view retired
+    and every value a published manifest's ``live_deletes`` lists. A
+    partition written under an earlier epoch stays on disk as applied
+    history."""
+    protected = set(view.retired) | _manifest_referenced_delete_parts(view.path)
+    v = base_id
+    while v in protected:
+        v += _DELETE_EPOCH_NS
+    return v
+
+
+def _live_delete_parts(view: _View) -> list[int]:
+    """The delete partitions the view reads: a pinned view's
+    ``live_deletes``, else the values on disk minus the retired ones."""
+    import os as _os
+
+    if view.live_deletes is not None:
+        return list(view.live_deletes)
+    if not _os.path.isdir(f"{view.path}/deletes"):
+        return []
+    on_disk = sorted(
+        int(d.split("=")[1])
+        for d in _os.listdir(f"{view.path}/deletes")
+        if d.startswith("delete=")
+    )
+    retired = set(view.retired)
+    return [p for p in on_disk if p not in retired]
+
+
+def _live_tombstone_bytes(view: _View) -> int:
+    """On-disk bytes of the delete partitions the view reads (no job)."""
+    return sum(_dir_bytes(f"{view.path}/deletes/delete={v}") for v in _live_delete_parts(view))
 
 
 def _scoped_tombstones(
-    spark: SparkSession,
-    path: str,
-    exclude_delete_id: int | None = None,
-    mgen: int | None = None,
+    spark: SparkSession, view: _View, exclude_delete_id: int | None = None
 ) -> DataFrame:
-    """The live (doc_id, gen) tombstone relation: every delete partition
-    except the ones a compaction retired (their content was consolidated
-    into that compaction's survivor partition) and, for replay-safe
-    writers, the caller's own partition. A PINNED read (mgen=G) of a
-    snapshot-complete manifest (one that records ``live_deletes``) reads
-    exactly the partitions live at cut time, so tombstones written AFTER
-    the snapshot never leak into a time-travel serve. The relation is
-    broadcast-hinted while its live partitions hold at most
-    ``_TOMB_BCAST_BYTES`` on disk."""
+    """The live (doc_id, gen) tombstone relation of the view: a pinned
+    view's ``live_deletes`` partitions, else every partition the view did
+    not retire (a retired partition's content lives on in its
+    compaction's survivor partition). A replay-safe writer leaves its own
+    partition out with ``exclude_delete_id``. The relation is
+    broadcast-hinted while its partitions hold at most
+    ``_TOMB_BCAST_BYTES`` on disk; a larger one gets a shuffled anti-join
+    instead of an executor-sized broadcast."""
     import os as _os
 
-    if not _os.path.isdir(f"{path}/deletes"):
+    if not _os.path.isdir(f"{view.path}/deletes"):
         # an in-memory empty relation Spark cannot prove empty: without
         # the hint every segment branch plans a shuffled anti-join
         return F.broadcast(spark.createDataFrame([], "doc_id bigint, gen bigint"))
-    t = read_layout(spark, path, "deletes")
-    m = _read_manifest(path, mgen) if mgen is not None else None
-    if m is not None and "live_deletes" in m:
-        live = list(m["live_deletes"])
+    t = read_layout(spark, view.path, "deletes")
+    if view.live_deletes is not None:
+        live = view.live_deletes
         t = t.filter(F.col("delete").isin(live) if live else F.lit(False))
-    else:
-        retired = _retired_delete_parts(path, mgen)
-        if retired:
-            t = t.filter(~F.col("delete").isin(retired))
+    elif view.retired:
+        t = t.filter(~F.col("delete").isin(view.retired))
     if exclude_delete_id is not None:
         t = t.filter(F.col("delete") != exclude_delete_id)
     out = t.select("doc_id", "gen")
-    # broadcast-hint the tombstones only while their live partitions are
-    # small ON DISK (a filesystem bound, no job): a mass takedown between
-    # compactions can grow them past any broadcast size, and un-hinted,
-    # AQE picks a shuffled anti-join instead of an executor-OOM broadcast
-    if _live_tombstone_bytes(path, mgen) <= _TOMB_BCAST_BYTES:
+    if _live_tombstone_bytes(view) <= _TOMB_BCAST_BYTES:
         out = F.broadcast(out)
     return out
-
-
-def _live_tombstone_bytes(path: str, mgen: int | None = None) -> int:
-    """On-disk bytes of the delete partitions the current (or pinned)
-    view actually reads — pure os.walk over the live partition dirs."""
-    import os as _os
-
-    base = f"{path}/deletes"
-    if not _os.path.isdir(base):
-        return 0
-    m = _read_manifest(path, mgen) if mgen is not None else None
-    if m is not None and "live_deletes" in m:
-        parts = [int(v) for v in m["live_deletes"]]
-    else:
-        retired = set(_retired_delete_parts(path, mgen))
-        parts = []
-        for d in _os.listdir(base):
-            if d.startswith("delete="):
-                try:
-                    v = int(d.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if v not in retired:
-                    parts.append(v)
-    return sum(_dir_bytes(_os.path.join(base, f"delete={v}")) for v in parts)
 
 
 def _stats_parts(path: str) -> list[str]:
@@ -887,26 +842,21 @@ def _stats_parts(path: str) -> list[str]:
     )
 
 
-def _stats_agg(spark: SparkSession, path: str, mgen: int | None = None) -> DataFrame:
-    """One-row (n_docs, avgdl) merged from the stats deltas. Stats are
-    net-additive history, so the pointer view sums everything; a pinned
-    view of a snapshot-complete manifest sums only the partitions that
-    existed at cut time (partition-pruned by the ``part`` column), so
-    later ingests/deletes don't skew a time-travel serve's n_docs/avgdl."""
+def _stats_agg(spark: SparkSession, view: _View) -> DataFrame:
+    """One-row (n_docs, avgdl) summed from the view's stats deltas: every
+    partition for the pointer view, the partitions recorded at cut time
+    for a pinned one. An empty sum (a snapshot cut before any ingest, a
+    fully deleted corpus) is n_docs = 0 with NULL avgdl, never NULL
+    n_docs."""
     import os as _os
 
-    if not _os.path.isdir(f"{path}/stats"):
+    if not _os.path.isdir(f"{view.path}/stats"):
         # never-ingested layout: zero docs, undefined avgdl
         return spark.createDataFrame([(0, None)], "n_docs bigint, avgdl double")
-    rel = read_layout(spark, path, "stats")
-    m = _read_manifest(path, mgen) if mgen is not None else None
-    if m is not None and "stats_parts" in m:
-        parts = list(m["stats_parts"])
+    rel = read_layout(spark, view.path, "stats")
+    if view.stats_parts is not None:
+        parts = view.stats_parts
         rel = rel.filter(F.col("part").isin(parts) if parts else F.lit(False))
-    # Coalesce + guarded division: a pinned view whose
-    # stats_parts is empty (checkpoint cut on an empty layout) or a
-    # fully-deleted corpus must yield n_docs = 0 with NULL avgdl — not
-    # NULL-poisoned BM25 contribs downstream.
     return rel.agg(
         F.coalesce(F.sum("n_docs"), F.lit(0)).cast("bigint").alias("n_docs"),
         F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
@@ -1025,20 +975,18 @@ def _index_read(
 
 def _segmented_read(
     spark: SparkSession,
-    path: str,
+    view: _View,
     terms: Iterable[str],
-    mgen: int | None = None,
     cols: tuple[str, ...] | None = None,
     *,
     doclen: bool = False,
     stats: bool = False,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None] | None:
-    """The segmented layout's reader: (postings, doclen, stats) of the
-    live view, or None when no segment can hold a query term (a
+    """The segmented layout's reader: (postings, doclen, stats) of
+    ``view``, or None when no segment can hold a query term (a
     never-ingested layout, or every segment termset-pruned).
 
-    Segments are the pointer view (``mgen=None``) or manifest ``mgen``'s
-    pinned list, termset-pruned to ``terms``. Postings are the tagged
+    Segments are the view's list, termset-pruned to ``terms``. Postings are the tagged
     per-segment scans, term-pruned, minus every row a scoped tombstone
     covers, projected to ``cols`` (else all columns but ``seg_gen``).
     doclen (doc_id, dl) passes the same tombstone relation, so tf and dl
@@ -1046,17 +994,17 @@ def _segmented_read(
     (n_docs, avgdl) of the same view. doclen and stats are read only
     when the scorer asks for them (None otherwise)."""
     terms = sorted(set(terms))
-    segs = _segments_with_terms(spark, path, _live_segments(path, mgen), terms)
+    segs = _segments_with_terms(spark, view.path, view.segments, terms)
     if not segs:
         return None
-    agg = _stats_agg(spark, path, mgen) if stats else None
-    tombs = _scoped_tombstones(spark, path, mgen=mgen)
+    agg = _stats_agg(spark, view) if stats else None
+    tombs = _scoped_tombstones(spark, view)
     postings = _apply_scoped_tombstones(
-        _term_pruned(_read_segments_tagged(spark, path, segs, "postings"), terms), tombs
+        _term_pruned(_read_segments_tagged(spark, view.path, segs, "postings"), terms), tombs
     )
     dl = (
         _apply_scoped_tombstones(
-            _read_segments_tagged(spark, path, segs, "doclen"), tombs
+            _read_segments_tagged(spark, view.path, segs, "doclen"), tombs
         ).select("doc_id", "dl")
         if doclen
         else None
@@ -1076,16 +1024,12 @@ def _has_parquet_files(d: str) -> bool:
 
 
 def _write_bucketed(spark: SparkSession, rel: DataFrame, out: str) -> None:
-    """Bucket-partitioned postings write, hardened for the empty case
-    (ADVICE r12): a ``partitionBy`` write of an EMPTY relation lands no
-    parquet files at all, so any later read of the directory fails
-    schema inference and a compaction whose merged rows are all
-    tombstoned (or an empty micro-batch ingest) poisons the layout.
-    When that happens, drop in a schema-carrying empty FLAT file with
-    the partition column cast to the type partition discovery infers
-    (int), so per-segment reads see the same schema either way. The
-    fallback costs one empty-relation write and only runs when the
-    filesystem shows no data files — never on the hot path."""
+    """Bucket-partitioned postings write that always leaves a readable
+    directory: a ``partitionBy`` write of an empty relation lands no
+    parquet file, and a later read of the directory would fail schema
+    inference. In that case a schema-carrying empty flat file is written,
+    with ``tbkt`` cast to the int that partition discovery infers, so
+    per-segment reads see one schema either way."""
     rel.repartition("tbkt").write.partitionBy("tbkt").mode("overwrite").parquet(out)
     if not _has_parquet_files(out):
         (
@@ -1096,91 +1040,58 @@ def _write_bucketed(spark: SparkSession, rel: DataFrame, out: str) -> None:
         )
 
 
-def _write_termset(spark: SparkSession, seg_path: str, terms_rel: DataFrame) -> None:
-    """Write the segment's term-dictionary sidecar (distinct terms) —
-    vocabulary-sized, read by _segments_with_terms to skip segments at
-    serve time. Derived from the IN-FLIGHT postings relation (round 13,
-    VERDICT r12 item 5): the r12 form re-read the segment it had just
-    written — a full extra segment read per ingest (the documented
-    ~1.5x wall on the s44/s47/s48 lifecycle entries) and a hard crash
-    when the written relation was empty (no files to infer a schema
-    from, ADVICE r12). ``terms_rel`` must be a relation whose ``term``
-    column holds exactly the segment's physical terms (the pre-join tf
-    relation at ingest, the tombstone-filtered merge at compaction), so
-    the sidecar content is unchanged. Non-lexical layouts (e.g. the s54
-    vector segments, whose postings carry no term column) get no
-    sidecar — _segments_with_terms treats sidecar-less segments as
-    always-kept, so this is a no-op for them."""
-    if "term" not in terms_rel.columns:
-        return
-    (
-        terms_rel.select("term")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{seg_path}/termset")
-    )
-
-
-def _upsert_supersede_sinks(
-    spark: SparkSession, docs_batch: DataFrame, path: str, seg_id: int
-) -> tuple[list, object]:
-    """Build (but do not run) the supersede sink thunks, so an ingest
-    can submit them CONCURRENTLY with its own segment sinks (round 14,
-    guide §2.6 — the supersede phase previously ran strictly after the
-    four ingest sinks, serializing a doc-sized read+window behind the
-    corpus-sized postings write it is independent of). Returns
-    ``(sinks, cleanup)``; cleanup releases the persisted prior-doclen
-    relation and must run after the sinks complete.
-
-    Every input DataFrame — including the tombstone read that excludes
-    this upsert's own partition by value — is constructed HERE, before
-    any sink is submitted, so its parquet file listing is snapshotted
-    and a concurrent sink's write can never race it (ADVICE r13: the
-    built-before-run_sinks invariant, now explicit). The supersede
-    sinks write deletes/delete=<own> and stats/part=upsert-<own>,
-    disjoint from the ingest's seg-<id>/* and stats/part=ingest-<id>
-    directories. Crash-partial states (tombstones landed, segment
-    absent — or the reverse) are repaired by replaying the same seg_id,
-    the layout's standing replay contract; overlapping the sinks adds
-    no NEW partial state class, only new interleavings of it."""
-    # only LOWER-generation segments can hold prior versions; restricting
-    # the scan to them also makes a crash-REPLAY of this segment
-    # recompute byte-equivalent tombstones/stats (lower segments are
-    # immutable), even if higher segments landed in between. The listing
-    # also never sees this ingest's own (possibly concurrent) segment
-    # dir: seg_id itself is excluded by the < bound.
-    prior_segs = [s for s in _live_segments(path) if _seg_id(s) < seg_id]
-    if not prior_segs:
-        return [], (lambda: None)
-    batch_ids = docs_batch.select("doc_id").distinct()
-    # prior_dl feeds BOTH sinks (tombstone ids + latest-live stats);
-    # persisted for the call so the doclen semi-join runs once, and the
-    # two disjoint-directory sinks run concurrently (guide §2.6 — the
-    # stats side's tombstone read excludes this partition by value, so
-    # it never races the concurrent tombstone write).
-    prior_dl = (
-        _read_segments_tagged(spark, path, prior_segs, "doclen")
-        .join(batch_ids, "doc_id", "left_semi")
-        .persist()
-    )
-    own_part = _delete_partition_value(path, _UPSERT_TOMB_NS + seg_id)
-    existing = _scoped_tombstones(spark, path, exclude_delete_id=own_part)
-    live_prior = _apply_scoped_tombstones(prior_dl, existing)
-    # round 14 (guide §2.3): the latest live version per doc is a
-    # max_by aggregate, not a row_number window — same one exchange but
-    # map-side partial aggregation and no per-partition sort; (doc_id,
-    # seg_gen) is unique (a doc appears at most once per segment), so
-    # max_by has no ties.
-    latest = live_prior.groupBy("doc_id").agg(
-        F.expr("max_by(dl, seg_gen)").alias("dl")
-    )
-    sinks = [
-        lambda: (
-            prior_dl.select("doc_id")
+def _segment_sinks(
+    spark: SparkSession, seg_dir: str, postings: DataFrame, doclen: DataFrame
+) -> list:
+    """The sink thunks of one immutable segment under ``seg_dir``: the
+    ``tbkt``-bucketed ``postings``, the termset sidecar of its distinct
+    terms (lexical postings only; sidecar-less segments are never pruned)
+    and the doc-keyed ``doclen`` (doc_id, dl). Every segment writer
+    (the ingests, compaction, retrain) submits them with its other sinks."""
+    sinks = [lambda: _write_bucketed(spark, postings, f"{seg_dir}/postings")]
+    if "term" in postings.columns:
+        sinks.append(
+            lambda: postings.select("term")
             .distinct()
-            .withColumn("gen", F.lit(seg_id - 1).cast("bigint"))
             .write.mode("overwrite")
-            .parquet(f"{path}/deletes/delete={own_part}")
+            .parquet(f"{seg_dir}/termset")
+        )
+    sinks.append(lambda: doclen.write.mode("overwrite").parquet(f"{seg_dir}/doclen"))
+    return sinks
+
+
+def _tombstone_sinks(
+    spark: SparkSession,
+    view: _View,
+    part: int,
+    ids: DataFrame,
+    gen: int,
+    prior_dl: DataFrame | None,
+    kind: str,
+) -> list:
+    """The two sink thunks of one tombstone batch: ``ids`` stamped with
+    ``gen`` into deletes/delete=<part>, and the negative (n_docs, sum_dl)
+    delta of the latest live version of each doc in ``prior_dl``
+    (seg_gen-tagged doclen rows; None when no segment exists) into the
+    ``<kind>-<part>`` stats partition. Liveness is read with ``part``
+    itself left out (the replay rule above), so the two sinks are
+    independent and run concurrently. (doc_id, seg_gen) is unique, so
+    ``max_by`` picks one version per doc."""
+    if prior_dl is None:
+        latest = spark.createDataFrame([], "doc_id bigint, dl bigint")
+    else:
+        latest = (
+            _apply_scoped_tombstones(
+                prior_dl, _scoped_tombstones(spark, view, exclude_delete_id=part)
+            )
+            .groupBy("doc_id")
+            .agg(F.expr("max_by(dl, seg_gen)").alias("dl"))
+        )
+    return [
+        lambda: (
+            ids.withColumn("gen", F.lit(gen).cast("bigint"))
+            .write.mode("overwrite")
+            .parquet(f"{view.path}/deletes/delete={part}")
         ),
         lambda: (
             latest.agg(
@@ -1188,280 +1099,212 @@ def _upsert_supersede_sinks(
                 (-F.coalesce(F.sum("dl"), F.lit(0))).cast("bigint").alias("sum_dl"),
             )
             .write.mode("overwrite")
-            .parquet(f"{path}/stats/part=upsert-{own_part}")
+            .parquet(f"{view.path}/stats/part={kind}-{part}")
         ),
     ]
+
+
+def _upsert_supersede_sinks(
+    spark: SparkSession, docs_batch: DataFrame, view: _View, seg_id: int
+) -> tuple[list, object]:
+    """The tombstone sinks that supersede every prior version of the
+    batch's docs at gen = seg_id - 1, built but not run, so an ingest
+    submits them with its segment sinks. Returns ``(sinks, cleanup)``;
+    cleanup releases the persisted prior doclen rows after the sinks ran.
+    Only segments below ``seg_id`` can hold a prior version, and they are
+    immutable, so a replay of the same ``seg_id`` rewrites the same
+    partitions. A layout with no lower segment gets no sinks."""
+    prior_segs = [s for s in view.segments if _seg_id(s) < seg_id]
+    if not prior_segs:
+        return [], (lambda: None)
+    prior_dl = (
+        _read_segments_tagged(spark, view.path, prior_segs, "doclen")
+        .join(docs_batch.select("doc_id").distinct(), "doc_id", "left_semi")
+        .persist()
+    )
+    part = _delete_partition_value(view, _UPSERT_TOMB_NS + seg_id)
+    sinks = _tombstone_sinks(
+        spark, view, part, prior_dl.select("doc_id").distinct(), seg_id - 1, prior_dl,
+        "upsert",
+    )
     return sinks, prior_dl.unpersist
 
 
-def _upsert_supersede(
-    spark: SparkSession, docs_batch: DataFrame, path: str, seg_id: int
+def _ingest(
+    spark: SparkSession,
+    docs_batch: DataFrame,
+    path: str,
+    seg_id: int,
+    upsert: bool,
+    postings: DataFrame,
+    doclen: DataFrame,
+    stats: DataFrame,
+    cached: DataFrame | None = None,
 ) -> None:
-    """Enforce the one-doc-one-LIVE-version invariant at ingest: any
-    PRIOR version of this batch's docs is tombstoned at gen = seg_id - 1
-    (so the new segment's version wins — delete+add, the Lucene update
-    discipline), and the latest still-live prior version's (n_docs, dl)
-    is subtracted as a stats delta so corpus stats stay exact under
-    re-ingest. No prior segments, or no overlap, degenerates to two
-    empty-partition writes of batch-semi-joined doc-sized reads — never
-    an index scan. Idempotent per seg_id (own partitions excluded from
-    the liveness read), same replay contract as the ingest itself."""
-    sinks, cleanup = _upsert_supersede_sinks(spark, docs_batch, path, seg_id)
+    """Land one batch as segment ``seg-<seg_id>``: its segment sinks, the
+    one-row positive ``stats`` delta in the ``ingest-<seg_id>`` stats
+    partition and, with ``upsert``, the supersede sinks, all submitted in
+    one run_sinks (they write disjoint directories, and every input is
+    built first). ``cached``, a relation persisted for the ingest, is
+    released after. Idempotent per ``seg_id``: a replay overwrites the
+    same content."""
+    sup_sinks, sup_cleanup = (
+        _upsert_supersede_sinks(spark, docs_batch, _view(path), seg_id)
+        if upsert
+        else ([], lambda: None)
+    )
     try:
-        run_sinks(*sinks)
+        run_sinks(
+            *_segment_sinks(spark, f"{path}/seg-{seg_id}", postings, doclen),
+            lambda: stats.write.mode("overwrite").parquet(
+                f"{path}/stats/part=ingest-{seg_id}"
+            ),
+            *sup_sinks,
+        )
     finally:
-        cleanup()
+        if cached is not None:
+            cached.unpersist()
+        sup_cleanup()
 
 
 def ingest_segment(
     spark: SparkSession, docs_batch: DataFrame, path: str, seg_id: int,
     upsert: bool = True,
 ) -> None:
-    """Write one document batch as its own immutable segment (postings +
-    doclen sidecar) plus an additive stats delta. Idempotent overwrite
-    per segment id — the exactly-once contract of every sink here.
-    With ``upsert`` (default), prior versions of the batch's docs are
-    superseded (_upsert_supersede), so re-ingesting a revised document
-    serves the revision.
-
-    Round 13: ONE tokenize feeds all four sinks — the term-aggregated tf
-    relation is persisted for the span of the ingest (batch-sized, far
-    smaller than the raw explode the first r13 tranche persisted) and
-    the r12 form's per-sink re-tokenizations (+ a read-back of the
-    written segment) are gone; the four independent sinks are submitted
-    concurrently (guide §2.6). Released before returning.
-
-    Round 14 (guide §2.4): dl rides the tf aggregation from the
-    map-side token-array size (_doc_tokens_with_dl) — the dl groupBy,
-    the tf⋈dl join, and the doclen sink's left join are gone; doclen is
-    a map-only scan of the batch (zero-token docs get dl = 0 from the
-    empty array).
-
-    Round 14 (guide §2.6): the supersede pass's two sinks are submitted
-    IN THE SAME run_sinks as the segment sinks — they touch disjoint
-    directories and their inputs are snapshotted before submission
-    (_upsert_supersede_sinks), so the doc-sized supersede work back-fills
-    the postings write's straggler tail instead of running serially
-    after it."""
-    tf = _doc_tf(docs_batch).persist()  # round 14 (§2.4): map-side doc-local fold
-    upsert_sinks, upsert_cleanup = (
-        _upsert_supersede_sinks(spark, docs_batch, path, seg_id)
-        if upsert
-        else ([], lambda: None)
+    """Write one document batch as its own immutable bag-of-words segment
+    (postings with tf and dl, termset, doclen) plus its stats delta. One
+    map-side tokenize, persisted for the ingest, feeds the postings and
+    the termset. With ``upsert`` (default), prior versions of the batch's
+    docs are superseded, so re-ingesting a revised document serves the
+    revision."""
+    tf = _doc_tf(docs_batch).persist()
+    _ingest(
+        spark, docs_batch, path, seg_id, upsert,
+        tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT)).select("term", "doc_id", "tf", "dl", "tbkt"),
+        _doc_dl(docs_batch),
+        _doc_dl_stats(docs_batch),
+        cached=tf,
     )
-    try:
-        run_sinks(
-            lambda: _write_bucketed(
-                spark,
-                tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
-                .select("term", "doc_id", "tf", "dl", "tbkt"),
-                f"{path}/seg-{seg_id}/postings",
-            ),
-            lambda: _write_termset(spark, f"{path}/seg-{seg_id}", tf),
-            lambda: (
-                _doc_dl(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/seg-{seg_id}/doclen")
-            ),
-            lambda: (
-                # one map-only batch pass (§2.4), independent of the tf cache
-                _doc_dl_stats(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/stats/part=ingest-{seg_id}")
-            ),
-            *upsert_sinks,
-        )
-    finally:
-        tf.unpersist()
-        upsert_cleanup()
 
 
 def delete_segmented(
     spark: SparkSession, path: str, doc_ids: DataFrame, delete_id: int
 ) -> None:
-    """Tombstone batch against the segmented layout, generation-scoped:
-    the tombstones are stamped with gen = the highest live segment id,
-    so they kill every CURRENT version of the doc but a later re-ingest
-    (higher-gen segment) serves its new version. Stats subtract exactly
-    the latest still-live version of each batch doc (double-delete
-    subtracts once; deleting a never-ingested or already-dead doc
-    subtracts zero), recovered from the doc-keyed doclen sidecars.
-    Safe on an EMPTY layout (tombstone recorded against gen -1, i.e. it
-    kills nothing, and the stats delta is zero) — a delete batch landing
-    before any document batch no longer crashes or skews stats
-    (ADVICE r11). Safe under id REUSE across a compaction (a delete
-    stream restarted with a fresh checkpoint): retired partition values
-    are epoch-bumped, never overwritten (_delete_partition_value), so
-    compaction survivors can't be clobbered and prior deletions never
-    resurrect (ADVICE r11, medium)."""
+    """Tombstone batch ``delete_id`` against the segmented layout, stamped
+    with gen = the highest live segment id: it kills every current version
+    of the docs, and a later re-ingest serves again. The stats delta
+    subtracts the latest live version of each doc, read from the doclen
+    sidecars, so a double delete, or a delete of a never-ingested doc,
+    subtracts zero. On a layout with no segment the tombstone gets gen -1
+    and kills nothing."""
     assert 0 <= delete_id < _UPSERT_TOMB_NS, (
         f"user delete ids live in [0, {_UPSERT_TOMB_NS}); {delete_id} would "
         "collide with the upsert/compaction tombstone namespaces"
     )
-    part = _delete_partition_value(path, delete_id)
-    segs = _live_segments(path)
-    cur_gen = max((_seg_id(s) for s in segs), default=-1)
+    view = _view(path)
     ids = doc_ids.select("doc_id").distinct()
-    if segs:
-        # round 13: the stats delta derives from the IN-FLIGHT distinct
-        # id relation (identical content to the tombstone partition the
-        # r12 form read back after writing it), so the two sinks are
-        # independent and run concurrently (guide §2.6). The scoped-
-        # tombstone read excludes this batch's partition by value, so
-        # it never races the concurrent tombstone write.
-        mine = _read_segments_tagged(spark, path, segs, "doclen").join(
+    mine = (
+        _read_segments_tagged(spark, path, view.segments, "doclen").join(
             F.broadcast(ids), "doc_id", "left_semi"
         )
-        prior = _scoped_tombstones(spark, path, exclude_delete_id=part)
-        # round 14 (guide §2.3): latest-live-version dl via max_by —
-        # map-side partials, no window sort; (doc_id, seg_gen) unique.
-        doc_dl = (
-            _apply_scoped_tombstones(mine, prior)
-            .groupBy("doc_id")
-            .agg(F.expr("max_by(dl, seg_gen)").alias("dl"))
-        )
-    else:
-        doc_dl = spark.createDataFrame([], "doc_id bigint, dl bigint")
+        if view.segments
+        else None
+    )
     run_sinks(
-        lambda: (
-            ids.withColumn("gen", F.lit(cur_gen).cast("bigint"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/deletes/delete={part}")
-        ),
-        lambda: (
-            doc_dl.agg(
-                (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
-                (-F.coalesce(F.sum("dl"), F.lit(0))).cast("bigint").alias("sum_dl"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{path}/stats/part=delete-{part}")
-        ),
+        *_tombstone_sinks(
+            spark,
+            view,
+            _delete_partition_value(view, delete_id),
+            ids,
+            max((_seg_id(s) for s in view.segments), default=-1),
+            mine,
+            "delete",
+        )
     )
 
 
 def compact_segments(spark: SparkSession, path: str) -> dict[str, int]:
-    """Size-tiered merge (module comment): fold every live segment except
-    the largest into one new segment, dropping rows covered by a
-    generation-scoped tombstone; consolidate the live tombstone
-    partitions into one survivor set (only tombstones still referencing
-    a KEPT segment's docs survive); leave the base segment's files
-    byte-untouched. The swap is published atomically: write the new
-    segment + survivor partition + manifest-<G>.json, then rename the
-    _MANIFEST pointer — pre-compaction segments and delete partitions
-    stay on disk (a concurrent reader holding any manifest generation
-    serves a consistent set) until vacuum_segments reclaims them.
-    Returns {merged, new_seg, manifest} for observability."""
-    import json as _json
+    """Size-tiered merge: fold every live segment except the largest into
+    one new segment, dropping the rows a tombstone covers, and consolidate
+    the live tombstone partitions into one survivor partition holding only
+    the tombstones of docs still in a kept segment. The base segment's
+    files are not touched. The merged segment takes the highest merged
+    id as its generation (its rows are all live, so they stay exactly as
+    killable) and is named ``cseg-<G>-<id>``, unlisted until manifest G
+    publishes it. Stats are already net and are not touched. Returns
+    {merged, new_seg, manifest}."""
     import os as _os
 
-    segs = _live_segments(path)
+    view = _view(path)
+    segs = view.segments
     if len(segs) < 2:
-        return {"merged": 0, "new_seg": -1, "manifest": _manifest_gen(path) or 0}
+        return {"merged": 0, "new_seg": -1, "manifest": view.gen}
     sizes = {s: _dir_bytes(_os.path.join(path, s)) for s in segs}
     base = max(sizes, key=lambda s: (sizes[s], s))
     merge = [s for s in segs if s != base]
-    # The merged segment's generation = the HIGHEST merged input's: its
-    # surviving rows are all live (scoped tombstones applied at merge),
-    # so taking the max merged gen preserves exactly their killability —
-    # and compaction never consumes a new id, so an external monotonic
-    # ingest counter (e.g. streaming batch ids) can never collide with
-    # it. The dir name carries the manifest gen for uniqueness and the
-    # cseg- prefix keeps it invisible to listing-readers until the
-    # manifest pointer publishes it (see _list_segments).
-    new_mgen = (_manifest_gen(path) or 0) + 1
-    new_id = max(_seg_id(s) for s in merge)
-    new_seg = f"cseg-{new_mgen}-{new_id}"
+    new_mgen = view.gen + 1
+    new_seg = f"cseg-{new_mgen}-{max(_seg_id(s) for s in merge)}"
 
-    tombs = _scoped_tombstones(spark, path)
+    tombs = _scoped_tombstones(spark, view)
     postings = _read_segments_tagged(spark, path, merge, "postings")
     doclen = _read_segments_tagged(spark, path, merge, "doclen")
-    # layout-agnostic: whatever posting columns the segments carry
-    # (bag-of-words tf/dl or positional pos) pass through unchanged —
-    # compaction only drops dead rows and re-buckets. Surviving rows are
-    # live by construction, so collapsing them into the (highest-gen)
-    # new segment cannot resurrect or shadow anything.
-    # Round 14 (guide §5): merged_doclen feeds TWO consumers (its own
-    # sink + the survivor membership probe) — doc-sized, so the persist
-    # is nearly free and saves a second doclen scan + anti-join.
-    # merged_postings also feeds two sinks (bucketed write + termset),
-    # but persisting IT was tried and REVERTED: same-host per-phase A/B
-    # on s44's compact phase measured 1.24 s unpersisted vs 1.81 s
-    # persisted (229 → 341 tasks — the cache materialization is pure
-    # added work when the two consumer sinks already run concurrently
-    # over the same files via run_sinks and the OS page cache; guide §5,
-    # cache only when recompute beats the pressure).
+    # the posting columns pass through whatever the layout is; the merged
+    # doclen feeds its own sink and the survivor probe, so it is persisted
     merged_postings = _apply_scoped_tombstones(postings, tombs).drop("seg_gen")
     merged_doclen = (
         _apply_scoped_tombstones(doclen, tombs).drop("seg_gen").persist()
     )
-    retired_now = sorted(
-        set(_live_delete_parts(path)) | set(_retired_delete_parts(path))
-    )
-    # Round 13 (guide §2.6): the merged-segment sinks (postings, termset
-    # — derived from the in-flight merge relation, no read-back of the
-    # file just written — doclen, and the tombstone-survivor partition)
-    # all write disjoint directories and are submitted concurrently; the
-    # atomic manifest publish still happens strictly after every sink
-    # has landed, so the consistency discipline is unchanged.
-    sinks = [
-        lambda: _write_bucketed(spark, merged_postings, f"{path}/{new_seg}/postings"),
-        lambda: _write_termset(spark, f"{path}/{new_seg}", merged_postings),
-        lambda: merged_doclen.write.mode("overwrite").parquet(
-            f"{path}/{new_seg}/doclen"
-        ),
-    ]
+    retired = sorted(set(_live_delete_parts(view)) | set(view.retired))
+    sinks = _segment_sinks(spark, f"{path}/{new_seg}", merged_postings, merged_doclen)
+    survivor_part = _COMPACT_TOMB_NS + new_mgen
+    live_deletes: list[int] = []
     if _os.path.isdir(f"{path}/deletes"):
-        # survivors = tombstones still referencing a kept segment's docs
-        # (the base's dead rows are still physically present; the merged
-        # segments' dead rows are gone, so their tombstones retire).
-        # Membership comes from the kept DOCLEN sidecars — doc-sized,
-        # never an index scan. gen scoping is preserved on the rows
-        # (the new segment's side uses the in-flight merged doclen
-        # relation; equal content by construction).
+        # survivors: tombstones of docs still in the base or the merged
+        # segment, probed against doc-sized doclen rows
         kept_docs = (
             _read_segments_tagged(spark, path, [base], "doclen")
             .select("doc_id")
             .unionByName(merged_doclen.select("doc_id"))
         )
         survivors = tombs.join(kept_docs, "doc_id", "left_semi")
+        live_deletes = [survivor_part]
         sinks.append(
             lambda: survivors.write.mode("overwrite").parquet(
-                f"{path}/deletes/delete={_COMPACT_TOMB_NS + new_mgen}"
+                f"{path}/deletes/delete={survivor_part}"
             )
         )
     try:
         run_sinks(*sinks)
     finally:
         merged_doclen.unpersist()
-    manifest = {
-        "gen": new_mgen,
-        "segments": [base, new_seg],
-        # post-compaction ingests are the seg- dirs above every id that
-        # was live when this manifest was cut
-        "seg_watermark": max(_seg_id(s) for s in segs),
-        "retired_deletes": retired_now,
-        # snapshot-complete (round 12): a pinned read of THIS generation
-        # uses exactly the tombstone partitions + stats deltas live at
-        # cut time — post-compaction the only live tombstone set is the
-        # survivor partition just written
-        "live_deletes": (
-            [_COMPACT_TOMB_NS + new_mgen] if _os.path.isdir(f"{path}/deletes") else []
-        ),
-        "stats_parts": _stats_parts(path),
-    }
-    _carry_centroids(path, manifest)
-    _publish_manifest(path, manifest)
+    _cut_manifest(view, [base, new_seg], retired, live_deletes)
     return {"merged": len(merge), "new_seg": new_seg, "manifest": new_mgen}
 
 
-def _carry_centroids(path: str, manifest: dict) -> None:
-    """Carry the current manifest's centroid-artifact pointer (set by a
-    vector-index retrain, similarity_ext5.retrain_vector_index) into a
-    new manifest — compactions and checkpoints must not silently revert
-    a retrained index to its original centroids."""
-    cur = _read_manifest(path)
-    if cur and cur.get("centroids"):
-        manifest["centroids"] = cur["centroids"]
+def _cut_manifest(
+    view: _View,
+    segments: list[str],
+    retired: list[int],
+    live_deletes: list[int],
+    centroids: str | None = None,
+) -> int:
+    """Publish generation ``view.gen + 1`` with the given segment list,
+    retired and live delete partitions, the stats partitions on disk now
+    and a watermark at the view's highest segment id (later ``seg-``
+    ingests lie above it). The view's centroid pointer is carried unless
+    ``centroids`` replaces it. Returns the new generation."""
+    manifest = {
+        "gen": view.gen + 1,
+        "segments": segments,
+        "seg_watermark": max((_seg_id(s) for s in view.segments), default=-1),
+        "retired_deletes": retired,
+        "live_deletes": live_deletes,
+        "stats_parts": _stats_parts(view.path),
+    }
+    if centroids or view.centroids:
+        manifest["centroids"] = centroids or view.centroids
+    _publish_manifest(view.path, manifest)
+    return manifest["gen"]
 
 
 def _publish_manifest(path: str, manifest: dict) -> None:
@@ -1480,60 +1323,25 @@ def _publish_manifest(path: str, manifest: dict) -> None:
 
 
 def checkpoint_manifest(path: str) -> int:
-    """Cut a named consistent snapshot of the layout WITHOUT compacting
-    — the Iceberg-commit / Lucene-commit-point analog (round 12, s53).
-    The manifest records the live segment list, the live tombstone
-    partitions, and the stats partitions at cut time, so a serve pinned
-    to this generation (``mgen=``) reproduces the index state at the
-    checkpoint even after later ingests, deletes, upserts, or a
-    compaction — until ``vacuum_segments`` reclaims what a NEWER
-    manifest no longer references (the documented pin-vs-vacuum
-    contract). Returns the new manifest generation.
-
-    A never-ingested layout (directory absent) checkpoints as an empty
-    snapshot (ADVICE r12): the dir is created so _publish_manifest's
-    pointer write has somewhere to land, mirroring the empty-layout
-    hardening of delete_segmented and the serves."""
+    """Cut a named snapshot of the layout without compacting: the live
+    segments, delete partitions and stats partitions at cut time. A serve
+    pinned to it (``mgen=``) reproduces this state after later ingests,
+    deletes and compactions, until ``vacuum_segments`` reclaims what a
+    newer manifest no longer references. A never-ingested layout
+    checkpoints as an empty snapshot. Returns the new generation."""
     import os as _os
 
     _os.makedirs(path, exist_ok=True)
-    segs = _live_segments(path)
-    manifest = {
-        "gen": (_manifest_gen(path) or 0) + 1,
-        "segments": segs,
-        "seg_watermark": max((_seg_id(s) for s in segs), default=-1),
-        "retired_deletes": _retired_delete_parts(path),
-        "live_deletes": _live_delete_parts(path),
-        "stats_parts": _stats_parts(path),
-    }
-    _carry_centroids(path, manifest)
-    _publish_manifest(path, manifest)
-    return manifest["gen"]
-
-
-def _live_delete_parts(path: str, mgen: int | None = None) -> list[int]:
-    """Delete partition values on disk minus the manifest-retired ones."""
-    import os as _os
-
-    if not _os.path.isdir(f"{path}/deletes"):
-        return []
-    on_disk = sorted(
-        int(d.split("=")[1])
-        for d in _os.listdir(f"{path}/deletes")
-        if d.startswith("delete=")
-    )
-    retired = set(_retired_delete_parts(path, mgen))
-    return [p for p in on_disk if p not in retired]
+    view = _view(path)
+    return _cut_manifest(view, view.segments, view.retired, _live_delete_parts(view))
 
 
 def vacuum_segments(path: str) -> dict[str, int]:
     """Reclaim everything the current manifest no longer references:
     merged-away segments (id <= watermark and not in the live list),
-    retired delete partitions, and superseded manifest files. Stats
-    partitions are history (net-additive) and are never touched. Safe to
-    run any time no reader is pinned to an OLDER manifest generation —
-    the separation of publish (atomic pointer rename) from reclaim is
-    the whole point of the manifest."""
+    retired delete partitions, superseded manifest files and centroid
+    artifacts. Stats partitions are net-additive history and are never
+    touched. Safe whenever no reader is pinned to an older generation."""
     import os as _os
     import shutil as _sh
 
@@ -1601,7 +1409,7 @@ def query_segmented_postings(
     reader's live postings (tf and dl in the rows) and delta-merged
     stats, scored by the BM25 tail with df counted from the surviving
     postings. ``mgen`` pins the serve to a manifest generation."""
-    read = _segmented_read(spark, path, (t for _, t in query_terms), mgen, stats=True)
+    read = _segmented_read(spark, _view(path, mgen), (t for _, t in query_terms), stats=True)
     if read is None:
         return _empty_ranked(spark, "query_id", "score_micros")
     postings, _, stats = read
@@ -1801,58 +1609,17 @@ def ingest_positional_segment(
     upsert: bool = True,
 ) -> None:
     """One document batch as an immutable positional segment: postings
-    (term, doc_id, pos) bucket-partitioned, doc-keyed doclen sidecar,
-    additive stats delta. Positions are per-doc (row_number within the
-    doc), so they are segment-independent by construction. With
-    ``upsert`` (default), prior versions of the batch's docs are
-    superseded (_upsert_supersede) — re-ingesting a revised document
-    serves the revision, including after a delete (re-add).
-
-    Round 14 (guide §2.4): positions come from _positional_tokens —
-    array-index positions, no per-doc row_number window, one less
-    batch-sized shuffle+sort per ingest.
-
-    Round 14 (guide §2.6): the supersede pass's two sinks join the same
-    run_sinks as the segment sinks (disjoint directories, inputs
-    snapshotted before submission — _upsert_supersede_sinks), so the
-    doc-sized supersede work back-fills the postings write's straggler
-    tail instead of running serially after it."""
-    # Round 14 (guide §5 — cache only when recompute beats the pressure;
-    # measured A/B): the r13 persist of the POSITION-LEVEL relation is
-    # gone. After the stats sink moved to its own map-only batch pass
-    # (_doc_dl_stats), only two sinks consume pos — the postings write
-    # (once) and the vocabulary-sized termset rollup — and materializing
-    # a cache LARGER than the batch to save one extra map-side tokenize
-    # lost the A/B: best-of-6 at sf0.1, persisted vs not — s49 6.51 vs
-    # 5.91 s, s53 8.18 vs 7.53 s, s47 5.11 vs 5.09 s (medians agree).
+    (term, doc_id, pos) bucket-partitioned, termset, doclen, plus its
+    stats delta. Positions are per document, so they do not depend on
+    the segment. With ``upsert`` (default), prior versions of the batch's
+    docs are superseded: re-ingesting a revised document serves the
+    revision, also after a delete. The position relation is not cached:
+    only the postings write and the vocabulary-sized termset read it."""
     pos = _positional_tokens(docs_batch).withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
-    upsert_sinks, upsert_cleanup = (
-        _upsert_supersede_sinks(spark, docs_batch, path, seg_id)
-        if upsert
-        else ([], lambda: None)
+    _ingest(
+        spark, docs_batch, path, seg_id, upsert, pos, _doc_dl(docs_batch),
+        _doc_dl_stats(docs_batch),
     )
-    try:
-        # four disjoint-directory sinks, submitted concurrently (guide
-        # §2.6). Round 14 (guide §2.4): doclen and stats are map-only
-        # token-array-size scans of the batch.
-        run_sinks(
-            lambda: _write_bucketed(spark, pos, f"{path}/seg-{seg_id}/postings"),
-            lambda: _write_termset(spark, f"{path}/seg-{seg_id}", pos),
-            lambda: (
-                _doc_dl(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/seg-{seg_id}/doclen")
-            ),
-            lambda: (
-                # one map-only batch pass (§2.4), independent of the pos cache
-                _doc_dl_stats(docs_batch)
-                .write.mode("overwrite")
-                .parquet(f"{path}/stats/part=ingest-{seg_id}")
-            ),
-            *upsert_sinks,
-        )
-    finally:
-        upsert_cleanup()
 
 
 def query_phrase_segmented(
@@ -1865,7 +1632,7 @@ def query_phrase_segmented(
     """Exact-phrase serve over the segmented positional layout: the
     segmented reader's live positions, the phrase scorer, two-phase
     rank. ``mgen`` pins the serve to a manifest snapshot."""
-    read = _segmented_read(spark, path, (w for _, ws in phrases for w in ws), mgen, _POS)
+    read = _segmented_read(spark, _view(path, mgen), (w for _, ws in phrases for w in ws), _POS)
     if read is None:
         return _empty_ranked(spark, "phrase_id", "n_matches")
     return _rank_phrase_matches(_phrase_match_counts(read[0], phrases), k)
@@ -1926,7 +1693,7 @@ def query_bm25_segmented(
     the segment set, tombstones and stats to a snapshot-complete
     manifest: a time-travel serve."""
     read = _segmented_read(
-        spark, path, (t for _, t in query_terms), mgen, ("doc_id", "term"),
+        spark, _view(path, mgen), (t for _, t in query_terms), ("doc_id", "term"),
         doclen=True, stats=True,
     )
     if read is None:
@@ -1955,7 +1722,7 @@ def query_proximity_segmented(
     rank. Unregistered (s46 pins the scorer, s47 the reader); equality
     with the monolithic serve over the live corpus is tested. ``mgen``
     pins the serve to a manifest snapshot."""
-    read = _segmented_read(spark, path, (t for q in queries for t in q[1:3]), mgen, _POS)
+    read = _segmented_read(spark, _view(path, mgen), (t for q in queries for t in q[1:3]), _POS)
     if read is None:
         return _empty_ranked(spark, "prox_id", "n_matches")
     return _rank_phrase_matches(_proximity_match_counts(read[0], queries), k, "prox_id")

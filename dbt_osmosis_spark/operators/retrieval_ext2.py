@@ -51,6 +51,7 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     _rank_phrase_matches,
     _segmented_read,
     _sloppy_match_counts,
+    _view,
 )
 
 # ---------------------------------------------------------------------------
@@ -141,7 +142,7 @@ def query_sloppy_phrase_segmented(
     scorer, s47 the reader); equality with the monolithic serve over the
     live corpus is tested."""
     read = _segmented_read(
-        spark, path, (w for _, ws, _ in queries for w in ws), mgen, _POS
+        spark, _view(path, mgen), (w for _, ws, _ in queries for w in ws), _POS
     )
     if read is None:
         return _empty_ranked(spark, "sp_id", "n_matches")
@@ -290,7 +291,7 @@ def query_bm25_phrases_segmented(
     snapshot. Unregistered (s51 pins the scorer, s48 the reader);
     equality with the monolithic serve over the live corpus is tested."""
     read = _segmented_read(
-        spark, path, (w for _, ws in phrases for w in ws), mgen, _POS,
+        spark, _view(path, mgen), (w for _, ws in phrases for w in ws), _POS,
         doclen=True, stats=True,
     )
     if read is None:

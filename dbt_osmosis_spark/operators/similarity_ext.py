@@ -56,7 +56,7 @@ from dbt_osmosis_spark.operators.similarity import (
     _SPARK_SIGNWORD,
     adaptive_xbits_agg_sql,
 )
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout, read_parquet, spread
 
 # Queries = the first 8 corpus vectors (vec_id < 8): deterministic, and
 # realistic — production batches re-embed incoming requests, which are
@@ -272,8 +272,6 @@ def query_ivf_index(
 # oracle recomputes the same thing from the base table — the index is a
 # reorganized copy, so results must be identical to computing in-plan.
 
-import os as _os
-
 _S17_NQ = 8
 
 _S17_ORACLE = f"""
@@ -311,9 +309,7 @@ ORDER BY qid, rnk
 
 
 def _s17_index_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".ivf_index", tag)
+    return _scratch_path(".ivf_index", sf_dir, "s17")
 
 
 @register("s17_ivf_index_serve", oracle=_S17_ORACLE)
@@ -514,9 +510,7 @@ def write_lsh_index(emb_raw: DataFrame, path: str) -> None:
 
 
 def _s18_index_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".lsh_index", tag)
+    return _scratch_path(".lsh_index", sf_dir, "s18")
 
 
 def serve_lsh_index(
@@ -709,9 +703,7 @@ def append_ivf_batch(emb: DataFrame, path: str) -> None:
 
 
 def _s20_index_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".ivf_index", tag + "_incr")
+    return _scratch_path(".ivf_index", sf_dir, "s20")
 
 
 @register("s20_ivf_incremental_serve", oracle=_S20_ORACLE)

@@ -41,7 +41,7 @@ from dbt_osmosis_spark.operators.similarity import (
     _SPARK_DOT,
     _SPARK_NORM2,
 )
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout, read_parquet, spread
 
 _N_QUERIES = 8  # vec_id < 8 is the fixed query batch (s04/s15 convention)
 _TAU = 0.3  # radius: sf0.01 yields ~33 pairs, sf0.1 proportionally more
@@ -193,8 +193,6 @@ def s23_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # survivors (excluding first, then ranking, is what makes tombstones
 # semantically equal to a rebuild).
 
-import os as _os
-
 from dbt_osmosis_spark.operators.similarity import _DUCK_CELL, _DUCK_PROBE, _K  # noqa: E402
 from dbt_osmosis_spark.operators.similarity_ext import (  # noqa: E402
     probe_cells,
@@ -240,11 +238,7 @@ ORDER BY qid, rnk
 
 
 def _s24_index_path(sf_dir: str) -> str:
-    repo = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return _os.path.join(repo, ".ivf_index", tag + "_s24")
+    return _scratch_path(".ivf_index", sf_dir, "s24")
 
 
 @register("s24_ivf_serve_with_deletes", oracle=_S24_ORACLE)

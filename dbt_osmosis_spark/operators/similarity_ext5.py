@@ -1,14 +1,12 @@
-"""Maintained vector index (round 12): the ANN analog of the document
-index lifecycle — immutable vector segments partitioned by TRAINED IVF
-cell, generation-scoped tombstones, upsert-at-ingest, and a cell-pruned
-cosine serve. Embedding corpora churn constantly at 100 TB (re-embeds,
-takedowns, model upgrades), so the vector index needs the same
-update/re-add contract the text index got in s49 — and it gets it by
-REUSING that machinery verbatim: ``delete_segmented`` and
-``_upsert_supersede`` only touch the doc-keyed ``doclen`` sidecar,
-the tombstone partitions, and the stats deltas, so they are
-layout-agnostic across postings and vectors (each vector's sidecar row
-is dl = 1).
+"""Maintained vector index: the ANN analog of the document index
+lifecycle — immutable vector segments partitioned by trained IVF cell,
+generation-scoped tombstones, upsert-at-ingest, and a cell-pruned cosine
+serve. It runs on the segmented-index machinery of ``retrieval_ext``:
+one manifest view per operation (``_view``), the shared ingest body,
+segment sinks, tombstone writer and manifest cut. Deletes and upserts
+touch only the doc-keyed ``doclen`` sidecar (dl = 1 per vector), the
+tombstone partitions and the stats deltas, so they are the same code
+for postings and vectors.
 
 Layout: ``seg-<id>/postings`` holds (doc_id, v, label) partitioned by
 ``tbkt`` = the vector's nearest trained centroid (Lloyd over the base
@@ -43,20 +41,15 @@ from dbt_osmosis_spark.operators.retrieval import _BUCKETS
 from dbt_osmosis_spark.operators.sinks import run_sinks
 from dbt_osmosis_spark.operators.retrieval_ext import (
     _apply_scoped_tombstones,
-    _live_segments,
-    _manifest_gen,
-    _publish_manifest,
-    _read_manifest,
-    _read_segments_tagged,
-    _retired_delete_parts,
-    _scoped_tombstones,
-    _scratch_path,
-    _seg_id,
-    _stats_parts,
-    _upsert_supersede_sinks,
-    _write_bucketed,
-    delete_segmented,
+    _cut_manifest,
+    _ingest,
     _live_delete_parts,
+    _read_segments_tagged,
+    _scoped_tombstones,
+    _seg_id,
+    _segment_sinks,
+    _view,
+    delete_segmented,
 )
 from dbt_osmosis_spark.operators.similarity import (
     _DIM,
@@ -66,7 +59,7 @@ from dbt_osmosis_spark.operators.similarity import (
     _SPARK_NORM2,
 )
 from dbt_osmosis_spark.operators.similarity_ext4 import _assign, lloyd_train
-from dbt_osmosis_spark.sources.parquet import read_layout, read_parquet, spread
+from dbt_osmosis_spark.sources.parquet import _scratch_path, read_layout, read_parquet, spread
 
 _S54_K = 10
 _S54_QUERY_IDS = (1, 2, 3)
@@ -91,54 +84,23 @@ def ingest_vector_segment(
     upsert: bool = True,
 ) -> None:
     """One vector batch as an immutable segment: (doc_id, v, label)
-    partitioned by trained-centroid cell (``tbkt``), a doc-keyed doclen
-    sidecar (dl = 1 per vector — the contract the layout-agnostic
-    delete/upsert machinery keys on), and an additive stats delta.
-    Idempotent overwrite per segment id. With ``upsert`` (default),
-    prior versions of the batch's vectors are superseded — re-embedding
-    a document serves the new vector, including after a delete."""
+    partitioned by trained-centroid cell (``tbkt``), a doclen sidecar
+    with dl = 1 per vector (the row the layout-generic delete and upsert
+    key on) and its stats delta. Idempotent overwrite per segment id.
+    With ``upsert`` (default), prior versions of the batch's vectors are
+    superseded: re-embedding a document serves the new vector, also
+    after a delete."""
     assigned = _assign(vecs_batch, cents).withColumn(
         "tbkt", F.col("cell").cast("int")
     )
-    # _write_bucketed (round 13): same partitioned write, plus the
-    # empty-batch hardening — an empty streamed micro-batch must not
-    # leave a schema-less postings dir behind (ADVICE r12 shape).
-    # The three sinks write disjoint directories and are independent
-    # (doclen/stats are column-pruned scans of the batch, never of the
-    # assigned relation), so they are submitted concurrently (guide
-    # §2.6) and the partitioned postings write's straggler tail
-    # back-fills with the doclen/stats tasks. Round 14 (guide §2.6):
-    # the supersede pass's two sinks join the same run_sinks (disjoint
-    # directories, inputs snapshotted before submission) instead of
-    # running serially after the segment sinks.
-    upsert_sinks, upsert_cleanup = (
-        _upsert_supersede_sinks(spark, vecs_batch, path, seg_id)
-        if upsert
-        else ([], lambda: None)
+    _ingest(
+        spark, vecs_batch, path, seg_id, upsert,
+        assigned.select("doc_id", "v", "label", "tbkt"),
+        vecs_batch.select("doc_id").withColumn("dl", F.lit(1).cast("bigint")),
+        vecs_batch.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")).withColumn(
+            "sum_dl", F.col("n_docs")
+        ),
     )
-    try:
-        run_sinks(
-            lambda: _write_bucketed(
-                spark,
-                assigned.select("doc_id", "v", "label", "tbkt"),
-                f"{path}/seg-{seg_id}/postings",
-            ),
-            lambda: (
-                vecs_batch.select("doc_id")
-                .withColumn("dl", F.lit(1).cast("bigint"))
-                .write.mode("overwrite")
-                .parquet(f"{path}/seg-{seg_id}/doclen")
-            ),
-            lambda: (
-                vecs_batch.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-                .withColumn("sum_dl", F.col("n_docs"))
-                .write.mode("overwrite")
-                .parquet(f"{path}/stats/part=ingest-{seg_id}")
-            ),
-            *upsert_sinks,
-        )
-    finally:
-        upsert_cleanup()
 
 
 def query_vectors_segmented(
@@ -155,7 +117,8 @@ def query_vectors_segmented(
     partitions of the live segments, drop tombstoned/superseded
     versions, score JVM-side, two-phase rank. Empty layout serves
     empty. ``mgen`` pins to a manifest snapshot like the text serves."""
-    segs = _live_segments(path, mgen)
+    view = _view(path, mgen)
+    segs = view.segments
     if not segs:
         return spark.createDataFrame([], _S54_EMPTY)
     cent_rows = cents.collect()  # <= 16 rows — the s40 broadcast side
@@ -173,7 +136,7 @@ def query_vectors_segmented(
         F.col("tbkt").isin(sorted({c for _, c in probes}))
     )
     live = _apply_scoped_tombstones(
-        pos, _scoped_tombstones(spark, path, mgen=mgen)
+        pos, _scoped_tombstones(spark, view)
     ).select("doc_id", "v", "label", "tbkt")
     dot = F.expr(_SPARK_DOT.format(a="v", b="qv"))
     n_v = F.expr(_SPARK_NORM2.format(a="v"))
@@ -220,39 +183,29 @@ def index_centroids(
     else the original ``centroids/`` artifact. A pinned read (mgen=G)
     resolves the pointer recorded in THAT manifest, so a time-travel
     serve probes with the centroids its segments were assigned under."""
-    m = _read_manifest(path, mgen)
-    sub = (m or {}).get("centroids") or "centroids"
-    return read_layout(spark, path, sub)
+    return read_layout(spark, path, _view(path, mgen).centroids or "centroids")
 
 
 def retrain_vector_index(
     spark: SparkSession, path: str, rounds: int = 2
 ) -> dict[str, object]:
-    """Retrain centroids on the LIVE vectors and atomically re-partition
-    the index onto the new cells — the answer to centroid drift after
-    heavy upsert churn (and the migration path for an embedding-model
-    upgrade's re-embedded corpus). Mechanics mirror compact_segments:
-    the re-partitioned segment lands under a listing-invisible ``cseg-``
-    name reusing the highest live generation, the new centroid artifact
-    lands under ``centroids-g<G>``, live tombstones retire (every
-    surviving row is live by construction), and ONE atomic manifest
-    pointer rename publishes segment set + centroid pointer together —
-    a serve never sees new cells with old segments or vice versa.
-    Pre-retrain artifacts stay on disk for pinned readers until
-    ``vacuum_segments``. Serve results are IDENTICAL before and after
-    (exact serve scans all cells; probed serves change candidate sets
-    only) — the registered s55 pins that with the s54 oracle."""
-    segs = _live_segments(path)
+    """Retrain centroids on the live vectors and re-partition the index
+    onto the new cells, for centroid drift after upsert churn or an
+    embedding-model upgrade. Like compact_segments: the re-partitioned
+    segment lands under an unlisted ``cseg-`` name with the highest live
+    id, the new centroids under ``centroids-g<G>``, every tombstone
+    retires (all surviving rows are live), and one manifest publishes
+    the segment set and the centroid pointer together, so a serve never
+    pairs new cells with old segments. Pre-retrain artifacts stay for
+    pinned readers until ``vacuum_segments``. An exact serve answers the
+    same before and after."""
+    view = _view(path)
+    segs = view.segments
     if not segs:
         return {"retrained": False}
-    tombs = _scoped_tombstones(spark, path)
-    # Round 13 (guide §5 / §1.2): the LIVE relation — every segment's
-    # postings with the tombstone anti-join applied — feeds the Lloyd
-    # seed pass, every Lloyd round's reassignment, and the re-partition
-    # write: rounds+2 corpus-sized passes that each re-read the segments
-    # and re-run the anti-join in the r12 form. Persist it once for the
-    # span of the retrain (spills to disk at scale) and release it
-    # before returning.
+    tombs = _scoped_tombstones(spark, view)
+    # the live vectors feed the Lloyd seed pass, every Lloyd round and
+    # the re-partition write: persisted once for the retrain
     live = (
         _apply_scoped_tombstones(
             _read_segments_tagged(spark, path, segs, "postings"), tombs
@@ -260,7 +213,7 @@ def retrain_vector_index(
         .select("doc_id", "v", "label")
         .persist()
     )
-    new_mgen = (_manifest_gen(path) or 0) + 1
+    new_mgen = view.gen + 1
     new_seg = f"cseg-{new_mgen}-{max(_seg_id(s) for s in segs)}"
     cents_dir = f"centroids-g{new_mgen}"
     try:
@@ -269,39 +222,19 @@ def retrain_vector_index(
         )
         cents = read_layout(spark, path, cents_dir)
         assigned = _assign(live, cents).withColumn("tbkt", F.col("cell").cast("int"))
-        # two disjoint-directory sinks, submitted concurrently (§2.6);
-        # the doclen merge is doc-sized and back-fills the partitioned
-        # postings write's straggler tail
+        doclen = _apply_scoped_tombstones(
+            _read_segments_tagged(spark, path, segs, "doclen"), tombs
+        ).select("doc_id", "dl")
         run_sinks(
-            lambda: _write_bucketed(
-                spark,
-                assigned.select("doc_id", "v", "label", "tbkt"),
-                f"{path}/{new_seg}/postings",
-            ),
-            lambda: (
-                _apply_scoped_tombstones(
-                    _read_segments_tagged(spark, path, segs, "doclen"), tombs
-                )
-                .select("doc_id", "dl")
-                .write.mode("overwrite")
-                .parquet(f"{path}/{new_seg}/doclen")
-            ),
+            *_segment_sinks(
+                spark, f"{path}/{new_seg}", assigned.select("doc_id", "v", "label", "tbkt"),
+                doclen,
+            )
         )
     finally:
         live.unpersist()
-    manifest = {
-        "gen": new_mgen,
-        "segments": [new_seg],
-        "seg_watermark": max(_seg_id(s) for s in segs),
-        # every tombstone retires: the new segment holds only live rows
-        "retired_deletes": sorted(
-            set(_live_delete_parts(path)) | set(_retired_delete_parts(path))
-        ),
-        "live_deletes": [],
-        "stats_parts": _stats_parts(path),
-        "centroids": cents_dir,
-    }
-    _publish_manifest(path, manifest)
+    retired = sorted(set(_live_delete_parts(view)) | set(view.retired))
+    _cut_manifest(view, [new_seg], retired, [], cents_dir)
     return {"retrained": True, "new_seg": new_seg, "manifest": new_mgen}
 
 
@@ -355,29 +288,22 @@ def _s54_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("s54_maintained_vector_index", oracle=_S54_ORACLE)
-def s54_maintained_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full vector-index lifecycle: train centroids on the base batch
-    (persisted under centroids/ — later ingests and serves read the
-    artifact, the deployment shape), two segment ingests, one tombstone
-    batch (vec_id % 9 == 5), one RE-EMBED upsert (vec_id % 12 == 1:
-    every component shifted +1.0 — re-adds deleted vectors and revises
-    live ones), then an exact all-cells serve for three fixed queries.
-    Must hash-match the DuckDB brute-force oracle over the final state:
-    revised vectors score as revised, re-added ones resurface,
-    still-deleted ones stay gone."""
+def _build_s54_layout(
+    spark: SparkSession, sf_dir: str, op: str = ""
+) -> tuple[str, DataFrame, DataFrame]:
+    """The s54 lifecycle layout: centroids trained on the base batch and
+    persisted under ``centroids/``, two disjoint base ingests (no prior
+    versions, so no upsert pass, run concurrently), one tombstone batch
+    (vec_id % 9 == 5) and one re-embed upsert (vec_id % 12 == 1, every
+    component + 1.0). Returns (path, centroids, the query batch)."""
     import shutil
 
     emb = _s54_emb(spark, sf_dir)
-    path = _s54_layout_path(sf_dir)
+    path = _s54_layout_path(sf_dir, op)
     shutil.rmtree(path, ignore_errors=True)
     base = emb.filter(F.col("doc_id") % 10 < 8)
     lloyd_train(base).write.mode("overwrite").parquet(f"{path}/centroids")
     cents = read_layout(spark, path, "centroids")
-    # guide §2.6: the two base loads are disjoint slices (%10 <8 / >=8)
-    # into disjoint segment dirs — upsert is a provable no-op for them,
-    # so they skip the supersede pass and run concurrently. The RE-EMBED
-    # ingest below is the one that exercises upsert, unchanged.
     run_sinks(
         lambda: ingest_vector_segment(spark, base, path, 0, cents, upsert=False),
         lambda: ingest_vector_segment(
@@ -397,47 +323,25 @@ def s54_maintained_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("doc_id").isin(*_S54_QUERY_IDS)).select(
         F.col("doc_id").alias("query_id"), F.col("v").alias("qv")
     )
+    return path, cents, queries
+
+
+@register("s54_maintained_vector_index", oracle=_S54_ORACLE)
+def s54_maintained_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The s54 layout served exactly (all cells) for three fixed queries.
+    Must hash-match the DuckDB brute-force oracle over the final state:
+    revised vectors score as revised, re-added ones resurface,
+    still-deleted ones stay gone."""
+    path, cents, queries = _build_s54_layout(spark, sf_dir)
     return query_vectors_segmented(spark, path, queries, cents)
 
 
 @register("s55_vector_index_retrain", oracle=_S54_ORACLE)
 def s55_vector_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The s54 lifecycle followed by a centroid RETRAIN on the live
-    vectors (retrain_vector_index: new Lloyd fit, atomic re-partition
-    onto the new cells, manifest-published centroid pointer), then the
-    exact serve with the manifest-resolved centroids — which must
-    hash-match the SAME brute-force oracle as s54: retraining changes
-    the physical cell layout, never a result."""
-    import shutil
-
-    emb = _s54_emb(spark, sf_dir)
-    path = _s54_layout_path(sf_dir, "rt")
-    shutil.rmtree(path, ignore_errors=True)
-    base = emb.filter(F.col("doc_id") % 10 < 8)
-    lloyd_train(base).write.mode("overwrite").parquet(f"{path}/centroids")
-    cents = read_layout(spark, path, "centroids")
-    # guide §2.6: disjoint base slices, disjoint segment dirs — upsert
-    # is a provable no-op for the base loads, ingests run concurrently
-    run_sinks(
-        lambda: ingest_vector_segment(spark, base, path, 0, cents, upsert=False),
-        lambda: ingest_vector_segment(
-            spark, emb.filter(F.col("doc_id") % 10 >= 8), path, 1, cents, upsert=False
-        ),
-    )
-    delete_segmented(
-        spark,
-        path,
-        emb.filter(F.col("doc_id") % _S54_DEL_MOD == _S54_DEL_REM).select("doc_id"),
-        0,
-    )
-    revised = emb.filter(F.col("doc_id") % _S54_REV_MOD == _S54_REV_REM).withColumn(
-        "v", F.expr("transform(v, x -> x + CAST(1.0 AS DOUBLE))")
-    )
-    ingest_vector_segment(spark, revised, path, 2, cents)
-    retrain_vector_index(spark, path)  # new cells, atomic flip
-    queries = emb.filter(F.col("doc_id").isin(*_S54_QUERY_IDS)).select(
-        F.col("doc_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return query_vectors_segmented(
-        spark, path, queries, index_centroids(spark, path)
-    )
+    """The s54 layout, a centroid retrain on the live vectors, then the
+    exact serve with the manifest-resolved centroids. It must match the
+    same oracle as s54: retraining changes the cell layout, never a
+    result."""
+    path, _, queries = _build_s54_layout(spark, sf_dir, "rt")
+    retrain_vector_index(spark, path)
+    return query_vectors_segmented(spark, path, queries, index_centroids(spark, path))

@@ -190,3 +190,34 @@ def _read_parquet_uncached(spark: SparkSession, path: str) -> DataFrame:
         # ns → µs truncation, same as DuckDB's read of TIMESTAMP(NANOS).
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+_SCRATCH_PATHS: set[str] = set()
+
+
+def _scratch_path(root: str, sf_dir: str, op: str = "") -> str:
+    """Per-process scratch directory ``<repo>/<root>/<sf tag>[-op]-<pid>``
+    for a registered op's layout. These ops rebuild their layout on
+    every call, so two processes running them against the same sf_dir
+    would race on rewrite vs read; the pid suffix isolates them, and
+    within one process every reader sees the same path. The directory,
+    and any ``<dir>_<name>`` sidecar a writer puts beside it, is removed
+    when the interpreter exits."""
+    import atexit
+
+    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    if op:
+        tag = f"{tag}-{op}"
+    path = os.path.join(repo, root, f"{tag}-{os.getpid()}")
+    if path not in _SCRATCH_PATHS:
+        _SCRATCH_PATHS.add(path)
+        atexit.register(_remove_scratch, path)
+    return path
+
+
+def _remove_scratch(path: str) -> None:
+    import shutil
+
+    for p in [path, *glob.glob(glob.escape(path) + "_*")]:
+        shutil.rmtree(p, ignore_errors=True)

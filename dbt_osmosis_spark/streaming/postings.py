@@ -1,35 +1,25 @@
 """Continuous postings-index maintenance: the streaming twin of s36/s39.
 
-s36/s39 (operators/retrieval.py, operators/retrieval_ext.py) maintain
-the lexical index as a segmented layout with batch ingests and
-tombstone batches; this module feeds the SAME layout from Structured
-Streaming — ``readStream`` over a document landing directory →
-``foreachBatch`` → one immutable segment per micro-batch
-(``ingest_segment``) — plus a second stream of doc_id tombstones
-(``delete_segmented``). A BM25 serve over the maintained index is
-byte-identical to s31's full-corpus computation (minus the deleted
-docs) at any drain point (twin equivalence tested), and the
-layout-agnostic ``compact_segments`` can run between batches without
-changing any serve result.
+Feeds the segmented bag-of-words layout of s36/s39
+(operators/retrieval_ext.py) from Structured Streaming: ``readStream``
+over a document landing directory → ``foreachBatch`` → one immutable
+segment per micro-batch (``ingest_segment``). Tombstones arrive through
+``streaming.drain.run_segment_deletes``. A BM25 serve over the
+maintained index equals s31 over the live corpus at any drain point,
+and ``compact_segments`` may run between batches without changing an
+answer.
 
-Delivery semantics — exactly-once by idempotent overwrite: each
-micro-batch's segment (postings + doclen + stats delta) is a pure
-function of the batch's documents and lands under ``seg-<batch_id>`` /
-``stats/part=ingest-<batch_id>``, so a crashed-and-replayed
-foreachBatch overwrites byte-equivalent content. Delete batches write
-``deletes/delete=<id>`` + ``stats/part=delete-<id>``; their stats
-delta is computed from current liveness excluding the batch's own
-partition, so a replay re-lands the same delta and deletes subtract
-exactly once. Ingest and delete stats partitions are disjoint by their
-string prefixes. A document REVISION streamed as a new batch supersedes
-its prior version (ingest upserts by default).
+Invariants:
+- exactly once by idempotent overwrite: micro-batch ``b`` lands as
+  ``seg-<b>`` and the ``ingest-<b>`` stats partition, a pure function of
+  the batch, so a replay overwrites the same content;
+- a delete micro-batch ``b`` is delete batch ``b`` (user tombstone
+  namespace [0, 1e6)); its stats delta is read with its own partition
+  left out, so a replay subtracts each doc once;
+- a revised document streamed as a new batch supersedes its prior
+  version (ingest upserts).
 
-At 100 TB: per-batch work is one tokenization of the BATCH (never the
-corpus); the serve reads only the probed term buckets of each live
-segment plus the broadcast tombstone set and the 1-row stats deltas.
-
-Reference parity: the reference has no streaming plane; this extends
-SURVEY §2 S26 with the maintained-index pattern s36/s44 document.
+Per batch the work is one tokenization of the batch, never the corpus.
 """
 
 from __future__ import annotations
@@ -44,7 +34,6 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
 from dbt_osmosis_spark.streaming.drain import drain
 
 _DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-_DELETES_SCHEMA = "doc_id bigint"
 
 
 def write_batch_postings(docs: DataFrame, index_dir: str, batch_id: int) -> None:
@@ -75,23 +64,6 @@ def write_batch_deletes(doc_ids: DataFrame, index_dir: str, batch_id: int) -> No
     delete_segmented(doc_ids.sparkSession, index_dir, doc_ids, batch_id)
 
 
-def run_postings_deletes(
-    incoming_dir: str,
-    index_dir: str,
-    checkpoint: str,
-    spark: SparkSession,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain a tombstone landing directory into the maintained index
-    (availableNow; its own checkpoint — delete stats partitions are
-    prefix-disjoint from ingest ones, so ids never collide)."""
-
-    def _sink(batch_df: DataFrame, bid: int) -> None:
-        write_batch_deletes(batch_df, index_dir, bid)
-
-    drain(spark, incoming_dir, _DELETES_SCHEMA, checkpoint, _sink, max_files_per_trigger)
-
-
 def serve_postings(
     spark: SparkSession, index_dir: str, query_terms: tuple[tuple[str, str], ...]
 ) -> DataFrame:
@@ -106,7 +78,6 @@ def serve_postings(
 serve_postings_live = serve_postings
 
 __all__ = [
-    "run_postings_deletes",
     "run_postings_ingest",
     "serve_postings",
     "serve_postings_live",

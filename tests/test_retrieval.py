@@ -508,28 +508,49 @@ def test_s38_serve_scan_prunes_to_probed_term_buckets(spark, sf_dir):
     assert not serve_scans, serve_scans
 
 
-def test_scratch_layout_removed_at_interpreter_exit():
-    """A layout directory handed out by ``_scratch_path`` is gone once the
-    process that asked for it exits."""
+_SCRATCH_BUILDERS = {
+    "scratch_path": "parquet._scratch_path('.postings_tiered', SF, 'probe')",
+    "s34": "retrieval._s34_index_path(SF)",
+    "s38": "retrieval._s34_index_path(SF, 's38')",
+    "s17": "similarity_ext._s17_index_path(SF)",
+    "s18": "similarity_ext._s18_index_path(SF)",
+    "s20": "similarity_ext._s20_index_path(SF)",
+    "s24": "similarity_ext2._s24_index_path(SF)",
+    "q62": "relational_ext3._q62_layout_path(SF)",
+    "q76": "relational_ext4._q76_layout_path(SF)",
+    "q81": "os.path.dirname(relational_ext4._q81_paths(SF)[0])",
+}
+
+
+@pytest.mark.parametrize("builder", sorted(_SCRATCH_BUILDERS))
+def test_scratch_layout_removed_at_interpreter_exit(builder):
+    """Every registered layout path comes from ``_scratch_path``: it ends
+    in ``-<pid>`` of the process that asked for it, is stable within that
+    process, and is gone once the process exits."""
     import os
     import subprocess
     import sys
     from pathlib import Path
 
+    call = _SCRATCH_BUILDERS[builder]
     code = (
         "import os\n"
-        "from dbt_osmosis_spark.operators.retrieval_ext import _scratch_path\n"
-        "p = _scratch_path('.postings_tiered', 'sf-exit-probe', 'probe')\n"
+        "from dbt_osmosis_spark.sources import parquet\n"
+        "from dbt_osmosis_spark.operators import (\n"
+        "    relational_ext3, relational_ext4, retrieval, similarity_ext, similarity_ext2)\n"
+        "SF = '/data/sf-exit-probe'\n"
+        f"p = {call}\n"
         "os.makedirs(os.path.join(p, 'seg=0'))\n"
         "open(os.path.join(p, 'seg=0', 'part.parquet'), 'w').close()\n"
-        "assert _scratch_path('.postings_tiered', 'sf-exit-probe', 'probe') == p\n"
-        "print(p)\n"
+        f"assert {call} == p\n"
+        "print(os.getpid(), p)\n"
     )
     repo = Path(__file__).resolve().parents[1]
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=300
     )
     assert out.returncode == 0, out.stderr
-    path = out.stdout.strip().splitlines()[-1]
-    assert os.path.basename(path).startswith("sf-exit-probe-probe-")
+    pid, path = out.stdout.strip().splitlines()[-1].split(" ", 1)
+    assert os.path.basename(path).startswith("sf-exit-probe-")
+    assert path.endswith(f"-{pid}")
     assert not os.path.exists(path)

@@ -22,8 +22,8 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     write_positional_index,
 )
 from dbt_osmosis_spark.sources.parquet import read_parquet
+from dbt_osmosis_spark.streaming.drain import run_segment_deletes
 from dbt_osmosis_spark.streaming.positional import (
-    run_positional_deletes,
     run_positional_ingest,
     serve_phrases_live,
 )
@@ -59,7 +59,7 @@ def _drive_lifecycle(spark, sf_dir, tmp_path):
         "d0",
         1_000_100,
     )
-    run_positional_deletes(del_in, index_dir, str(tmp_path / "ckpt_d"), spark)
+    run_segment_deletes(del_in, index_dir, str(tmp_path / "ckpt_d"), spark)
     return docs, index_dir
 
 

@@ -21,8 +21,8 @@ from dbt_osmosis_spark.operators.similarity_ext5 import (
     ingest_vector_segment,
     query_vectors_segmented,
 )
+from dbt_osmosis_spark.streaming.drain import run_segment_deletes
 from dbt_osmosis_spark.streaming.vectors import (
-    run_vector_deletes,
     run_vector_ingest,
     serve_vectors_live,
 )
@@ -67,7 +67,7 @@ def _drive(spark, sf_dir, tmp_path):
         "d0",
         1_000_100,
     )
-    run_vector_deletes(del_in, index_dir, str(tmp_path / "ckpt_d"), spark)
+    run_segment_deletes(del_in, index_dir, str(tmp_path / "ckpt_d"), spark)
     return emb, vec_in, index_dir
 
 

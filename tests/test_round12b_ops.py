@@ -257,12 +257,13 @@ def test_s54_lifecycle_liveness(spark, sf_dir):
         _apply_scoped_tombstones,
         _read_segments_tagged,
         _scoped_tombstones,
+        _view,
     )
 
     path, cents = _s54_layout(spark, sf_dir)
     live = _apply_scoped_tombstones(
         _read_segments_tagged(spark, path, _live_segments(path), "postings"),
-        _scoped_tombstones(spark, path),
+        _scoped_tombstones(spark, _view(path)),
     )
     live_ids = {r.doc_id for r in live.select("doc_id").distinct().collect()}
     emb_ids = {r.doc_id for r in _s54_emb(spark, sf_dir).select("doc_id").collect()}

@@ -25,6 +25,7 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     _live_segments,
     _scoped_tombstones,
     _stats_agg,
+    _view,
     checkpoint_manifest,
     compact_segments,
     delete_segmented,
@@ -210,16 +211,16 @@ def test_checkpoint_on_never_ingested_layout(spark, tmp_path):
 def test_stats_agg_on_pinned_empty_manifest_is_zero_not_null(spark, tmp_path):
     path = str(tmp_path / "r13-stats-empty")
     gen = checkpoint_manifest(path)
-    row = _stats_agg(spark, path, mgen=gen).collect()[0]
+    row = _stats_agg(spark, _view(path, gen)).collect()[0]
     assert row.n_docs == 0 and row.avgdl is None
     # fully-deleted corpus: n_docs nets to 0, avgdl guarded to NULL
     ingest_positional_segment(spark, _docs(spark, [(1, "alpha beta")]), path, 0)
     delete_segmented(spark, path, _ids(spark, [1]), 0)
-    row = _stats_agg(spark, path).collect()[0]
+    row = _stats_agg(spark, _view(path)).collect()[0]
     assert row.n_docs == 0 and row.avgdl is None
 
 
 def test_scoped_tombstones_empty_layout_unhinted_schema(spark, tmp_path):
     path = str(tmp_path / "r13-tombs-empty")
-    t = _scoped_tombstones(spark, path)
+    t = _scoped_tombstones(spark, _view(path))
     assert t.columns == ["doc_id", "gen"] and t.count() == 0

@@ -121,11 +121,11 @@ def test_upsert_supersede_sinks_empty_without_prior_segments(spark, tmp_path):
     """The supersede builder degenerates to (no sinks, no-op cleanup) on
     a fresh layout — the overlapped submission adds no work to a first
     ingest."""
-    from dbt_osmosis_spark.operators.retrieval_ext import _upsert_supersede_sinks
+    from dbt_osmosis_spark.operators.retrieval_ext import _upsert_supersede_sinks, _view
 
     path = str(tmp_path / "r14-supersede-empty")
     sinks, cleanup = _upsert_supersede_sinks(
-        spark, _docs(spark, [(1, "alpha")]), path, 0
+        spark, _docs(spark, [(1, "alpha")]), _view(path), 0
     )
     assert sinks == []
     cleanup()  # must be callable and harmless

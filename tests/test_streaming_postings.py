@@ -136,10 +136,8 @@ def test_streamed_deletes_serve_identically_to_s39(spark, sf_dir, tmp_path):
     ingest micro-batches, then drain the s39 tombstone set (doc_id % 7
     == 3) in 2 delete micro-batches; the live serve must equal the
     registered batch lifecycle s39 row-for-row."""
-    from dbt_osmosis_spark.streaming.postings import (
-        run_postings_deletes,
-        serve_postings_live,
-    )
+    from dbt_osmosis_spark.streaming.drain import run_segment_deletes
+    from dbt_osmosis_spark.streaming.postings import serve_postings_live
 
     incoming = str(tmp_path / "incoming")
     deletes_in = str(tmp_path / "deletes_in")
@@ -147,7 +145,7 @@ def test_streamed_deletes_serve_identically_to_s39(spark, sf_dir, tmp_path):
     _split_corpus(spark, sf_dir, incoming, tmp_path)
     run_postings_ingest(incoming, index_dir, str(tmp_path / "ckpt_i"), spark)
     _stage_delete_files(spark, sf_dir, deletes_in, tmp_path)
-    run_postings_deletes(deletes_in, index_dir, str(tmp_path / "ckpt_d"), spark)
+    run_segment_deletes(deletes_in, index_dir, str(tmp_path / "ckpt_d"), spark)
 
     got = serve_postings_live(spark, index_dir, _QUERY_TERMS).collect()
     want = QUERIES["s39_postings_tombstone_serve"](spark, sf_dir).collect()
