@@ -37,7 +37,8 @@ Segmented-layout invariants:
   writes from that one generation: ``mgen=None`` is the current
   manifest's view, ``mgen=G`` exactly manifest G's segments, tombstone
   partitions and stats partitions, which stay on disk until
-  ``vacuum_segments``;
+  ``vacuum_segments``; a vector serve takes its centroid pointer from
+  the same view;
 - each kind of state has one writer: segments ``_segment_sinks``,
   tombstones with their negative stats delta ``_tombstone_sinks``,
   manifests ``_cut_manifest``.
@@ -1063,20 +1064,22 @@ def _segment_sinks(
 def _tombstone_sinks(
     spark: SparkSession,
     view: _View,
-    part: int,
+    base_id: int,
     ids: DataFrame,
     gen: int,
     prior_dl: DataFrame | None,
     kind: str,
 ) -> list:
-    """The two sink thunks of one tombstone batch: ``ids`` stamped with
-    ``gen`` into deletes/delete=<part>, and the negative (n_docs, sum_dl)
-    delta of the latest live version of each doc in ``prior_dl``
-    (seg_gen-tagged doclen rows; None when no segment exists) into the
-    ``<kind>-<part>`` stats partition. Liveness is read with ``part``
-    itself left out (the replay rule above), so the two sinks are
-    independent and run concurrently. (doc_id, seg_gen) is unique, so
-    ``max_by`` picks one version per doc."""
+    """The two sink thunks of one tombstone batch with logical delete id
+    ``base_id``, written under its physical partition value ``part``:
+    ``ids`` stamped with ``gen`` into deletes/delete=<part>, and the
+    negative (n_docs, sum_dl) delta of the latest live version of each
+    doc in ``prior_dl`` (seg_gen-tagged doclen rows; None when no segment
+    exists) into the ``<kind>-<part>`` stats partition. Liveness is read
+    with ``part`` itself left out (the replay rule above), so the two
+    sinks are independent and run concurrently. (doc_id, seg_gen) is
+    unique, so ``max_by`` picks one version per doc."""
+    part = _delete_partition_value(view, base_id)
     if prior_dl is None:
         latest = spark.createDataFrame([], "doc_id bigint, dl bigint")
     else:
@@ -1122,10 +1125,9 @@ def _upsert_supersede_sinks(
         .join(docs_batch.select("doc_id").distinct(), "doc_id", "left_semi")
         .persist()
     )
-    part = _delete_partition_value(view, _UPSERT_TOMB_NS + seg_id)
     sinks = _tombstone_sinks(
-        spark, view, part, prior_dl.select("doc_id").distinct(), seg_id - 1, prior_dl,
-        "upsert",
+        spark, view, _UPSERT_TOMB_NS + seg_id, prior_dl.select("doc_id").distinct(),
+        seg_id - 1, prior_dl, "upsert",
     )
     return sinks, prior_dl.unpersist
 
@@ -1139,15 +1141,13 @@ def _ingest(
     postings: DataFrame,
     doclen: DataFrame,
     stats: DataFrame,
-    cached: DataFrame | None = None,
 ) -> None:
     """Land one batch as segment ``seg-<seg_id>``: its segment sinks, the
     one-row positive ``stats`` delta in the ``ingest-<seg_id>`` stats
     partition and, with ``upsert``, the supersede sinks, all submitted in
     one run_sinks (they write disjoint directories, and every input is
-    built first). ``cached``, a relation persisted for the ingest, is
-    released after. Idempotent per ``seg_id``: a replay overwrites the
-    same content."""
+    built first). Idempotent per ``seg_id``: a replay overwrites the same
+    content."""
     sup_sinks, sup_cleanup = (
         _upsert_supersede_sinks(spark, docs_batch, _view(path), seg_id)
         if upsert
@@ -1162,8 +1162,6 @@ def _ingest(
             *sup_sinks,
         )
     finally:
-        if cached is not None:
-            cached.unpersist()
         sup_cleanup()
 
 
@@ -1178,13 +1176,16 @@ def ingest_segment(
     docs are superseded, so re-ingesting a revised document serves the
     revision."""
     tf = _doc_tf(docs_batch).persist()
-    _ingest(
-        spark, docs_batch, path, seg_id, upsert,
-        tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT)).select("term", "doc_id", "tf", "dl", "tbkt"),
-        _doc_dl(docs_batch),
-        _doc_dl_stats(docs_batch),
-        cached=tf,
-    )
+    try:
+        _ingest(
+            spark, docs_batch, path, seg_id, upsert,
+            tf.withColumn("tbkt", F.expr(_S34_SPARK_TBKT))
+            .select("term", "doc_id", "tf", "dl", "tbkt"),
+            _doc_dl(docs_batch),
+            _doc_dl_stats(docs_batch),
+        )
+    finally:
+        tf.unpersist()
 
 
 def delete_segmented(
@@ -1214,7 +1215,7 @@ def delete_segmented(
         *_tombstone_sinks(
             spark,
             view,
-            _delete_partition_value(view, delete_id),
+            delete_id,
             ids,
             max((_seg_id(s) for s in view.segments), default=-1),
             mine,

@@ -48,6 +48,7 @@ from dbt_osmosis_spark.operators.retrieval_ext import (
     _scoped_tombstones,
     _seg_id,
     _segment_sinks,
+    _View,
     _view,
     delete_segmented,
 )
@@ -116,9 +117,27 @@ def query_vectors_segmented(
     ``nprobe`` nearest cells (None = all cells, exact), read only those
     partitions of the live segments, drop tombstoned/superseded
     versions, score JVM-side, two-phase rank. Empty layout serves
-    empty. ``mgen`` pins to a manifest snapshot like the text serves."""
-    view = _view(path, mgen)
-    segs = view.segments
+    empty. ``mgen`` pins to a manifest snapshot like the text serves.
+    ``cents`` must be the centroids of the same generation; s55 and
+    ``streaming.vectors.serve_vectors_live`` take both from one view."""
+    return _serve_vectors(spark, _view(path, mgen), queries, k, nprobe, cents)
+
+
+def _serve_vectors(
+    spark: SparkSession,
+    view: _View,
+    queries: DataFrame,
+    k: int = _S54_K,
+    nprobe: int | None = None,
+    cents: DataFrame | None = None,
+) -> DataFrame:
+    """The vector serve over one manifest view. Without ``cents`` it
+    probes with the view's own centroids, so the cells and the segments
+    assigned under them come from one generation even when a retrain
+    publishes mid-serve."""
+    if cents is None:
+        cents = _view_centroids(spark, view)
+    path, segs = view.path, view.segments
     if not segs:
         return spark.createDataFrame([], _S54_EMPTY)
     cent_rows = cents.collect()  # <= 16 rows — the s40 broadcast side
@@ -183,7 +202,11 @@ def index_centroids(
     else the original ``centroids/`` artifact. A pinned read (mgen=G)
     resolves the pointer recorded in THAT manifest, so a time-travel
     serve probes with the centroids its segments were assigned under."""
-    return read_layout(spark, path, _view(path, mgen).centroids or "centroids")
+    return _view_centroids(spark, _view(path, mgen))
+
+
+def _view_centroids(spark: SparkSession, view: _View) -> DataFrame:
+    return read_layout(spark, view.path, view.centroids or "centroids")
 
 
 def retrain_vector_index(
@@ -344,4 +367,4 @@ def s55_vector_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     result."""
     path, _, queries = _build_s54_layout(spark, sf_dir, "rt")
     retrain_vector_index(spark, path)
-    return query_vectors_segmented(spark, path, queries, index_centroids(spark, path))
+    return _serve_vectors(spark, _view(path), queries)

@@ -26,10 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dbt_osmosis_spark.operators.retrieval_ext import _view
 from dbt_osmosis_spark.operators.similarity_ext5 import (
+    _serve_vectors,
     index_centroids,
     ingest_vector_segment,
-    query_vectors_segmented,
 )
 from dbt_osmosis_spark.streaming.drain import drain
 
@@ -65,11 +66,10 @@ def serve_vectors_live(
 ) -> DataFrame:
     """Cosine top-k over the maintained index MINUS its tombstones —
     exactly s54's serve plan (cell-pruned segment-union scan, broadcast
-    tombstone anti-join, JVM-side folds, two-phase rank). Centroids are
-    manifest-resolved, so the serve always probes with the cells the
-    live segments were assigned under."""
-    cents = index_centroids(spark, index_dir)
-    return query_vectors_segmented(spark, index_dir, queries, cents, k, nprobe)
+    tombstone anti-join, JVM-side folds, two-phase rank). Centroids and
+    segments come from one manifest view, so the serve always probes with
+    the cells the live segments were assigned under."""
+    return _serve_vectors(spark, _view(index_dir), queries, k, nprobe)
 
 
 __all__ = [

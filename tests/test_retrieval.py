@@ -508,49 +508,82 @@ def test_s38_serve_scan_prunes_to_probed_term_buckets(spark, sf_dir):
     assert not serve_scans, serve_scans
 
 
+# builder id -> (call, layout root, op tag the path must carry)
 _SCRATCH_BUILDERS = {
-    "scratch_path": "parquet._scratch_path('.postings_tiered', SF, 'probe')",
-    "s34": "retrieval._s34_index_path(SF)",
-    "s38": "retrieval._s34_index_path(SF, 's38')",
-    "s17": "similarity_ext._s17_index_path(SF)",
-    "s18": "similarity_ext._s18_index_path(SF)",
-    "s20": "similarity_ext._s20_index_path(SF)",
-    "s24": "similarity_ext2._s24_index_path(SF)",
-    "q62": "relational_ext3._q62_layout_path(SF)",
-    "q76": "relational_ext4._q76_layout_path(SF)",
-    "q81": "os.path.dirname(relational_ext4._q81_paths(SF)[0])",
+    "scratch_path": (
+        "parquet._scratch_path('.postings_tiered', SF, 'probe')",
+        ".postings_tiered",
+        "probe",
+    ),
+    "s34": ("retrieval._s34_index_path(SF)", ".postings_index", "s34"),
+    "s38": ("retrieval._s34_index_path(SF, 's38')", ".postings_index", "s38"),
+    "s17": ("similarity_ext._s17_index_path(SF)", ".ivf_index", "s17"),
+    "s18": ("similarity_ext._s18_index_path(SF)", ".lsh_index", "s18"),
+    "s20": ("similarity_ext._s20_index_path(SF)", ".ivf_index", "s20"),
+    "s24": ("similarity_ext2._s24_index_path(SF)", ".ivf_index", "s24"),
+    "q62": ("relational_ext3._q62_layout_path(SF)", ".events_by_day", "q62"),
+    "q76": ("relational_ext4._q76_layout_path(SF)", ".events_zorder", "q76"),
+    "q81": (
+        "os.path.dirname(relational_ext4._q81_paths(SF)[0])",
+        ".events_compact",
+        "q81",
+    ),
 }
 
+_SCRATCH_IMPORTS = (
+    "import os\n"
+    "from dbt_osmosis_spark.sources import parquet\n"
+    "from dbt_osmosis_spark.operators import (\n"
+    "    relational_ext3, relational_ext4, retrieval, similarity_ext, similarity_ext2)\n"
+    "SF = '/data/sf-exit-probe'\n"
+)
 
-@pytest.mark.parametrize("builder", sorted(_SCRATCH_BUILDERS))
-def test_scratch_layout_removed_at_interpreter_exit(builder):
-    """Every registered layout path comes from ``_scratch_path``: it ends
-    in ``-<pid>`` of the process that asked for it, is stable within that
-    process, and is gone once the process exits."""
-    import os
+
+def _run_scratch_probe(body: str) -> str:
     import subprocess
     import sys
     from pathlib import Path
 
-    call = _SCRATCH_BUILDERS[builder]
-    code = (
-        "import os\n"
-        "from dbt_osmosis_spark.sources import parquet\n"
-        "from dbt_osmosis_spark.operators import (\n"
-        "    relational_ext3, relational_ext4, retrieval, similarity_ext, similarity_ext2)\n"
-        "SF = '/data/sf-exit-probe'\n"
+    repo = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_IMPORTS + body],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip().splitlines()[-1]
+
+
+@pytest.mark.parametrize("builder", sorted(_SCRATCH_BUILDERS))
+def test_scratch_layout_removed_at_interpreter_exit(builder):
+    """Every registered layout path comes from ``_scratch_path``: it is
+    ``<repo>/<root>/<sf>-<op>-<pid>`` for the op that asked for it and the
+    process that ran it, is stable within that process, and is gone once
+    the process exits."""
+    import os
+    from pathlib import Path
+
+    call, root, tag = _SCRATCH_BUILDERS[builder]
+    pid, path = _run_scratch_probe(
         f"p = {call}\n"
         "os.makedirs(os.path.join(p, 'seg=0'))\n"
         "open(os.path.join(p, 'seg=0', 'part.parquet'), 'w').close()\n"
         f"assert {call} == p\n"
         "print(os.getpid(), p)\n"
-    )
+    ).split(" ", 1)
     repo = Path(__file__).resolve().parents[1]
-    out = subprocess.run(
-        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=300
-    )
-    assert out.returncode == 0, out.stderr
-    pid, path = out.stdout.strip().splitlines()[-1].split(" ", 1)
-    assert os.path.basename(path).startswith("sf-exit-probe-")
-    assert path.endswith(f"-{pid}")
+    assert os.path.basename(path) == f"sf-exit-probe-{tag}-{pid}"
+    assert os.path.dirname(path) == str(repo / root)
     assert not os.path.exists(path)
+
+
+def test_s34_and_s38_layouts_do_not_share_a_path():
+    """s34 and s38 both build under ``.postings_index``; in one process
+    they get distinct directories, so neither overwrites the other's
+    layout while it is read."""
+    s34, s38 = _run_scratch_probe(
+        "print(retrieval._s34_index_path(SF), retrieval._s34_index_path(SF, 's38'))\n"
+    ).split(" ")
+    assert s34 != s38

@@ -120,3 +120,42 @@ def test_each_operation_reads_the_manifest_once(spark, tmp_path, monkeypatch):
     assert opens(delete_segmented, spark, path, _ids(spark, [32]), 1)[0] == 1
     assert opens(compact_segments, spark, path)[0] == 1
     assert opens(checkpoint_manifest, path)[0] == 1
+
+
+def test_live_vector_serve_probes_with_its_own_generations_centroids(
+    spark, sf_dir, monkeypatch
+):
+    """``serve_vectors_live`` takes its centroids and its segments from one
+    manifest read. A retrain published right after that read re-partitions
+    the index onto new cells; a one-cell probe must still answer as the
+    generation it started from."""
+    from dbt_osmosis_spark.operators.similarity_ext5 import (
+        _build_s54_layout,
+        retrain_vector_index,
+    )
+    from dbt_osmosis_spark.streaming.vectors import serve_vectors_live
+
+    path, _, queries = _build_s54_layout(spark, sf_dir, "view")
+    before = serve_vectors_live(spark, path, queries, 10, nprobe=1).collect()
+    assert before
+
+    read_manifest = retrieval_ext._read_manifest
+    state = {"serve_reads": 0, "retraining": False, "retrained": None}
+
+    def retrain_after_first_read(p, mgen=None):
+        m = read_manifest(p, mgen)
+        if not state["retraining"]:  # the retrain's own reads are not counted
+            state["serve_reads"] += 1
+            if state["serve_reads"] == 1:
+                state["retraining"] = True
+                state["retrained"] = retrain_vector_index(spark, path)
+                state["retraining"] = False
+        return m
+
+    monkeypatch.setattr(retrieval_ext, "_read_manifest", retrain_after_first_read)
+    during = serve_vectors_live(spark, path, queries, 10, nprobe=1)
+    monkeypatch.setattr(retrieval_ext, "_read_manifest", read_manifest)
+
+    assert state["retrained"]["retrained"] is True
+    assert state["serve_reads"] == 1
+    assert during.collect() == before
